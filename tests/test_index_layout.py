@@ -1,16 +1,12 @@
 """Index storage layout and scale-behavior checks: bucket-partitioned write/
-read roundtrip, partition pruning on term lookups, salted repartition spread,
-and plan shape (pushed filters, broadcast joins)."""
+read roundtrip, partition pruning on term lookups, carrier equivalence and
+key types, and plan shape (pushed filters, broadcast joins)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from tika_xapian_spark.operators import search as S
-from tika_xapian_spark.operators.index import (
-    InvertedIndex,
-    bucket_col,
-    salted_repartition,
-)
+from tika_xapian_spark.operators.index import InvertedIndex, bucket_col
 
 CORPUS = [(i, f"spark join word{i % 7} merge") for i in range(1, 101)]
 
@@ -49,23 +45,6 @@ def test_term_lookup_prunes_partitions(spark, written_index):
     assert pruned.count() == 100  # every doc contains spark
 
 
-def test_salted_repartition_spreads_hot_key(spark):
-    # one hot host: 90% of rows share the key
-    rows = [(f"hot" if i < 900 else f"cold{i}", i) for i in range(1000)]
-    df = spark.createDataFrame(rows, "host string, i long").repartition(4)
-    out = salted_repartition(df, "host", 16, salt=8)
-    sizes = (
-        out.withColumn("p", F.spark_partition_id())
-        .groupBy("p")
-        .count()
-        .collect()
-    )
-    biggest = max(r["count"] for r in sizes)
-    # unsalted, the hot key would put >=900 rows in one partition
-    assert biggest < 500
-    assert out.count() == 1000
-
-
 def test_query_plan_uses_broadcast_and_topk(spark, written_index):
     _, idx = written_index
     df = S.top_k(S.score_terms(idx, ["Zspark", "Zmerg"]))
@@ -77,45 +56,38 @@ def test_query_plan_uses_broadcast_and_topk(spark, written_index):
 
 
 def test_fused_carrier_equals_two_stage_pipeline(spark):
-    from pyspark.sql import functions as F
-
+    """extract_index_carrier (extraction fused with tokenization) builds the
+    same index as build_from_extracted over extract_pages' columns."""
     from tika_xapian_spark.operators.extract import extract_pages
-    from tika_xapian_spark.operators.index import (
-        _doc_postings_df,
-        explode_doc_postings,
-        explode_fused_carrier,
-        extract_index_carrier,
-        make_doc_postings_udf,
-    )
+    from tika_xapian_spark.operators.index import extract_index_carrier
     from tika_xapian_spark.sources.pages import synth_pages
+
+    def rows(idx):
+        postings = {
+            (r["doc"], r["term"], r["wdf"], tuple(r["positions"] or []), r["doclen"])
+            for r in idx.postings.collect()
+        }
+        return postings, sorted(tuple(r) for r in idx.doc_stats.collect())
 
     pages = synth_pages(spark, 400)
     carrier = extract_index_carrier(pages)
-    fused = {
-        (r["doc"], r["term"], r["wdf"], tuple(r["positions"] or []))
-        for r in explode_fused_carrier(carrier).collect()
-    }
     docs = extract_pages(pages)
-    ok = docs.filter(F.col("status") == "ok")
-    udf = make_doc_postings_udf(stem=True)
-    two_stage = explode_doc_postings(
-        _doc_postings_df(
-            ok,
-            "url",
-            udf(
-                F.col("author"), F.col("date"), F.col("filename"),
-                F.col("full_path"), F.col("title"), F.col("subtitle"),
-                F.col("tags"), F.col("body"),
-            ),
+    fused = InvertedIndex.from_fused_carrier(carrier)
+    two_stage = InvertedIndex.build_from_extracted(docs, key="url")
+    try:
+        assert rows(fused) == rows(two_stage)
+        assert (fused.n_docs, fused.avg_len) == (two_stage.n_docs, two_stage.avg_len)
+        # the quarantine channel survives fusion
+        assert (
+            carrier.filter("status <> 'ok'").count()
+            == docs.filter("status <> 'ok'").count()
         )
-    )
-    two = {
-        (r["doc"], r["term"], r["wdf"], tuple(r["positions"] or []))
-        for r in two_stage.collect()
-    }
-    assert fused == two
-    # the quarantine channel survives fusion
-    assert (
-        carrier.filter("status <> 'ok'").count()
-        == docs.filter("status <> 'ok'").count()
-    )
+    finally:
+        fused.unpersist()
+        two_stage.unpersist()
+
+
+def test_build_from_body_keeps_long_doc_key(written_index):
+    _, idx = written_index
+    assert idx.postings.schema["doc"].dataType.typeName() == "long"
+    assert idx.doc_stats.schema["doc"].dataType.typeName() == "long"

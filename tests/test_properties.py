@@ -92,21 +92,22 @@ def test_index_text_positions_monotonic(text):
 def test_fused_doc_postings_equals_index_document(fields):
     from tika_xapian_spark.operators.index import _doc_postings
 
-    fused = _doc_postings(fields, stem=True)
     toks = T.index_document(fields)
-    agg = {}
-    for t in toks:
-        e = agg.setdefault(t.term, [0, []])
-        e[0] += 1
-        if t.pos is not None:
-            e[1].append(t.pos)
-    terms = sorted(agg)
-    assert fused == {
-        "terms": terms,
-        "wdfs": [agg[t][0] for t in terms],
-        "positions": [agg[t][1] for t in terms],
-        "doclen": len(toks),
-    }
+    # stem=False (STEM_NONE) is the stemmed output minus the Z-stems
+    for stem, kept in ((True, toks), (False, [t for t in toks if t.term[0] != "Z"])):
+        agg = {}
+        for t in kept:
+            e = agg.setdefault(t.term, [0, []])
+            e[0] += 1
+            if t.pos is not None:
+                e[1].append(t.pos)
+        terms = sorted(agg)
+        assert _doc_postings(fields, stem=stem) == {
+            "terms": terms,
+            "wdfs": [agg[t][0] for t in terms],
+            "positions": [agg[t][1] for t in terms],
+            "doclen": len(kept),
+        }
 
 
 class TestChunkedScanProperty:

@@ -259,6 +259,14 @@ class TestEndToEnd:
         got = self.docs_of(search(sindex, "merge NEAR fast", partial=False))
         assert got == {4}
 
+    def test_incomplete_positional_operator_matches_nothing(self, sindex):
+        """A keystroke that ends on NEAR/ADJ/PHRASE leaves an Empty operand;
+        like Xapian's AND-like operators over MatchNothing, the query
+        matches nothing instead of raising."""
+        for q in ("merge NEAR", "merge ADJ", "merge PHRASE", "NEAR merge"):
+            for partial in (True, False):
+                assert self.docs_of(search(sindex, q, partial=partial)) == set()
+
     def test_wildcard_max_mode(self, sindex):
         """Opt-in OP_MAX wildcard combiner (modern Xapian's default):
         expansions score as best-single-term, vs the reference parser's

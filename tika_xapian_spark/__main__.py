@@ -29,10 +29,9 @@ def main(argv: list[str] | None = None) -> int:
     pi.add_argument("--master", default=None)
 
     pc = sub.add_parser(
-        "compact", help="fold streaming batch=<id> postings into bucketed layout"
+        "compact", help="fold committed streaming batch=<id> postings into one"
     )
     pc.add_argument("--out", required=True, help="stream_index output dir")
-    pc.add_argument("--buckets", type=int, default=None)
     pc.add_argument("--master", default=None)
 
     pd = sub.add_parser(
@@ -102,7 +101,7 @@ def main(argv: list[str] | None = None) -> int:
         elif args.cmd == "compact":
             from .streaming.resume import compact_stream_postings
 
-            print(json.dumps(compact_stream_postings(spark, args.out, args.buckets)))
+            print(json.dumps(compact_stream_postings(spark, args.out)))
         elif args.cmd == "explain":
             import __spark_entry__ as entrymod
 

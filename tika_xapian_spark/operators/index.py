@@ -3,18 +3,25 @@
 Replaces the reference's local Xapian database (/root/reference/src/main.rs:114-143)
 with columnar posting-list DataFrames/tables:
 
-  postings(doc, term, wdf, positions)   — K11 wdf; positions of unstemmed terms
+  postings(doc, term, wdf, positions, doclen)
+                                        — K11 wdf; positions of unstemmed
+                                          terms; doclen denormalized per row
   doc_stats(doc, doclen)                — doclen = sum of wdf over ALL terms of
                                           the doc (incl. Z-stems), Xapian's
                                           document-length definition
   term_stats(term, df, cf, max_wdf)     — collection frequencies for BM25 R1
                                           and the WAND-style max-score bound
 
-Scale design (100 TB / 10^12 rows):
-  - term generation is one Arrow pandas UDF returning array<struct<term,pos>>
-    + JVM-side explode — no per-row Python, no driver involvement;
-  - the single wide shuffle is groupBy(doc, term); doc-skew (hot hosts) is
-    handled by AQE skew splitting plus an optional salt on the doc key;
+One postings pipeline, the reference's one TermGenerator loop per note:
+  - every build runs one ``mapInPandas`` pass that emits the flat per-doc
+    carrier (doc, status, error, terms, wdfs, positions, doclen): from raw
+    pages (extract_index_carrier — extraction and tokenization fused in one
+    Python worker) or from already-extracted field columns
+    (build_from_extracted; build_from_body is its one-field case);
+  - a document's tokens are colocated in its row, so (term -> wdf,
+    positions) and doclen are aggregated there by _doc_postings — the one
+    per-token loop — and postings/doc_stats are shuffle-free projections of
+    the carrier (explode_fused_carrier); only term_stats aggregates;
   - ``term_bucket``/``doc_bucket`` columns (hash-bucketing) are written as
     partition columns so `term = X` probes prune to 1/B of files — the
     DataFrame equivalent of Iceberg's `bucket(B, term)` partition transform
@@ -28,9 +35,9 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
+    DataType,
     IntegerType,
     StringType,
     StructField,
@@ -38,42 +45,21 @@ from pyspark.sql.types import (
 )
 
 from ..functions import tokenizer as tok
-
-# Per-document PRE-AGGREGATED postings: a document's tokens are already
-# colocated inside the UDF batch, so (term -> wdf, positions) is computed
-# there and the expensive groupBy(doc, term) shuffle + collect_list
-# disappears entirely. doclen comes out as a scalar the same way. The only
-# shuffle left in index construction is the light term_stats aggregation.
-# This is the map-side-combine design that survives 10^12 rows: posting
-# construction is embarrassingly parallel per document.
-DOC_POSTINGS_SCHEMA = StructType(
-    [
-        StructField("terms", ArrayType(StringType())),
-        StructField("wdfs", ArrayType(IntegerType())),
-        StructField("positions", ArrayType(ArrayType(IntegerType()))),
-        StructField("doclen", IntegerType()),
-    ]
-)
+from .extract import parse_page
 
 N_BUCKETS = 64  # bucket count for term/doc hash partitioning
 
-# Reference field order — /root/reference/src/main.rs:123-133
-DOC_FIELD_PREFIXES = [
-    ("A", "author"),
-    ("D", "date"),
-    ("F", "filename"),
-    ("F", "full_path"),
-    ("S", "title"),
-    ("XS", "subtitle"),
-    # K per tag, then unprefixed body — handled specially below
-]
+# The extracted-document columns assemble_fields consumes, in its argument
+# order (extract_pages / parse_page names).
+FIELD_COLS = (
+    "author", "date", "filename", "full_path", "title", "subtitle", "tags", "body",
+)
 
 
 def assemble_fields(author, date, filename, full_path, title, subtitle, tags, body):
     """The (prefix, text) field list in reference order — K per tag, then
     the unprefixed body, sharing one position counter (K8). Single source of
-    truth for the two-stage UDF and the fused carrier: editing field order
-    or adding a field here keeps both pipelines in lockstep."""
+    truth for field order: every carrier row is built from this list."""
     fields = [
         ("A", author or ""),
         ("D", date or ""),
@@ -82,7 +68,7 @@ def assemble_fields(author, date, filename, full_path, title, subtitle, tags, bo
         ("S", title or ""),
         ("XS", subtitle or ""),
     ]
-    if tags is not None:  # arrives as list OR numpy array (pandas UDF)
+    if tags is not None:  # arrives as list OR numpy array (Arrow batch)
         for one_tag in tags:
             fields.append(("K", one_tag or ""))
     fields.append(("", body or ""))
@@ -97,26 +83,10 @@ def _doc_postings(fields: list[tuple[str, str]], stem: bool) -> dict:
     term/wdf/position/doclen set without materializing the intermediate
     Token list (this loop dominates the index-build pipeline; equivalence to
     index_document is property-tested in tests/test_properties.py). ASCII
-    fast paths replace the per-token utf-8 encode and unicodedata lookups."""
-    if not stem:
-        toks = _index_document_nostem(fields)
-        agg: dict[str, list] = {}
-        for t in toks:
-            e = agg.get(t.term)
-            if e is None:
-                agg[t.term] = e = [0, []]
-            e[0] += 1
-            if t.pos is not None:
-                e[1].append(t.pos)
-        terms = sorted(agg)
-        return {
-            "terms": terms,
-            "wdfs": [agg[t][0] for t in terms],
-            "positions": [agg[t][1] for t in terms],
-            "doclen": len(toks),
-        }
-
-    agg = {}
+    fast paths replace the per-token utf-8 encode and unicodedata lookups.
+    ``stem=False`` is TermGenerator's STEM_NONE strategy
+    (termgenerator_internal.cc:269-282): positional terms only, no Z-stems."""
+    agg: dict[str, list] = {}
     pos = 0
     n_toks = 0
     stem_cached = tok._stem_cached
@@ -140,6 +110,8 @@ def _doc_postings(fields: list[tuple[str, str]], stem: bool) -> dict:
             else:
                 e[0] += 1
                 e[1].append(pos)
+            if not stem:
+                continue
             # K9 should_stem: first codepoint Ll/Lt/Lm/Lo — ASCII fast path
             c0 = term[0]
             if "a" <= c0 <= "z":
@@ -166,170 +138,75 @@ def _doc_postings(fields: list[tuple[str, str]], stem: bool) -> dict:
     }
 
 
-def _index_document_nostem(fields: list[tuple[str, str]]) -> list[tok.Token]:
-    """STEM_NONE profile: positional terms only, no Z-stems
-    (TermGenerator strategy STEM_NONE — termgenerator_internal.cc:269-282)."""
-    out: list[tok.Token] = []
-    pos = 0
-    for prefix, text in fields:
-        if not text:
-            continue
-        for term in tok.scan_terms(text):
-            if len(term.encode("utf-8")) > tok.MAX_TERM_BYTES:
-                continue
-            pos += 1
-            out.append(tok.Token(prefix + term, pos, False))
-    return out
+def _carrier_schema(doc_type: DataType) -> StructType:
+    """The per-doc postings carrier: doc key, error channel, and the
+    aggregated postings as flat parallel-array columns (no nested struct —
+    cheaper Arrow transfer). ``doc`` keeps the input key's type."""
+    return StructType(
+        [
+            StructField("doc", doc_type),
+            StructField("status", StringType()),
+            StructField("error", StringType()),
+            StructField("terms", ArrayType(StringType())),
+            StructField("wdfs", ArrayType(IntegerType())),
+            StructField("positions", ArrayType(ArrayType(IntegerType()))),
+            StructField("doclen", IntegerType()),
+        ]
+    )
 
 
-def make_body_postings_udf(stem: bool = True):
-    """Per-doc aggregated postings over a single body column."""
-
-    @pandas_udf(DOC_POSTINGS_SCHEMA)
-    def _udf(body: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame([_doc_postings([("", b or "")], stem) for b in body])
-
-    return _udf
+_CARRIER_COLS = [f.name for f in _carrier_schema(StringType()).fields]
 
 
-def make_doc_postings_udf(stem: bool = True):
-    """Per-doc aggregated postings over the full extracted-document fields
-    (reference field order, shared positions — K8)."""
-
-    @pandas_udf(DOC_POSTINGS_SCHEMA)
-    def _udf(
-        author: pd.Series,
-        date: pd.Series,
-        filename: pd.Series,
-        full_path: pd.Series,
-        title: pd.Series,
-        subtitle: pd.Series,
-        tags: pd.Series,
-        body: pd.Series,
-    ) -> pd.DataFrame:
-        out = []
-        for a, d, fn, fp, ti, su, tg, bo in zip(
-            author, date, filename, full_path, title, subtitle, tags, body
-        ):
-            fields = assemble_fields(a, d, fn, fp, ti, su, tg, bo)
-            out.append(_doc_postings(fields, stem))
-        return pd.DataFrame(out)
-
-    return _udf
+def _ok_row(doc, fields, stem: bool) -> tuple:
+    """One carrier row from a document's FIELD_COLS values."""
+    p = _doc_postings(assemble_fields(*fields), stem)
+    return (doc, "ok", None, p["terms"], p["wdfs"], p["positions"], p["doclen"])
 
 
-def _doc_postings_df(docs: DataFrame, key: str, udf_col: Column) -> DataFrame:
-    """(doc, p:struct<terms,wdfs,positions,doclen>) carrier frame."""
-    return docs.select(F.col(key).alias("doc"), udf_col.alias("p"))
+def _map_carrier(df: DataFrame, doc_type: DataType, row_of) -> DataFrame:
+    """mapInPandas ``row_of(*row)`` over every row of ``df`` (whose columns
+    are exactly row_of's arguments) into the carrier schema."""
+
+    def run(batches):
+        for pdf in batches:
+            rows = [row_of(*r) for r in zip(*(pdf[c] for c in pdf.columns))]
+            yield pd.DataFrame(rows, columns=_CARRIER_COLS)
+
+    return df.mapInPandas(run, _carrier_schema(doc_type))
 
 
-def explode_doc_postings(carrier: DataFrame) -> DataFrame:
-    """carrier -> postings(doc, term, wdf, positions, doclen), no shuffle.
+def extract_index_carrier(pages: DataFrame, stem: bool = True) -> DataFrame:
+    """ONE mapInPandas pass from raw pages to the per-doc postings carrier.
+
+    Extraction and tokenization run in the same Python worker: the html
+    payload and the extracted body never cross back to the JVM; only url +
+    status/error + the aggregated postings arrays (what the index actually
+    needs) are serialized out. Extraction semantics are exactly
+    parse_page's; postings exactly build_from_extracted's over
+    extract_pages (pinned in tests).
+
+    Error rows keep the quarantine channel (status/error with null postings)
+    so lineage counts ride the same pass via df.observe."""
+
+    def row_of(url, html):
+        d = parse_page(url, html)
+        if d["status"] != "ok":
+            return (url, d["status"], d["error"], None, None, None, None)
+        return _ok_row(url, [d[c] for c in FIELD_COLS], stem)
+
+    return _map_carrier(pages.select("url", "html"), StringType(), row_of)
+
+
+def explode_fused_carrier(carrier: DataFrame) -> DataFrame:
+    """carrier -> postings(doc, term, wdf, positions, doclen), ok rows only,
+    no shuffle.
 
     doclen rides every posting row — the same denormalization Xapian's
     postlist entries use (each chert/glass entry stores wdf AND doclen), so
     BM25 scoring is a pure map over the postings scan with NO doc_stats
     join: at 10^12 docs that join would shuffle the full doc-stats side per
     query. Storage cost is one RLE-friendly int per posting."""
-    return (
-        carrier.select(
-            "doc",
-            F.col("p.doclen").cast("long").alias("doclen"),
-            F.explode(F.arrays_zip("p.terms", "p.wdfs", "p.positions")).alias("e"),
-        )
-        .select(
-            "doc",
-            F.col("e.terms").alias("term"),
-            F.col("e.wdfs").alias("wdf"),
-            F.col("e.positions").alias("positions"),
-            "doclen",
-        )
-    )
-
-
-def doc_stats_from_carrier(carrier: DataFrame) -> DataFrame:
-    """doclen without any shuffle — it was computed inside the UDF."""
-    return carrier.select("doc", F.col("p.doclen").cast("long").alias("doclen"))
-
-
-# Fused extract+tokenize carrier: url, error channel, and the per-doc
-# aggregated postings as flat parallel-array columns (no nested struct —
-# cheaper Arrow transfer).
-FUSED_CARRIER_SCHEMA = StructType(
-    [
-        StructField("doc", StringType()),
-        StructField("status", StringType()),
-        StructField("error", StringType()),
-        StructField("terms", ArrayType(StringType())),
-        StructField("wdfs", ArrayType(IntegerType())),
-        StructField("positions", ArrayType(ArrayType(IntegerType()))),
-        StructField("doclen", IntegerType()),
-    ]
-)
-
-
-def extract_index_carrier(pages: DataFrame, stem: bool = True) -> DataFrame:
-    """ONE mapInPandas pass from raw pages to the per-doc postings carrier.
-
-    The two-stage pipeline (extract_pages mapInPandas, then the postings
-    pandas UDF) pays a full extra Arrow round trip: every extracted field is
-    serialized back to the JVM only to be shipped straight into the next
-    Python stage, and the body text crosses the boundary twice for nothing.
-    Fusing both stages keeps the html payload and the extracted body inside
-    one Python worker; only url + status/error + the aggregated postings
-    arrays (what the index actually needs) are serialized out. Extraction
-    semantics are exactly parse_page's; postings exactly _doc_postings' —
-    equivalence to the two-stage path is pinned in tests.
-
-    Error rows keep the quarantine channel (status/error with null postings)
-    so lineage counts ride the same pass via df.observe."""
-    cols = [f.name for f in FUSED_CARRIER_SCHEMA.fields]
-
-    def run(batches):
-        from .extract import parse_page
-
-        for pdf in batches:
-            rows = []
-            for u, h in zip(pdf["url"], pdf["html"]):
-                d = parse_page(u, h)
-                if d["status"] != "ok":
-                    rows.append(
-                        {
-                            "doc": u,
-                            "status": d["status"],
-                            "error": d["error"],
-                            "terms": None,
-                            "wdfs": None,
-                            "positions": None,
-                            "doclen": None,
-                        }
-                    )
-                    continue
-                fields = assemble_fields(
-                    d["author"], d["date"], d["filename"], d["full_path"],
-                    d["title"], d["subtitle"], d["tags"], d["body"],
-                )
-                p = _doc_postings(fields, stem)
-                rows.append(
-                    {
-                        "doc": u,
-                        "status": "ok",
-                        "error": None,
-                        "terms": p["terms"],
-                        "wdfs": p["wdfs"],
-                        "positions": p["positions"],
-                        "doclen": p["doclen"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.mapInPandas(run, FUSED_CARRIER_SCHEMA)
-
-
-def explode_fused_carrier(carrier: DataFrame) -> DataFrame:
-    """fused carrier -> postings(doc, term, wdf, positions, doclen), ok rows
-    only, no shuffle. doclen denormalized per posting — see
-    explode_doc_postings."""
     return (
         carrier.filter(F.col("status") == "ok")
         .select(
@@ -352,31 +229,9 @@ def bucket_col(col: str | Column, n: int = N_BUCKETS) -> Column:
     return F.pmod(F.xxhash64(c), F.lit(n)).cast("int")
 
 
-def salted_repartition(
-    df: DataFrame, key: str, n_partitions: int, salt: int = 8
-) -> DataFrame:
-    """Skew-safe repartition: hot key values (e.g. one host dominating a
-    Common-Crawl slice — the Zipf hosts of the fixtures) are spread over
-    ``salt`` partitions instead of landing on one. The salt column is
-    derived deterministically from the row's own key hash + a rotation, so
-    no RNG state is involved, and it is dropped after the exchange.
-
-    Use before the extraction/tokenization map stages when the source layout
-    clusters by host; AQE's skew-join splitting covers the join side, this
-    covers the map side."""
-    salted = df.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(F.col(key), F.spark_partition_id()), F.lit(salt)).cast("int"),
-    )
-    return salted.repartition(n_partitions, F.col(key), F.col("_salt")).drop("_salt")
-
-
 def build_doc_stats(postings: DataFrame) -> DataFrame:
-    if "doclen" in postings.columns:  # denormalized layout: no re-summing
-        return postings.groupBy("doc").agg(
-            F.max("doclen").cast("long").alias("doclen")
-        )
-    return postings.groupBy("doc").agg(F.sum("wdf").cast("long").alias("doclen"))
+    """doc_stats from a postings table: doclen rides every posting row."""
+    return postings.groupBy("doc").agg(F.max("doclen").cast("long").alias("doclen"))
 
 
 def build_term_stats(postings: DataFrame) -> DataFrame:
@@ -444,45 +299,19 @@ class InvertedIndex:
         return self.vocab_frag
 
     @classmethod
-    def from_carrier(cls, carrier: DataFrame, persist: bool = True) -> "InvertedIndex":
-        """Shuffle-free build from the per-doc aggregated postings carrier:
-        postings and doc_stats are pure map-side projections; only term_stats
-        aggregates (one light shuffle)."""
-        if persist:
-            carrier = carrier.persist()
-        postings = explode_doc_postings(carrier)
-        doc_stats = doc_stats_from_carrier(carrier)
-        term_stats = build_term_stats(postings)
-        if persist:
-            term_stats = term_stats.persist()
-        row = doc_stats.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("doclen").alias("avg")
-        ).collect()[0]
-        return cls(
-            postings=postings,
-            doc_stats=doc_stats,
-            term_stats=term_stats,
-            n_docs=int(row["n"] or 0),
-            avg_len=float(row["avg"] or 0.0),
-        )
-
-    @classmethod
-    def from_fused_carrier(cls, carrier: DataFrame, persist: bool = True) -> "InvertedIndex":
-        """Index from the fused extract+tokenize carrier
-        (extract_index_carrier): quarantine rows drop here; postings and
-        doc_stats are pure map-side projections. With ``persist`` the
-        carrier is cached before the stats action, so the extraction UDF
-        executes exactly ONCE even though three tables reference the
-        carrier — the same single-execution discipline as
+    def from_fused_carrier(cls, carrier: DataFrame) -> "InvertedIndex":
+        """Index from a postings carrier (extract_index_carrier or
+        build_from_extracted): quarantine rows drop here; postings and
+        doc_stats are pure map-side projections; only term_stats aggregates
+        (one light shuffle). The carrier is cached before the stats action,
+        so the carrier UDF executes exactly ONCE even though three tables
+        reference it — the same single-execution discipline as
         streaming/resume.py (pinned in test_plan_shapes)."""
-        if persist:
-            carrier = carrier.persist()
+        carrier = carrier.persist()
         ok = carrier.filter(F.col("status") == "ok")
         postings = explode_fused_carrier(carrier)
         doc_stats = ok.select("doc", F.col("doclen").cast("long").alias("doclen"))
-        term_stats = build_term_stats(postings)
-        if persist:
-            term_stats = term_stats.persist()
+        term_stats = build_term_stats(postings).persist()
         row = doc_stats.agg(
             F.count(F.lit(1)).alias("n"), F.avg("doclen").alias("avg")
         ).collect()[0]
@@ -496,33 +325,39 @@ class InvertedIndex:
 
     @classmethod
     def build_from_body(
-        cls, docs: DataFrame, key: str, body_col: str = "text", stem: bool = True,
-        persist: bool = True,
+        cls, docs: DataFrame, key: str, stem: bool = True
     ) -> "InvertedIndex":
-        udf = make_body_postings_udf(stem)
-        carrier = _doc_postings_df(docs, key, udf(F.col(body_col)))
-        return cls.from_carrier(carrier, persist)
+        """Index a ``text`` column as the unprefixed body of a one-field
+        document: with every other field empty, assemble_fields yields
+        exactly the body-only postings."""
+        one_field = docs.select(
+            key,
+            *[
+                F.lit(None).cast("string").alias(c)
+                for c in FIELD_COLS
+                if c not in ("tags", "body")
+            ],
+            F.lit(None).cast("array<string>").alias("tags"),
+            F.col("text").alias("body"),
+            F.lit("ok").alias("status"),
+        )
+        return cls.build_from_extracted(one_field, key=key, stem=stem)
 
     @classmethod
     def build_from_extracted(
-        cls, docs: DataFrame, key: str = "url", stem: bool = True, persist: bool = True
+        cls, docs: DataFrame, key: str = "url", stem: bool = True
     ) -> "InvertedIndex":
-        udf = make_doc_postings_udf(stem)
-        carrier = _doc_postings_df(
-            docs.filter(F.col("status") == "ok"),
-            key,
-            udf(
-                F.col("author"),
-                F.col("date"),
-                F.col("filename"),
-                F.col("full_path"),
-                F.col("title"),
-                F.col("subtitle"),
-                F.col("tags"),
-                F.col("body"),
-            ),
+        """Index already-extracted documents (extract_pages' columns): the
+        same per-row carrier pass as extract_index_carrier, minus parsing.
+        Only the key and FIELD_COLS cross Arrow; ``doc`` keeps the key's
+        type."""
+        fields = docs.filter(F.col("status") == "ok").select(key, *FIELD_COLS)
+        carrier = _map_carrier(
+            fields,
+            docs.schema[key].dataType,
+            lambda doc, *vals: _ok_row(doc, vals, stem),
         )
-        return cls.from_carrier(carrier, persist)
+        return cls.from_fused_carrier(carrier)
 
     def unpersist(self) -> None:
         for df in (self.postings, self.doc_stats, self.term_stats, self.vocab_frag):

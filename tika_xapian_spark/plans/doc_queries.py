@@ -20,21 +20,19 @@ from ..operators.index import InvertedIndex
 from ..sources.scan import read_spread
 from . import oracles
 
-_INDEX_CACHE: dict[tuple[str, bool], InvertedIndex] = {}
+_INDEX_CACHE: dict[tuple[str, str], InvertedIndex] = {}
 
 K = 100
 
 
-def get_index(spark: SparkSession, sf_dir: str, stem: bool = True) -> InvertedIndex:
-    key = (sf_dir, stem)
+def get_index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
+    key = (sf_dir, "body")
     if key not in _INDEX_CACHE:
         # read_spread: the persisted postings carrier inherits the scan's
         # partitioning, and a single-row-group file pins it (and with it the
         # postings scan of EVERY search query) at 1 partition (sources/scan.py)
         docs = read_spread(spark, f"{sf_dir}/documents.parquet", "doc_id")
-        _INDEX_CACHE[key] = InvertedIndex.build_from_body(
-            docs, key="doc_id", body_col="text", stem=stem
-        )
+        _INDEX_CACHE[key] = InvertedIndex.build_from_body(docs, key="doc_id")
     return _INDEX_CACHE[key]
 
 

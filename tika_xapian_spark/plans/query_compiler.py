@@ -871,6 +871,13 @@ class Executor:
                 "AND_MAYBE": S.op_and_maybe,
                 "FILTER": S.op_filter,
             }[node.op](l, r)
+        if isinstance(node, (NearOp, AdjOp, PhraseOp)) and (
+            isinstance(node.left, Empty) or isinstance(node.right, Empty)
+        ):
+            # an incomplete keystroke ("article NEAR"): like Xapian's
+            # AND-like operators over a MatchNothing subquery, it matches
+            # nothing (XC api/queryinternal.cc empty-query elision)
+            return S._empty_matches(idx)
         if isinstance(node, NearOp):
             terms = _collect_terms(node.left) + _collect_terms(node.right)
             window = node.window

@@ -36,30 +36,11 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import extract_pages
 from ..operators.index import (
-    _doc_postings_df,
     bucket_col,
-    explode_doc_postings,
     explode_fused_carrier,
     extract_index_carrier,
-    make_doc_postings_udf,
 )
-
-DOC_FIELD_ARGS = (
-    "author", "date", "filename", "full_path", "title", "subtitle", "tags", "body",
-)
-
-
-def _postings_of(docs: DataFrame) -> DataFrame:
-    """Postings from an already-extracted docs frame (upsert/stream paths
-    that need the extracted fields elsewhere use this; the pure indexing
-    path uses the fused extract_index_carrier instead)."""
-    udf = make_doc_postings_udf(stem=True)
-    carrier = _doc_postings_df(
-        docs, "url", udf(*[F.col(c) for c in DOC_FIELD_ARGS])
-    )
-    return explode_doc_postings(carrier)
 
 
 def _marker(out_dir: str, bucket: int) -> str:
@@ -325,7 +306,6 @@ def _committed_batch_ids(checkpoint_dir: str) -> set[int]:
 def compact_stream_postings(
     spark: SparkSession,
     out_dir: str,
-    n_buckets: int | None = None,  # kept for CLI compat; partitioning unused
     checkpoint_dir: str | None = None,
 ) -> dict:
     """Merge COMMITTED ``batch=<id>`` directories into one — the small-files
