@@ -105,6 +105,49 @@ def run_index_pipeline(spark, n_rows: int, out_dir: str) -> float:
     return time.time() - t0
 
 
+# The benched query walls (per-query section of the JSON line); every name
+# must be a __spark_entry__.queries() key (tests/test_benchmark_imports.py).
+BENCH_QUERIES = (
+    "search_or",
+    "search_and",
+    "search_phrase",
+    "search_near",
+    "search_adj",  # ordered NEAR (round 5): same fused-scan shape
+    "search_wildcard",
+    "collapse_best_per_source",
+    "dedup_minhash_pairs",
+    "dedup_substring_spans",  # ExactSubstr spans (round 5)
+    "text_simhash",
+    "gopher_repetition",  # zero-shuffle per-row folds (round 5)
+    "text_unigram_logppl",  # hot/cold skew-split token join (round 6)
+    "url_dedup",  # canonicalize + hash-groupBy (round 5)
+    "ann_cosine_topk",
+    "ann_multiprobe_topk",  # written-index path: partition-pruned probe
+    "spelling_suggest",  # persistent trigram table point lookup
+    "text_quality",
+    "tfidf_top_terms",  # map-side tf + hot/cold df join + rank window (round 6)
+    "text_bigram_logppl",  # bigram LM, double skew-split join (round 6)
+    "text_char_entropy",  # zero-shuffle linear entropy fold (round 6)
+    "pack_sequences",  # two-level distributed prefix sum (round 6)
+    "bpe_merges",  # dict-bounded merge rounds, broadcast winners (round 6)
+    "bpe_encode",  # trained merges applied via dict lookup + skew join (round 6)
+    "web_pagerank",  # 5 integer rank rounds, per-round checkpoint (round 6)
+    "cap_per_host",  # exact two-level salted top-k per host (round 6)
+    "text_bigram_novelty",  # first-seen table + skew-split join (round 6)
+    "embedding_kmeans_step",  # broadcast argmin + one wide agg (round 6)
+    "quality_classifier_score",  # zero-shuffle hashed linear filter (round 6)
+    "dsir_importance",  # hashed-bigram importance, broadcast ratio probe (round 6)
+    "embedding_semdedup",  # broadcast-centroid assign + in-cluster pairs (round 6)
+    "cms_heavy_hitters",  # count-min sketch, broadcast counter table (round 6)
+    "search_hybrid_rrf",  # BM25 + ANN pools fused by integer RRF (round 6)
+    "bitext_margin_pairs",  # banded cross-lingual margin kNN (round 6)
+    "dedup_containment_pairs",  # directed shingle containment (round 6)
+    "text_zipf_fit",  # decimal-exact OLS corpus fingerprint (round 6)
+    "tpch_pricing_summary",
+    "tpch_revenue_forecast",  # Q6 pure pushed-down scan baseline (round 6)
+)
+
+
 def run_queries(spark, sf_dir: str) -> dict[str, float]:
     """Query-side latencies (index build amortized, per BASELINE.md).
 
@@ -114,55 +157,13 @@ def run_queries(spark, sf_dir: str) -> dict[str, float]:
     runtime partition coalescing), and this section mixes both. The
     latency-profile trade-off lives in bench_scaling_queries' latency rows,
     which time only the search family."""
+    import __spark_entry__ as entrymod
     from tika_xapian_spark.plans import doc_queries as dq
 
-    from tika_xapian_spark.plans.data_queries import DATA_QUERIES
-    from tika_xapian_spark.plans.rel_queries import REL_QUERIES
-
     dq.get_index(spark, sf_dir)  # build+cache outside the timed region
-    registry = {**dq.QUERIES, **DATA_QUERIES, **REL_QUERIES}
+    registry = entrymod.queries()
     out: dict[str, float] = {}
-    for name in (
-        "search_or",
-        "search_and",
-        "search_phrase",
-        "search_near",
-        "search_adj",  # ordered NEAR (round 5): same fused-scan shape
-        "search_wildcard",
-        "collapse_best_per_source",
-        "dedup_minhash_pairs",
-        "dedup_substring_spans",  # ExactSubstr spans (round 5)
-        "text_simhash",
-        "gopher_repetition",  # zero-shuffle per-row folds (round 5)
-        "text_unigram_logppl",  # hot/cold skew-split token join (round 6)
-        "url_dedup",  # canonicalize + hash-groupBy (round 5)
-        "ann_cosine_topk",
-        "ann_multiprobe_topk",  # written-index path: partition-pruned probe
-        "spelling_suggest",  # persistent trigram table point lookup
-        "text_quality",
-        "tfidf_top_terms",  # map-side tf + hot/cold df join + rank window (round 6)
-        "text_bigram_logppl",  # bigram LM, double skew-split join (round 6)
-        "text_char_entropy",  # zero-shuffle linear entropy fold (round 6)
-        "pack_sequences",  # two-level distributed prefix sum (round 6)
-        "bpe_merges",  # dict-bounded merge rounds, broadcast winners (round 6)
-        "bpe_encode",  # trained merges applied via dict lookup + skew join (round 6)
-        "web_pagerank",  # 5 integer rank rounds, per-round checkpoint (round 6)
-        "cap_per_host",  # exact two-level salted top-k per host (round 6)
-        "text_bigram_novelty",  # first-seen table + skew-split join (round 6)
-        "embedding_kmeans_step",  # broadcast argmin + one wide agg (round 6)
-        "quality_classifier_score",  # zero-shuffle hashed linear filter (round 6)
-        "dsir_importance",  # hashed-bigram importance, broadcast ratio probe (round 6)
-        "embedding_semdedup",  # broadcast-centroid assign + in-cluster pairs (round 6)
-        "cms_heavy_hitters",  # count-min sketch, broadcast counter table (round 6)
-        "search_hybrid_rrf",  # BM25 + ANN pools fused by integer RRF (round 6)
-        "bitext_margin_pairs",  # banded cross-lingual margin kNN (round 6)
-        "dedup_containment_pairs",  # directed shingle containment (round 6)
-        "text_zipf_fit",  # decimal-exact OLS corpus fingerprint (round 6)
-        "tpch_pricing_summary",
-        "tpch_revenue_forecast",  # Q6 pure pushed-down scan baseline (round 6)
-        "tpch_waiting_suppliers",  # Q21 via two-level aggregation (round 6)
-        "events_sessionized",
-    ):
+    for name in BENCH_QUERIES:
         fn = registry[name]
         fn(spark, sf_dir).collect()  # warm (plan compile, broadcast build)
         trials = []

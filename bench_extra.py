@@ -22,22 +22,6 @@ import os
 import sys
 import time
 
-BENCH_DEFAULT = [
-    # the frozen bench.py run_queries list (keep in sync manually)
-    "search_or", "search_and", "search_phrase", "search_near", "search_adj",
-    "search_wildcard", "collapse_best_per_source", "dedup_minhash_pairs",
-    "dedup_substring_spans", "text_simhash", "gopher_repetition",
-    "text_unigram_logppl", "url_dedup", "ann_cosine_topk",
-    "ann_multiprobe_topk", "spelling_suggest", "text_quality",
-    "tfidf_top_terms", "text_bigram_logppl", "text_char_entropy",
-    "pack_sequences", "bpe_merges", "bpe_encode", "web_pagerank",
-    "cap_per_host", "text_bigram_novelty", "embedding_kmeans_step",
-    "quality_classifier_score", "dsir_importance", "embedding_semdedup",
-    "cms_heavy_hitters", "search_hybrid_rrf", "bitext_margin_pairs",
-    "dedup_containment_pairs", "text_zipf_fit", "tpch_pricing_summary",
-    "tpch_revenue_forecast", "tpch_waiting_suppliers", "events_sessionized",
-]
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -52,14 +36,13 @@ def main() -> None:
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
 
+    import __spark_entry__ as entrymod
     import bench as B
     from tika_xapian_spark.plans import doc_queries as dq
-    from tika_xapian_spark.plans.data_queries import DATA_QUERIES
-    from tika_xapian_spark.plans.rel_queries import REL_QUERIES
 
     names = ([q for q in args.queries.split(",") if q]
-             if args.queries else BENCH_DEFAULT)
-    registry = {**dq.QUERIES, **DATA_QUERIES, **REL_QUERIES}
+             if args.queries else B.BENCH_QUERIES)
+    registry = entrymod.queries()
 
     spark = B.build_session(args.cpus)
     dq.get_index(spark, args.sf)  # amortized, like bench.py

@@ -446,35 +446,3 @@ class TestWinnowingProperty:
         # random-hash expectation is 2/(w+1) of gram count; allow wide slack
         assert n_sel >= (n - k + 1) * 2 // (w + 1) // 2
         assert 2 not in by_doc
-
-
-class TestAnomalyMad:
-    def test_spike_flagged_constant_type_null(self, spark, tmp_path):
-        """29 ordinary days (counts 9..11) + one 80-event spike: the spike
-        day scores > 3 MAD units and is the only flagged row; a type with
-        identical volume every day has mad = 0 -> NULL dev, never flagged
-        (a stddev rule would divide by zero or flag everything)."""
-        from datetime import datetime, timedelta
-
-        from tika_xapian_spark.plans.rel_queries import q_events_anomaly_mad
-
-        rows, eid = [], 0
-        base = datetime(2024, 3, 1)
-        for d in range(30):
-            n = 80 if d == 15 else (9 + (d % 3))
-            for _ in range(n):
-                rows.append((eid, base + timedelta(days=d), 1, "click", 1.0, "{}"))
-                eid += 1
-            for _ in range(5):  # constant-volume type
-                rows.append((eid, base + timedelta(days=d), 2, "view", 1.0, "{}"))
-                eid += 1
-        spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string",
-        ).write.parquet(str(tmp_path / "events.parquet"))
-        out = q_events_anomaly_mad(spark, str(tmp_path)).collect()
-        flagged = [(r.event_type, r.day.day) for r in out if r.anomalous]
-        assert flagged == [("click", 16)]
-        views = [r for r in out if r.event_type == "view"]
-        assert all(r.dev_micro is None and r.anomalous == 0 for r in views)

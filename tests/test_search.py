@@ -648,6 +648,13 @@ class TestRrfFuse:
         out = rrf_fuse([("kw", kw)], k0=60, limit=3).collect()
         assert [r.doc_id for r in out] == [1, 2, 3]
 
+    def test_no_ranked_lists_raises(self):
+        # a ValueError, not an assert: `python -O` must not strip the check
+        from tika_xapian_spark.operators.search import rrf_fuse
+
+        with pytest.raises(ValueError, match="at least one ranked list"):
+            rrf_fuse([])
+
 
 class TestPrfSmallMatchSet:
     def test_oracle_agrees_when_initial_query_matches_fewer_than_fb_docs(

@@ -57,97 +57,3 @@ class TestKmv:
         assert all(r.n_exact == ndv for r in out)
         mean_est = sum(r.kmv_estimate for r in out) / len(out)
         assert abs(mean_est - ndv) < ndv * 0.15, mean_est
-
-
-class TestStreamKmv:
-    def test_stream_equals_batch_and_state_crosses_batches(self, spark, tmp_path):
-        """The two-phase availableNow streaming KMV must equal the batch
-        sketch over the same rows, and the k-min state must genuinely
-        accumulate ACROSS micro-batches: the input is constructed so each
-        time-third introduces a disjoint user population, and the test
-        first PROVES (by direct hashing) that the global 16 smallest
-        hashes span several thirds — so stream==batch is only possible if
-        the state merged across batches."""
-        import hashlib
-        from datetime import datetime
-
-        from tika_xapian_spark.streaming.sketch_stream import run_stream_kmv
-
-        def h60(u):
-            return int(hashlib.md5(str(u).encode()).hexdigest()[:15], 16)
-
-        rows = []
-        for third in range(3):
-            day = datetime(2024, 1, 1 + third)
-            for i in range(100):
-                uid = third * 1000 + i
-                rows.append((third * 100 + i, day, uid, "click", 1.0, "{}"))
-        # premise: the 16 global minima are NOT all in third 0
-        mins = sorted(rows, key=lambda r: h60(r[2]))[: SK.KMV_K]
-        assert {r[2] // 1000 for r in mins} != {0}
-        ev_path = str(tmp_path / "events.parquet")
-        spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string",
-        ).write.parquet(ev_path)
-        got = {
-            (r.event_type, r.kmv_estimate)
-            for r in run_stream_kmv(spark, ev_path, str(tmp_path / "wk")).collect()
-        }
-        want = {
-            (r.event_type, r.kmv_estimate)
-            for r in SK.kmv_distinct(
-                spark.read.parquet(ev_path), "event_type", "user_id"
-            ).select("event_type", "kmv_estimate").collect()
-        }
-        assert got == want
-        # and the chunk-0-only sketch is genuinely different
-        n0 = sorted(h60(u) for u in range(100))[: SK.KMV_K]
-        est0 = int((SK.KMV_K - 1) * SK.KMV_SPACE // n0[-1])
-        assert ("click", est0) not in got
-
-
-class TestStreamCms:
-    def test_stream_equals_batch_counter_table(self, spark, tmp_path):
-        """The two-phase availableNow streaming CMS must equal the batch
-        counter table over the same rows; the input spreads each user's
-        events across all three time-thirds so per-cell totals are only
-        right if the counter state accumulates ACROSS micro-batches."""
-        import hashlib
-        from datetime import datetime
-
-        from tika_xapian_spark.streaming.cms_stream import run_stream_cms
-
-        rows = []
-        eid = 0
-        for third in range(3):
-            day = datetime(2024, 1, 1 + third)
-            for u in range(40):  # same 40 users every third
-                for _ in range(u % 3 + 1):
-                    rows.append((eid, day, u, "click", 1.0, "{}"))
-                    eid += 1
-        ev_path = str(tmp_path / "events.parquet")
-        spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string",
-        ).write.parquet(ev_path)
-        got = {
-            (r.event_type, r.r, r.bucket): r.cell
-            for r in run_stream_cms(spark, ev_path, str(tmp_path / "wk")).collect()
-        }
-        # batch truth: count per (type, r, bucket) via the same hash
-        def bucket(r, u):
-            h = int(hashlib.md5(f"{r}:{u}".encode()).hexdigest()[:15], 16)
-            return h % SK.CMS_WIDTH
-
-        want = {}
-        for _, _, u, et, _, _ in rows:
-            for r in range(SK.CMS_DEPTH):
-                k = (et, r, bucket(r, u))
-                want[k] = want.get(k, 0) + 1
-        assert got == want
-        # every cell total is a cross-batch sum (each user appears in all
-        # thirds), so a state reset between batches cannot reproduce it
-        assert sum(got.values()) == SK.CMS_DEPTH * len(rows)

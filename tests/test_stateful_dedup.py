@@ -74,132 +74,3 @@ def test_streaming_dedup_deterministic_representative(spark, tmp_path):
     assert len(rows) == 1
     assert rows[0]["url"] == "https://a/1"  # lexicographically smallest
     assert rows[0]["n_duplicates_so_far"] == 2
-
-
-class TestStreamSessionization:
-    def test_session_spanning_batch_boundary(self, spark, tmp_path):
-        # one user's single session is split across micro-batches by the
-        # time-range chunking: the cross-batch state must stitch it back
-        # into ONE session
-        import datetime as dt
-
-        from tika_xapian_spark.streaming.sessionize import run_finalized_sessions
-        from tika_xapian_spark.streaming.windowed import EVENTS_SCHEMA
-
-        t0 = dt.datetime(2021, 1, 1, 12, 0, 0)
-        rows = []
-        # user 1: 6 events 10 min apart (one session, spans all 3 chunks)
-        for i in range(6):
-            rows.append((i, t0 + dt.timedelta(minutes=10 * i), 1, "c", 0.0, "{}"))
-        # user 2: 3 events days apart (three sessions)
-        for i in range(3):
-            rows.append(
-                (100 + i, t0 + dt.timedelta(days=i), 2, "c", 0.0, "{}")
-            )
-        src = str(tmp_path / "events.parquet")
-        df = spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1)
-        df.write.parquet(str(tmp_path / "ev"))
-        import glob
-        import shutil
-
-        part = glob.glob(str(tmp_path / "ev" / "*.parquet"))[0]
-        shutil.move(part, src)
-
-        got = {
-            r["user_id"]: (r["n_sessions"], r["max_session_events"])
-            for r in run_finalized_sessions(
-                spark, src, str(tmp_path / "work"), n_chunks=3
-            ).collect()
-        }
-        assert got[1] == (1, 6)
-        assert got[2] == (3, 1)
-
-
-class TestTimeoutSessionization:
-    def test_users_finalize_by_event_time_timeout(self, spark, tmp_path):
-        """EventTimeTimeout finalization (the at-scale form): no sentinel
-        rows — idle users emit when the watermark passes last_event +
-        idle_sec. Result equals the batch window-function sessionization."""
-        import datetime as dt
-        import glob
-        import shutil
-
-        from tika_xapian_spark.streaming.sessionize import run_timeout_sessions
-        from tika_xapian_spark.streaming.windowed import EVENTS_SCHEMA
-
-        t0 = dt.datetime(2021, 1, 1, 12, 0, 0)
-        rows = []
-        # user 1: one session of 6 events spanning the 3 chunks
-        for i in range(6):
-            rows.append((i, t0 + dt.timedelta(minutes=10 * i), 1, "c", 0.0, "{}"))
-        # user 2: three 1-event sessions days apart
-        for i in range(3):
-            rows.append((100 + i, t0 + dt.timedelta(days=i), 2, "c", 0.0, "{}"))
-        # user 3: two sessions of 2 and 3 events
-        for i in range(2):
-            rows.append((200 + i, t0 + dt.timedelta(minutes=5 * i), 3, "c", 0.0, "{}"))
-        for i in range(3):
-            rows.append(
-                (300 + i, t0 + dt.timedelta(hours=4, minutes=5 * i), 3, "c", 0.0, "{}")
-            )
-        src = str(tmp_path / "events.parquet")
-        spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.parquet(
-            str(tmp_path / "ev")
-        )
-        shutil.move(glob.glob(str(tmp_path / "ev" / "*.parquet"))[0], src)
-
-        got = {
-            r["user_id"]: (r["n_sessions"], r["max_session_events"])
-            for r in run_timeout_sessions(
-                spark, src, str(tmp_path / "work"), idle_sec=7 * 24 * 3600,
-                n_chunks=3,
-            ).collect()
-        }
-        assert got == {1: (1, 6), 2: (3, 1), 3: (2, 3)}
-
-    def test_intra_stream_timeout_starts_new_epoch(self, spark, tmp_path):
-        """A user idle longer than idle_sec finalizes MID-stream; a
-        reappearance starts a fresh epoch (two output rows) — the bounded-
-        state semantics a continuous pipeline needs."""
-        import datetime as dt
-        import glob
-        import shutil
-
-        from tika_xapian_spark.streaming.sessionize import run_timeout_sessions
-        from tika_xapian_spark.streaming.windowed import EVENTS_SCHEMA
-
-        t0 = dt.datetime(2021, 1, 1, 12, 0, 0)
-        rows = []
-        # user 7: 2 events close together, then 30 days idle, then 3 more
-        for i in range(2):
-            rows.append((i, t0 + dt.timedelta(minutes=10 * i), 7, "c", 0.0, "{}"))
-        for i in range(3):
-            rows.append(
-                (10 + i, t0 + dt.timedelta(days=30, minutes=10 * i), 7, "c", 0.0, "{}")
-            )
-        # user 8 fills the idle span (days 9-11 and 19-21 clusters + day 0 /
-        # day 30 bookends) so the 4-way time chunking yields at least one
-        # user-7-free batch whose start watermark exceeds day 7 — the batch
-        # where user 7's EventTimeTimeout can fire (timeouts only fire for
-        # groups with no data in the batch)
-        filler_days = [0, 9, 10, 11, 19, 20, 21, 30]
-        for j, day in enumerate(filler_days):
-            rows.append((20 + j, t0 + dt.timedelta(days=day), 8, "c", 0.0, "{}"))
-        src = str(tmp_path / "events.parquet")
-        spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.parquet(
-            str(tmp_path / "ev")
-        )
-        shutil.move(glob.glob(str(tmp_path / "ev" / "*.parquet"))[0], src)
-
-        # 4 chunks: the day-20 batch (user 7 absent, watermark past day 7)
-        # is where the mid-stream timeout can fire — a timeout only fires in
-        # a batch where the group has no data
-        out = run_timeout_sessions(
-            spark, src, str(tmp_path / "work"), idle_sec=7 * 24 * 3600, n_chunks=4
-        ).collect()
-        user7 = sorted(
-            (r["n_sessions"], r["max_session_events"])
-            for r in out
-            if r["user_id"] == 7
-        )
-        assert user7 == [(1, 2), (1, 3)]  # two epochs, split by the timeout

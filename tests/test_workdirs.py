@@ -1,5 +1,6 @@
 """plans/workdirs.py: deterministic per-input work dirs — reuse, staleness
-GC, crash-safe cached builds. Pure filesystem tests."""
+GC, crash-safe cached builds — and the in-session memo: Spark-free unit
+tests against a stub session, plus one check through get_index."""
 
 import os
 
@@ -28,16 +29,6 @@ def test_changed_input_new_dir_and_gc(tmp_path):
     assert a != b
     assert not os.path.exists(a)  # stale sibling for the purpose removed
     assert os.path.isdir(b)
-
-
-def test_fresh_wipes(tmp_path):
-    src = str(tmp_path / "in3.parquet")
-    _touch(src)
-    d = W.work_dir("t3", src)
-    marker = os.path.join(d, "junk")
-    _touch(marker)
-    d2 = W.work_dir("t3", src, fresh=True)
-    assert d2 == d and not os.path.exists(marker)
 
 
 def test_cached_build_builds_once_and_recovers_partial(tmp_path):
@@ -80,3 +71,71 @@ def test_alternating_purposes_rebuild_cleanly(tmp_path):
     da2 = W.cached_build("t5", a, build)   # rebuilds a
     assert da2 == da1 and os.path.exists(os.path.join(da2, "artifact"))
     assert len(calls) == 3
+
+
+class _StubSession:
+    """Just enough of a SparkSession for Memo: an application id."""
+
+    def __init__(self, app_id):
+        self.sparkContext = type("Ctx", (), {"applicationId": app_id})()
+
+
+class _Value:
+    def __init__(self, n):
+        self.n = n
+        self.unpersisted = False
+
+    def unpersist(self):
+        self.unpersisted = True
+
+
+def test_memo_builds_once_per_input(tmp_path):
+    src = str(tmp_path / "m1.parquet")
+    _touch(src)
+    memo, spark, built = W.Memo(), _StubSession("app-1"), []
+
+    def build():
+        built.append(_Value(len(built)))
+        return built[-1]
+
+    assert memo.get(spark, "p", src, build) is memo.get(spark, "p", src, build)
+    assert len(built) == 1
+    memo.get(spark, "q", src, build)  # another purpose: its own entry
+    assert len(built) == 2
+
+
+def test_memo_rebuilds_rewritten_input_and_unpersists_old(tmp_path):
+    src = str(tmp_path / "m2.parquet")
+    _touch(src, "one")
+    memo, spark = W.Memo(), _StubSession("app-1")
+    old = memo.get(spark, "p", src, lambda: _Value(1))
+    _touch(src, "rewritten, longer")
+    new = memo.get(spark, "p", src, lambda: _Value(2))
+    assert new.n == 2 and old.unpersisted and not new.unpersisted
+
+
+def test_memo_drops_entries_of_a_stopped_application(tmp_path):
+    src = str(tmp_path / "m3.parquet")
+    _touch(src)
+    memo, spark = W.Memo(), _StubSession("app-1")
+    old = memo.get(spark, "p", src, lambda: _Value(1))
+    memo.get(spark, "q", src, lambda: _Value(1))
+    spark.sparkContext.applicationId = "app-2"  # session stopped + restarted
+    new = memo.get(spark, "p", src, lambda: _Value(2))
+    assert new.n == 2
+    # every entry of app-1 is gone, not only the one rebuilt; the stopped
+    # session's frames are dropped without an unpersist call into it
+    assert list(memo._entries) == [("p", src)]
+    assert not old.unpersisted
+
+
+def test_get_index_sees_rewritten_documents(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    from tika_xapian_spark.plans import doc_queries as dq
+
+    table = pq.read_table("/root/testdata/sf0.001/documents.parquet")
+    pq.write_table(table, str(tmp_path / "documents.parquet"))
+    assert dq.get_index(spark, str(tmp_path)).n_docs == table.num_rows
+    pq.write_table(table.slice(0, 50), str(tmp_path / "documents.parquet"))
+    assert dq.get_index(spark, str(tmp_path)).n_docs == 50

@@ -292,6 +292,10 @@ class InvertedIndex:
     # persistent spelling table (build_vocab_frag): loaded by read() when
     # written, else built+persisted once on first spelling query
     vocab_frag: DataFrame | None = None
+    # the persisted carrier postings/doc_stats derive from (built indexes
+    # only): unpersist() must release it, or a rebuild over a rewritten
+    # input with the same plan is served the old cached rows
+    carrier: DataFrame | None = None
 
     def spelling_table(self) -> DataFrame:
         if self.vocab_frag is None:
@@ -321,6 +325,7 @@ class InvertedIndex:
             term_stats=term_stats,
             n_docs=int(row["n"] or 0),
             avg_len=float(row["avg"] or 0.0),
+            carrier=carrier,
         )
 
     @classmethod
@@ -360,7 +365,10 @@ class InvertedIndex:
         return cls.from_fused_carrier(carrier)
 
     def unpersist(self) -> None:
-        for df in (self.postings, self.doc_stats, self.term_stats, self.vocab_frag):
+        for df in (
+            self.postings, self.doc_stats, self.term_stats, self.vocab_frag,
+            self.carrier,
+        ):
             if df is None:
                 continue
             try:

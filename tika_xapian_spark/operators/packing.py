@@ -11,7 +11,7 @@ the actual token arrays.
 
 The hard part at 10^12 documents is the GLOBAL running offset (each
 doc's start position in the concatenated stream). A naive
-``Window.orderBy(doc)`` with no partition key funnels the whole corpus
+``Window.orderBy(doc)`` with no partition key pushes the whole corpus
 through ONE task — the classic global-prefix-sum trap. This operator
 uses the two-level scan:
 

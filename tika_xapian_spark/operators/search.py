@@ -1081,7 +1081,8 @@ def rrf_fuse(
     add a shuffle exchange + an AQE replanning pause — measured ~3s of
     pure stage overhead on the composed hybrid plan for 40 rows of data.
     """
-    assert ranked, "rrf_fuse needs at least one ranked list"
+    if not ranked:
+        raise ValueError("rrf_fuse needs at least one ranked list")
     sides = []
     for i, (_, df) in enumerate(ranked):
         cols = [F.col("doc_id")]

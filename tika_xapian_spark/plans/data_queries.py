@@ -19,6 +19,8 @@ from ..operators import similarity as SIM
 from ..operators import sketches as SK
 from ..operators import textstats as T
 from ..sources.scan import DEFAULT_SPREAD_MIN_ROWS, read_spread
+from .doc_queries import _docs
+from .workdirs import memo
 
 # ------------------------------------------------------------------ helpers
 
@@ -35,17 +37,6 @@ tok AS (
 )"""
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # read_spread: single-row-group test files otherwise serialize every
-    # downstream map stage onto one core (sources/scan.py). Default is
-    # size-gated: small tables stay raw because the exchange tax beats the
-    # parallelism for light-to-moderate per-row work.
-    return read_spread(
-        spark, f"{sf_dir}/documents.parquet", "doc_id",
-        min_rows=DEFAULT_SPREAD_MIN_ROWS,
-    )
-
-
 def _docs_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Docs reader for HEAVY per-row folds (char-trigram entropy, gopher
     run-length stats, shingle/gram explode): always spread — these win
@@ -53,21 +44,33 @@ def _docs_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_spread(spark, f"{sf_dir}/documents.parquet", "doc_id")
 
 
-_SHINGLE_CACHE: dict[tuple[str, int], DataFrame] = {}
-
-
 def _shingles(spark: SparkSession, sf_dir: str, k: int = D.SHINGLE_K) -> DataFrame:
-    """Persisted (doc, shingle) index, built once per (sf_dir, k) and shared
-    across invocations — it feeds three consumers inside one query
-    (signatures + both sides of the Jaccard verify) and repeated driver/bench
-    calls; re-persisting per call would recompute the explode every time and
-    leak a cached copy per invocation."""
-    key = (sf_dir, k)
-    if key not in _SHINGLE_CACHE:
-        _SHINGLE_CACHE[key] = D.shingles_df(
+    """Persisted (doc, shingle) index, built once per (session, input, k)
+    and shared across invocations — it feeds three consumers inside one
+    query (signatures + both sides of the Jaccard verify) and repeated
+    driver/bench calls; re-persisting per call would recompute the explode
+    every time and leak a cached copy per invocation."""
+    return memo(
+        spark, f"shingles_k{k}", f"{sf_dir}/documents.parquet",
+        lambda: D.shingles_df(
             _docs_hot(spark, sf_dir), key="doc_id", k=k
-        ).persist()
-    return _SHINGLE_CACHE[key]
+        ).persist(),
+    )
+
+
+def _minhash_candidates(spark: SparkSession, sf_dir: str, **lsh) -> DataFrame:
+    """Persisted LSH candidate pairs over the shingle index, one per
+    (session, input, ``lsh_candidates`` options): exact_jaccard references
+    the set twice (intersection join + left-outer fill), and without a
+    persist the whole signature -> band -> self-join chain re-executes per
+    reference."""
+    purpose = "minhash_cand" + "".join(f"_{k}{v}" for k, v in sorted(lsh.items()))
+    return memo(
+        spark, purpose, f"{sf_dir}/documents.parquet",
+        lambda: D.lsh_candidates(
+            D.band_buckets(D.minhash_signatures(_shingles(spark, sf_dir))), **lsh
+        ).persist(),
+    )
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,22 +155,10 @@ sig AS (
 SELECT doc_id, seed::INT AS seed, minhash FROM sig ORDER BY doc_id, seed"""
 
 
-_MINHASH_CAND_CACHE: dict[str, DataFrame] = {}
-
-
 def q_dedup_minhash_pairs(spark, sf_dir):
-    sh = _shingles(spark, sf_dir)
-    if sf_dir not in _MINHASH_CAND_CACHE:
-        # materialize the LSH candidate set: exact_jaccard references it
-        # twice (intersection join + left-outer fill), and without a persist
-        # the whole signature -> band -> self-join chain re-executes per
-        # reference
-        cand = D.lsh_candidates(D.band_buckets(D.minhash_signatures(sh))).persist()
-        _MINHASH_CAND_CACHE[sf_dir] = cand
-    return (
-        D.exact_jaccard(_MINHASH_CAND_CACHE[sf_dir], sh)
-        .orderBy("doc_a", "doc_b")
-    )
+    return D.exact_jaccard(
+        _minhash_candidates(spark, sf_dir), _shingles(spark, sf_dir)
+    ).orderBy("doc_a", "doc_b")
 
 
 def q_dedup_minhash_calibration(spark, sf_dir):
@@ -232,14 +223,10 @@ def q_dedup_minhash_pairs_capped(spark, sf_dir):
     buckets holding more docs than the cap are skipped before the
     quadratic self-join. Cap=2 here so the exclusion is live at the oracle
     scales; production default is 1000 (plans/curation.py)."""
-    sh = _shingles(spark, sf_dir)
-    ck = f"{sf_dir}#cap{MINHASH_CAP}"
-    if ck not in _MINHASH_CAND_CACHE:
-        _MINHASH_CAND_CACHE[ck] = D.lsh_candidates(
-            D.band_buckets(D.minhash_signatures(sh)),
-            max_bucket_size=MINHASH_CAP,
-        ).persist()
-    return D.exact_jaccard(_MINHASH_CAND_CACHE[ck], sh).orderBy("doc_a", "doc_b")
+    return D.exact_jaccard(
+        _minhash_candidates(spark, sf_dir, max_bucket_size=MINHASH_CAP),
+        _shingles(spark, sf_dir),
+    ).orderBy("doc_a", "doc_b")
 
 
 _CAND_CTE = """cand AS (
@@ -275,14 +262,10 @@ def q_dedup_minhash_pairs_star(spark, sf_dir):
     member against the bucket min instead of all-pairs. Threshold=2 here
     so starring is live at the oracle scales (buckets of 3-4 exist);
     production default is 100 (plans/curation.py)."""
-    sh = _shingles(spark, sf_dir)
-    ck = f"{sf_dir}#star{MINHASH_CAP}"
-    if ck not in _MINHASH_CAND_CACHE:
-        _MINHASH_CAND_CACHE[ck] = D.lsh_candidates(
-            D.band_buckets(D.minhash_signatures(sh)),
-            star_above=MINHASH_CAP,
-        ).persist()
-    return D.exact_jaccard(_MINHASH_CAND_CACHE[ck], sh).orderBy("doc_a", "doc_b")
+    return D.exact_jaccard(
+        _minhash_candidates(spark, sf_dir, star_above=MINHASH_CAP),
+        _shingles(spark, sf_dir),
+    ).orderBy("doc_a", "doc_b")
 
 
 _CAND_CTE_STAR = f"""bstat AS (
@@ -597,9 +580,6 @@ ORDER BY rrf_score DESC, doc_id LIMIT {RRF_LIMIT}"""
     )
 
 
-_ANN_INDEX_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _ann_index(spark, sf_dir):
     """Build-once written ANN index for this corpus (operators/ann_index.py):
     the bucket/cell assignments are materialized as partition columns at
@@ -608,27 +588,22 @@ def _ann_index(spark, sf_dir):
     input fingerprint (plans/workdirs.py) and the opened handle per session
     (so partition discovery runs once, like a catalog's metadata cache) —
     the local stand-in for a written catalog table."""
-    from ..operators.ann_index import AnnIndex
-    from .workdirs import cached_build
-
     import os
 
-    from . import workdirs
+    from ..operators.ann_index import AnnIndex
+    from .workdirs import _MARKER, cached_build
 
-    emb_path = f"{sf_dir}/embeddings.parquet"
     d = cached_build(
-        "ann_index", emb_path, lambda out: AnnIndex.build(_emb(spark, sf_dir), out)
+        "ann_index", f"{sf_dir}/embeddings.parquet",
+        lambda out: AnnIndex.build(_emb(spark, sf_dir), out),
     )
-    # cache keyed by the build marker's mtime: if the dir was rebuilt since
-    # the handle was opened (input changed, or a sibling-GC + rebuild when
-    # alternating corpora in one session), the stale handle's cached file
-    # listing would point at deleted part-files — reopen instead
-    stamp = os.stat(os.path.join(d, workdirs._MARKER)).st_mtime_ns
-    key = (spark.sparkContext.applicationId, d)
-    hit = _ANN_INDEX_CACHE.get(key)
-    if hit is None or hit[0] != stamp:
-        _ANN_INDEX_CACHE[key] = (stamp, AnnIndex.read(spark, d))
-    return _ANN_INDEX_CACHE[key][1]
+    # the build marker is the handle's fingerprinted input: if the dir was
+    # rebuilt since the handle was opened (input changed, or a sibling-GC +
+    # rebuild when alternating corpora in one session), the stale handle's
+    # cached file listing would point at deleted part-files — reopen instead
+    return memo(
+        spark, "ann_index", os.path.join(d, _MARKER), lambda: AnnIndex.read(spark, d)
+    )
 
 
 def q_ann_lsh_topk(spark, sf_dir):

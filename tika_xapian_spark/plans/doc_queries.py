@@ -6,8 +6,9 @@ with a pure-SQL DuckDB oracle from plans/oracles.py. Column names and the
 ``score_micro`` integerized score are aligned on both sides so the driver's
 order-insensitive value-hash comparison is byte-stable.
 
-The index for a given sf_dir is built once per process and cached — the
-driver invokes every query callable in one session.
+The index for a given sf_dir is built once per Spark session and input
+(plans/workdirs.py::memo) — the driver invokes every query callable in one
+session.
 """
 
 from __future__ import annotations
@@ -17,30 +18,31 @@ from pyspark.sql import functions as F
 
 from ..operators import search as S
 from ..operators.index import InvertedIndex
-from ..sources.scan import read_spread
+from ..sources.scan import DEFAULT_SPREAD_MIN_ROWS, read_spread
 from . import oracles
-
-_INDEX_CACHE: dict[tuple[str, str], InvertedIndex] = {}
+from .workdirs import memo
 
 K = 100
 
 
 def get_index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
-    key = (sf_dir, "body")
-    if key not in _INDEX_CACHE:
+    path = f"{sf_dir}/documents.parquet"
+
+    def build() -> InvertedIndex:
         # read_spread: the persisted postings carrier inherits the scan's
         # partitioning, and a single-row-group file pins it (and with it the
         # postings scan of EVERY search query) at 1 partition (sources/scan.py)
-        docs = read_spread(spark, f"{sf_dir}/documents.parquet", "doc_id")
-        _INDEX_CACHE[key] = InvertedIndex.build_from_body(docs, key="doc_id")
-    return _INDEX_CACHE[key]
+        docs = read_spread(spark, path, "doc_id")
+        return InvertedIndex.build_from_body(docs, key="doc_id")
+
+    return memo(spark, "index_body", path, build)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # size-gated: these consumers (metadata filters, page fetch) do light
-    # per-row work, so small tables stay raw (sources/scan.py)
-    from ..sources.scan import DEFAULT_SPREAD_MIN_ROWS
-
+    """The documents table for light-to-moderate per-row work (metadata
+    filters, page fetch, most analytics folds): size-gated, so small tables
+    stay raw because the exchange tax beats the parallelism
+    (sources/scan.py)."""
     return read_spread(
         spark, f"{sf_dir}/documents.parquet", "doc_id",
         min_rows=DEFAULT_SPREAD_MIN_ROWS,
@@ -444,8 +446,8 @@ def get_fielded_index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
     """Documents indexed with field prefixes: source as the A (author)
     field, lang as a K tag, text as the body — the reference field order
     with the shared position counter (src/main.rs:123-133, K8)."""
-    key = (sf_dir, "fielded")
-    if key not in _INDEX_CACHE:
+
+    def build() -> InvertedIndex:
         docs = _docs(spark, sf_dir).select(
             "doc_id",
             F.col("source").alias("author"),
@@ -458,8 +460,9 @@ def get_fielded_index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
             F.col("text").alias("body"),
             F.lit("ok").alias("status"),
         )
-        _INDEX_CACHE[key] = InvertedIndex.build_from_extracted(docs, key="doc_id")
-    return _INDEX_CACHE[key]
+        return InvertedIndex.build_from_extracted(docs, key="doc_id")
+
+    return memo(spark, "index_fielded", f"{sf_dir}/documents.parquet", build)
 
 
 def q_search_field(spark, sf_dir):

@@ -372,7 +372,7 @@ near_docs AS (
 
 def adj(words: list[str], window: int = 10, k: int = 100) -> str:
     """ADJ (two-term form): IN-ORDER within window — phrasepostlist's
-    windowed chain semantics (b strictly after a, span < window), scored
+    window-bounded chain semantics (b strictly after a, span < window), scored
     over the member terms like phrase/near."""
     assert len(words) == 2
     w1, w2 = words

@@ -1,7 +1,7 @@
-"""Relational/events query registry — the classic-operator breadth of
-SURVEY.md §2.6 (joins, hash aggregation, window functions, event-time
-windows, sessionization) demonstrated over the TPC-H-ish tables and the
-events stream table, each with a DuckDB oracle.
+"""Relational query registry — the TPC-H-shape subset still carried
+beside the document queries: wide and ROLLUP aggregation, semi/outer
+joins, a correlated window aggregate, a disjunctive join predicate and a
+pure scan, over the TPC-H-ish tables, each with a DuckDB oracle.
 
 Money/measure sums use exact integer cents (``round(x*100)::bigint`` before
 summing) so double-summation order can never break cross-engine equality.
@@ -13,8 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tika_xapian_spark.operators.funnel import funnel_oracle_sql as _funnel_oracle_sql
-
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -23,174 +21,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def cents(col) -> F.Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.round(c * 100).cast("long")
-
-
-# ------------------------------------------------------------------ events
-
-
-def q_events_windowed(spark, sf_dir):
-    """Tumbling 1-hour event-time windows per event_type (the watermark-less
-    batch shape of a streaming windowed agg — SURVEY.md §2.6 Streaming)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.window("ts", "1 hour").getField("start").alias("window_start"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(cents("value")).alias("sum_value_cents"),
-        )
-        .orderBy("window_start", "event_type")
-    )
-
-
-ORACLE_EVENTS_WINDOWED = """
-SELECT date_trunc('hour', ts) AS window_start, event_type,
-       count(*) AS n_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents
-FROM events
-GROUP BY 1, 2
-ORDER BY 1, 2"""
-
-
-def q_events_stream_windowed(spark, sf_dir):
-    """The same tumbling-window aggregation run as a *Structured Streaming*
-    job: watermarked append-mode file stream, finalized across a
-    checkpointed availableNow restart (streaming/windowed.py). The emitted
-    windows equal the batch aggregation, so the batch oracle applies —
-    a streaming query with a plain-SQL correctness gate."""
-    from ..streaming.windowed import run_finalized_window_counts
-    from .workdirs import work_dir
-
-    # fresh=True: the checkpointed two-phase run must start clean, and
-    # reuse-by-wipe keeps repeated driver/bench invocations from
-    # accumulating /tmp state
-    work = work_dir("stream_windowed", f"{sf_dir}/events.parquet", fresh=True)
-    # localCheckpoint decouples the returned frame from the work dir's
-    # parquet files, which the NEXT invocation's reuse-by-wipe deletes
-    return (
-        run_finalized_window_counts(spark, f"{sf_dir}/events.parquet", work)
-        .orderBy("window_start", "event_type")
-        .localCheckpoint()
-    )
-
-
-def q_events_stream_sessionized(spark, sf_dir):
-    """Gap-sessionization as a custom STATEFUL streaming operator
-    (applyInPandasWithState, streaming/sessionize.py): per-user state
-    carried across time-ordered micro-batches, finalized by a per-user
-    sentinel across a checkpointed restart. Equal to the batch
-    window-function form, so the same SQL oracle gates it."""
-    from ..streaming.sessionize import run_finalized_sessions
-    from .workdirs import work_dir
-
-    work = work_dir("stream_sessions", f"{sf_dir}/events.parquet", fresh=True)
-    return (
-        run_finalized_sessions(spark, f"{sf_dir}/events.parquet", work)
-        .orderBy("user_id")
-        .localCheckpoint()
-    )
-
-
-def q_events_stream_sessionized_timeout(spark, sf_dir):
-    """The AT-SCALE finalization of the same stateful sessionization:
-    GroupStateTimeout.EventTimeTimeout — idle users emit and retire when
-    the event-time watermark passes last_event + idle_sec, no sentinel data
-    rows (streaming/sessionize.py::run_timeout_sessions). idle_sec = 365
-    days exceeds every within-user gap in the corpus, so the emitted rows
-    equal the batch window-function aggregation and the same SQL oracle
-    gates this path too."""
-    from ..streaming.sessionize import run_timeout_sessions
-    from .workdirs import work_dir
-
-    work = work_dir("stream_sessions_timeout", f"{sf_dir}/events.parquet", fresh=True)
-    return (
-        run_timeout_sessions(
-            spark, f"{sf_dir}/events.parquet", work, idle_sec=365 * 24 * 3600
-        )
-        .orderBy("user_id")
-        .localCheckpoint()
-    )
-
-
-def q_events_sessionized(spark, sf_dir):
-    """Gap-based sessionization (30-min inactivity): per-user session count
-    and longest session by events — lag + running-sum window functions."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    with_s = ev.withColumn(
-        "new_session",
-        F.when(gap.isNull() | (gap > 1800), F.lit(1)).otherwise(F.lit(0)),
-    ).withColumn("session_id", F.sum("new_session").over(w))
-    per_session = with_s.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    return (
-        per_session.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_sessions"),
-            F.max("n").alias("max_session_events"),
-        )
-        .orderBy("user_id")
-    )
-
-
-ORACLE_EVENTS_SESSIONS = """
-WITH with_gap AS (
-  SELECT user_id, ts,
-         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                OR epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) > 1800
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-),
-sess AS (
-  SELECT user_id,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM with_gap
-),
-per_session AS (
-  SELECT user_id, session_id, count(*) AS n FROM sess GROUP BY 1, 2
-)
-SELECT user_id, count(*) AS n_sessions, max(n) AS max_session_events
-FROM per_session GROUP BY user_id ORDER BY user_id"""
-
-
-def q_events_top_users(spark, sf_dir):
-    """Window-ranked top spender per event_type (row_number over partition)."""
-    ev = _t(spark, sf_dir, "events")
-    per_user = ev.groupBy("event_type", "user_id").agg(
-        F.sum(cents("value")).alias("spend_cents")
-    )
-    w = Window.partitionBy("event_type").orderBy(
-        F.desc("spend_cents"), F.asc("user_id")
-    )
-    return (
-        per_user.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("event_type", "user_id", "spend_cents", F.col("rn").cast("int").alias("rn"))
-        .orderBy("event_type", "rn")
-    )
-
-
-ORACLE_EVENTS_TOP_USERS = """
-WITH per_user AS (
-  SELECT event_type, user_id,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS spend_cents
-  FROM events GROUP BY 1, 2
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY event_type
-                               ORDER BY spend_cents DESC, user_id) AS rn
-  FROM per_user
-)
-SELECT event_type, user_id, spend_cents, rn::INT AS rn
-FROM ranked WHERE rn <= 3 ORDER BY event_type, rn"""
-
-
-# ------------------------------------------------------------------- tpc-h
 
 
 def q_tpch_pricing_summary(spark, sf_dir):
@@ -219,371 +49,6 @@ FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02'
 GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus"""
-
-
-def q_tpch_top_customers(spark, sf_dir):
-    """Fact-fact join + agg + deterministic top-10.
-
-    ``customer`` scales linearly with the data (sf100 = 15M rows), so it
-    gets NO broadcast hint: an explicit ``F.broadcast`` would override
-    ``autoBroadcastJoinThreshold`` and AQE, OOMing executors at 100x. At
-    small sf AQE converts the join to broadcast on its own (it is under
-    the threshold); at scale it degrades gracefully to a shuffle join.
-    """
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    spend = orders.groupBy("o_custkey").agg(
-        F.sum(cents("o_totalprice")).alias("spend_cents"),
-        F.count(F.lit(1)).alias("n_orders"),
-    )
-    return (
-        spend.join(
-            cust.select("c_custkey", "c_name", "c_mktsegment"),
-            spend["o_custkey"] == cust["c_custkey"],
-        )
-        .select(
-            F.col("c_custkey").cast("long").alias("custkey"),
-            "c_name",
-            "c_mktsegment",
-            "spend_cents",
-            "n_orders",
-        )
-        .orderBy(F.desc("spend_cents"), F.asc("custkey"))
-        .limit(10)
-    )
-
-
-ORACLE_TPCH_TOP_CUSTOMERS = """
-WITH spend AS (
-  SELECT o_custkey,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS spend_cents,
-         count(*) AS n_orders
-  FROM orders GROUP BY o_custkey
-)
-SELECT c.c_custkey::BIGINT AS custkey, c.c_name, c.c_mktsegment,
-       s.spend_cents, s.n_orders
-FROM spend s JOIN customer c ON s.o_custkey = c.c_custkey
-ORDER BY s.spend_cents DESC, custkey
-LIMIT 10"""
-
-
-def q_tpch_region_revenue(spark, sf_dir):
-    """Snowflake join chain region <- nation <- customer <- orders; the
-    genuinely bounded dims (nation 25 rows, region 5 rows) broadcast,
-    while ``customer`` — linear in scale factor — is hint-free so the
-    planner/AQE picks broadcast at small sf and shuffle at 100x."""
-    region = _t(spark, sf_dir, "region")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        orders.join(
-            cust.select("c_custkey", "c_nationkey"),
-            orders["o_custkey"] == cust["c_custkey"],
-        )
-        .join(
-            F.broadcast(nation.select("n_nationkey", "n_regionkey")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(region),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .groupBy("r_name")
-        .agg(
-            F.sum(cents("o_totalprice")).alias("revenue_cents"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .orderBy("r_name")
-    )
-
-
-ORACLE_TPCH_REGION_REVENUE = """
-SELECT r.r_name,
-       CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents,
-       count(*) AS n_orders
-FROM orders o
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-GROUP BY r.r_name
-ORDER BY r.r_name"""
-
-
-def q_tpch_shipping_priority(spark, sf_dir):
-    """Q3-shape: selective filters on both join sides, fact-fact join, agg,
-    deterministic top-10 — the canonical filtered-join-topk plan. Filters
-    push to both scans; the date filter keeps ~48% of ``orders``, which
-    still scales linearly, so the join is hint-free (AQE broadcasts it at
-    small sf, shuffles at 100x — a forced broadcast would OOM)."""
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1995-03-15")
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1995-03-15")
-    )
-    return (
-        li.join(
-            orders.select("o_orderkey", "o_orderdate"),
-            li["l_orderkey"] == orders["o_orderkey"],
-        )
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(
-            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-            .alias("revenue_cents"),
-        )
-        .select(
-            F.col("l_orderkey").cast("long").alias("orderkey"),
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            "revenue_cents",
-        )
-        .orderBy(F.desc("revenue_cents"), F.asc("orderkey"))
-        .limit(10)
-    )
-
-
-ORACLE_TPCH_SHIPPING = """
-SELECT l.l_orderkey::BIGINT AS orderkey,
-       strftime(o.o_orderdate, '%Y-%m-%d') AS orderdate,
-       CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)) AS BIGINT)
-         AS revenue_cents
-FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE o.o_orderdate < TIMESTAMP '1995-03-15'
-  AND l.l_shipdate > TIMESTAMP '1995-03-15'
-GROUP BY l.l_orderkey, o.o_orderdate
-ORDER BY revenue_cents DESC, orderkey
-LIMIT 10"""
-
-
-def q_tpch_parts_per_supplier(spark, sf_dir):
-    """Semi/anti-join pair: suppliers of large parts, suppliers with none."""
-    part = _t(spark, sf_dir, "part")
-    supp = _t(spark, sf_dir, "supplier")
-    li = _t(spark, sf_dir, "lineitem")
-    large = part.filter(F.col("p_size") >= 40).select("p_partkey")
-    ships_large = li.join(
-        F.broadcast(large), li["l_partkey"] == large["p_partkey"], "left_semi"
-    )
-    per_supp = ships_large.groupBy("l_suppkey").agg(
-        F.count(F.lit(1)).alias("n_large_shipments")
-    )
-    return (
-        supp.join(per_supp, supp["s_suppkey"] == per_supp["l_suppkey"], "left_outer")
-        .select(
-            F.col("s_suppkey").cast("long").alias("suppkey"),
-            "s_name",
-            F.coalesce("n_large_shipments", F.lit(0)).alias("n_large_shipments"),
-        )
-        .orderBy("suppkey")
-    )
-
-
-ORACLE_TPCH_PARTS_PER_SUPPLIER = """
-WITH large AS (SELECT p_partkey FROM part WHERE p_size >= 40),
-per_supp AS (
-  SELECT l_suppkey, count(*) AS n_large_shipments
-  FROM lineitem WHERE l_partkey IN (SELECT p_partkey FROM large)
-  GROUP BY l_suppkey
-)
-SELECT s.s_suppkey::BIGINT AS suppkey, s.s_name,
-       coalesce(p.n_large_shipments, 0) AS n_large_shipments
-FROM supplier s LEFT JOIN per_supp p ON s.s_suppkey = p.l_suppkey
-ORDER BY suppkey"""
-
-
-def q_events_funnel(spark, sf_dir):
-    """Ordered conversion funnel signup -> click -> purchase: each step's
-    qualifying event must be STRICTLY AFTER the user's previous step AND
-    within a 24-hour conversion window of it (the classic product-analytics
-    funnel — ordering + recency, not mere set intersection; the window is
-    what makes the steps discriminate on this corpus, whose median
-    signup-to-click gap is ~55h). Three keyed aggregations, each joining
-    the previous step's first-timestamp frame — per-user state never
-    leaves the executors."""
-    from tika_xapian_spark.operators.funnel import conversion_funnel
-
-    return conversion_funnel(
-        _t(spark, sf_dir, "events"), ("signup", "click", "purchase")
-    )
-
-
-ORACLE_EVENTS_FUNNEL = _funnel_oracle_sql(("signup", "click", "purchase"))
-
-
-def q_tpch_local_supplier_volume(spark, sf_dir):
-    """Q5-shape (local supplier volume): the canonical snowflake +
-    fact-fact plan — lineitem x orders (date-filtered) x supplier x
-    customer x nation x region with the classic local-supplier constraint
-    c_nationkey == s_nationkey; revenue per nation in one region. Only the
-    bounded dims broadcast (supplier sublinear at 1/10th of customer,
-    nation 25 rows, region filtered to 1); ``orders`` and ``customer`` are
-    facts that scale linearly, so those joins are hint-free — AQE picks
-    broadcast under the threshold at small sf and a shuffle join at 100x."""
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1995-01-01"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01"))
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
-        li.join(
-            orders.select("o_orderkey", "o_custkey"),
-            li["l_orderkey"] == F.col("o_orderkey"),
-        )
-        .join(
-            F.broadcast(supp.select("s_suppkey", "s_nationkey")),
-            li["l_suppkey"] == F.col("s_suppkey"),
-        )
-        .join(
-            cust.select("c_custkey", "c_nationkey"),
-            (F.col("o_custkey") == F.col("c_custkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(
-            F.broadcast(nation.select("n_nationkey", "n_name", "n_regionkey")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(region),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .groupBy("n_name")
-        .agg(
-            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-            .alias("revenue_cents"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy(F.desc("revenue_cents"), "n_name")
-    )
-
-
-ORACLE_TPCH_LOCAL_SUPPLIER = """
-SELECT n.n_name,
-       CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)) AS BIGINT)
-         AS revenue_cents,
-       count(*) AS n_items
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN customer c ON o.o_custkey = c.c_custkey AND c.c_nationkey = s.s_nationkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-WHERE r.r_name = 'ASIA'
-  AND o.o_orderdate >= TIMESTAMP '1995-01-01'
-  AND o.o_orderdate < TIMESTAMP '1997-01-01'
-GROUP BY n.n_name
-ORDER BY revenue_cents DESC, n.n_name"""
-
-
-def q_tpch_returned_items(spark, sf_dir):
-    """Q10-shape (returned item reporting): customers who returned items
-    ('R' lineitems in a date window), ranked by lost revenue — fact-fact
-    join with selective filters on both sides. Only ``nation`` (25 rows)
-    broadcasts; the filtered ``orders`` (~15%) and ``customer`` sides
-    scale linearly, so those joins are hint-free and left to AQE,
-    deterministic top-20."""
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1995-01-01"))
-        & (F.col("o_orderdate") < F.lit("1996-01-01"))
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    return (
-        li.join(
-            orders.select("o_orderkey", "o_custkey"),
-            li["l_orderkey"] == F.col("o_orderkey"),
-        )
-        .join(
-            cust.select("c_custkey", "c_name", "c_nationkey"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(
-            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-            .alias("revenue_cents"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .select(
-            F.col("c_custkey").cast("long").alias("custkey"),
-            "c_name",
-            "n_name",
-            "revenue_cents",
-            "n_items",
-        )
-        .orderBy(F.desc("revenue_cents"), "custkey")
-        .limit(20)
-    )
-
-
-ORACLE_TPCH_RETURNED = """
-SELECT c.c_custkey::BIGINT AS custkey, c.c_name, n.n_name,
-       CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)) AS BIGINT)
-         AS revenue_cents,
-       count(*) AS n_items
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-WHERE l.l_returnflag = 'R'
-  AND o.o_orderdate >= TIMESTAMP '1995-01-01'
-  AND o.o_orderdate < TIMESTAMP '1996-01-01'
-GROUP BY c.c_custkey, c.c_name, n.n_name
-ORDER BY revenue_cents DESC, custkey
-LIMIT 20"""
-
-
-def q_tpch_promo_revenue(spark, sf_dir):
-    """Q14-shape (promotion effect), widened to a per-month series: promo
-    vs total revenue per ship-month over one year. ``part`` scales
-    linearly with SF in TPC-H (200k rows/SF), so the lineitem×part join is
-    hint-free — AQE broadcasts it under the threshold at small sf and
-    falls back to a shuffle join at 100×. The promo share is emitted as
-    the exact (promo_cents, total_cents) pair rather than a ratio: a
-    bigint×bigint division would route through double and lose exactness
-    above 2^53."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01"))
-    )
-    part = _t(spark, sf_dir, "part")
-    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    return (
-        li.join(
-            part.select("p_partkey", "p_type"),
-            li["l_partkey"] == F.col("p_partkey"),
-        )
-        .groupBy(F.date_trunc("month", "l_shipdate").alias("ship_month"))
-        .agg(
-            F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0)))
-            .alias("promo_cents"),
-            F.sum(rev).alias("total_cents"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy("ship_month")
-    )
-
-
-ORACLE_TPCH_PROMO = """
-SELECT date_trunc('month', l.l_shipdate)::TIMESTAMP AS ship_month,
-       CAST(sum(CASE WHEN p.p_type = 'PROMO'
-                THEN CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)
-                ELSE 0 END) AS BIGINT) AS promo_cents,
-       CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)) AS BIGINT)
-         AS total_cents,
-       count(*) AS n_items
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l.l_shipdate < TIMESTAMP '1997-01-01'
-GROUP BY 1
-ORDER BY 1"""
 
 
 def q_tpch_order_priority(spark, sf_dir):
@@ -623,637 +88,6 @@ WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
                 AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
 GROUP BY 1
 ORDER BY 1"""
-
-
-def q_events_asof_attribution(spark, sf_dir):
-    """AS-OF join — the classic time-series operator Spark has no builtin
-    for: attribute every purchase to the same user's most recent click at
-    or before the purchase instant (marketing last-touch attribution).
-
-    Implemented with ZERO join: union the two tagged event streams, one
-    Exchange on user_id, and a running last-click window carries the as-of
-    state into each purchase row. An equi+range join would shuffle both
-    sides on the same key and then pay an extra sort-merge with range
-    dedup; the union form is one shuffle + one sort and never materializes
-    candidate pairs, so it survives users with millions of events. Window
-    order (ts, is_purchase, event_id) makes ties deterministic: a click at
-    exactly the purchase ts counts (sorts first), and among same-ts clicks
-    the highest event_id wins.
-
-    The oracle is DuckDB's NATIVE `ASOF LEFT JOIN` — an independent
-    implementation of the semantics, not a mirror of this plan (the
-    synthetic clicks are (user_id, ts)-unique at every sf, so ASOF's
-    same-ts tie is never exercised and both definitions coincide)."""
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id", F.lit(0).alias("is_purchase")
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "event_id", F.lit(1).alias("is_purchase")
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "is_purchase", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    last_click = F.last(
-        F.when(
-            F.col("is_purchase") == 0,
-            F.struct(
-                F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id")
-            ),
-        ),
-        ignorenulls=True,
-    ).over(w)
-    return (
-        clicks.unionByName(purchases)
-        .withColumn("_lc", last_click)
-        .filter(F.col("is_purchase") == 1)
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-            F.col("_lc.click_id").alias("click_id"),
-            F.col("_lc.click_ts").alias("click_ts"),
-            # ts is TIMESTAMP_NTZ; timestampdiff accepts NTZ where
-            # unix_micros does not, and a wall-clock difference is exactly
-            # what the oracle's epoch_us(p.ts) - epoch_us(c.ts) computes.
-            F.expr("timestampdiff(MICROSECOND, _lc.click_ts, ts)").alias("gap_us"),
-        )
-        .orderBy("purchase_id")
-    )
-
-
-ORACLE_EVENTS_ASOF = """
-SELECT p.event_id AS purchase_id, p.user_id, p.ts AS purchase_ts,
-       c.event_id AS click_id, c.ts AS click_ts,
-       epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-  ON p.user_id = c.user_id AND p.ts >= c.ts
-ORDER BY purchase_id"""
-
-
-def q_events_stream_interval_join(spark, sf_dir):
-    """Stream-STREAM interval join (streaming/joins.py): same-user
-    (click, purchase) pairs with the purchase within 1 hour of the click,
-    run as a watermarked two-stream Structured Streaming join over
-    time-ordered micro-batches. Inner interval joins emit eagerly, so one
-    availableNow pass yields the complete pair set == the batch range
-    join, which is what the SQL oracle computes."""
-    from ..streaming.joins import run_stream_interval_join
-    from .workdirs import work_dir
-
-    work = work_dir("stream_interval_join", f"{sf_dir}/events.parquet", fresh=True)
-    return (
-        run_stream_interval_join(spark, f"{sf_dir}/events.parquet", work)
-        .orderBy("purchase_id", "click_id")
-        .localCheckpoint()
-    )
-
-
-ORACLE_EVENTS_INTERVAL_JOIN = """
-SELECT p.user_id, c.event_id AS click_id, c.ts AS click_ts,
-       p.event_id AS purchase_id, p.ts AS purchase_ts,
-       epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-JOIN (SELECT * FROM events WHERE event_type = 'click') c
-  ON p.user_id = c.user_id
- AND p.ts >= c.ts
- AND p.ts <= c.ts + INTERVAL 1 HOUR
-ORDER BY purchase_id, click_id"""
-
-
-def q_events_stream_kmv(spark, sf_dir):
-    """Distinct-user KMV sketch as a custom STATEFUL streaming operator
-    (streaming/sketch_stream.py): per event-type state is the k smallest
-    distinct user hashes — constant size, exactly mergeable across
-    micro-batches — finalized by a per-type sentinel across a checkpointed
-    restart. The final sketch equals the batch sketch over the same rows,
-    so a plain-SQL oracle gates the streaming path."""
-    from ..streaming.sketch_stream import run_stream_kmv
-    from .workdirs import work_dir
-
-    work = work_dir("stream_kmv", f"{sf_dir}/events.parquet", fresh=True)
-    return (
-        run_stream_kmv(spark, f"{sf_dir}/events.parquet", work)
-        .orderBy("event_type")
-        .localCheckpoint()
-    )
-
-
-def _stream_kmv_oracle() -> str:
-    from ..operators.sketches import KMV_K, KMV_SPACE
-
-    return f"""
-WITH kmv_h AS (
-  SELECT DISTINCT event_type,
-         ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
-  FROM events
-),
-kmv_ranked AS (
-  SELECT event_type, h,
-         row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
-  FROM kmv_h
-),
-kmv_agg AS (
-  SELECT event_type, max(h) AS h_k, count(*) AS n_mins
-  FROM kmv_ranked WHERE rn <= {KMV_K} GROUP BY event_type
-)
-SELECT event_type,
-       CAST(CASE WHEN n_mins < {KMV_K} THEN n_mins
-            ELSE floor({float(KMV_K - 1)} * {KMV_SPACE} / h_k) END AS BIGINT)
-         AS kmv_estimate
-FROM kmv_agg ORDER BY event_type"""
-
-
-def q_events_stream_cms(spark, sf_dir):
-    """Count-min sketch as a custom STATEFUL streaming operator
-    (streaming/cms_stream.py): per event-type state is the depth x width
-    counter matrix — constant size, exactly mergeable by addition across
-    micro-batches — finalized by a per-type sentinel across a checkpointed
-    restart. The emitted nonzero-cell table equals the batch sketch over
-    the same rows, so a plain-SQL oracle gates the streaming path."""
-    from ..streaming.cms_stream import run_stream_cms
-    from .workdirs import work_dir
-
-    work = work_dir("stream_cms", f"{sf_dir}/events.parquet", fresh=True)
-    return (
-        run_stream_cms(spark, f"{sf_dir}/events.parquet", work)
-        .orderBy("event_type", "r", "bucket")
-        .localCheckpoint()
-    )
-
-
-def _stream_cms_oracle() -> str:
-    from ..operators.sketches import CMS_DEPTH, CMS_WIDTH
-
-    return f"""
-WITH cms_b AS (
-  SELECT e.event_type, CAST(r.r AS INT) AS r,
-         CAST(('0x' || substr(md5(r.r::VARCHAR || ':' || e.user_id::VARCHAR),
-               1, 15))::BIGINT % {CMS_WIDTH} AS INT) AS bucket
-  FROM events e CROSS JOIN (SELECT unnest(range(0, {CMS_DEPTH})) AS r) r
-)
-SELECT event_type, r, bucket, CAST(count(*) AS BIGINT) AS cell
-FROM cms_b GROUP BY event_type, r, bucket
-ORDER BY event_type, r, bucket"""
-
-
-PARETO_FRACS = (1, 5, 10, 25, 50)  # top-f% probes
-
-
-def q_events_value_pareto(spark, sf_dir):
-    """Revenue concentration (the 80/20 table): for each probe fraction
-    f, the share of total spend held by users at or above the (1-f)
-    spend quantile — whale-dependence in one bounded table. "Top f%" is
-    DEFINED by the quantile threshold (ties included on both sides), so
-    no global rank window over the user population exists anywhere: one
-    per-user aggregation (spend integerized pre-sum), one percentile
-    aggregate broadcast back, a constant probe fan-out. At 10^12 events
-    that is two corpus-free dict passes after the per-user groupBy."""
-    ev = _t(spark, sf_dir, "events")
-    per = ev.groupBy("user_id").agg(
-        F.sum(F.round(F.col("value") * 1_000_000).cast("long")).alias(
-            "spend_micro"
-        )
-    )
-    cuts = F.broadcast(
-        per.agg(
-            F.sum("spend_micro").alias("_total"),
-            *[
-                F.percentile("spend_micro", 1.0 - f / 100.0).alias(f"_q{f}")
-                for f in PARETO_FRACS
-            ],
-        )
-    )
-    probes = per.crossJoin(cuts).select(
-        "spend_micro",
-        "_total",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(f).cast("int").alias("top_pct"),
-                        F.col(f"_q{f}").alias("cut"),
-                    )
-                    for f in PARETO_FRACS
-                ]
-            )
-        ).alias("p"),
-    )
-    return (
-        probes.filter(F.col("spend_micro") >= F.col("p.cut"))
-        .groupBy(F.col("p.top_pct").alias("top_pct"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_users"),
-            F.expr(
-                "CAST(sum(spend_micro) * 1000000 div first(_total) AS BIGINT)"
-            ).alias("share_micro"),
-        )
-        .orderBy("top_pct")
-    )
-
-
-def _pareto_oracle() -> str:
-    cuts = ", ".join(
-        f"quantile_cont(spend_micro, {1.0 - f / 100.0}) AS q{f}"
-        for f in PARETO_FRACS
-    )
-    probes = ", ".join(f"({f}, 'q{f}')" for f in PARETO_FRACS)
-    branches = " ".join(
-        f"WHEN 'q{f}' THEN q{f}" for f in PARETO_FRACS
-    )
-    return f"""
-WITH pv_per AS (
-  SELECT user_id,
-         CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT)
-           AS spend_micro
-  FROM events GROUP BY user_id
-),
-pv_cuts AS (
-  SELECT CAST(sum(spend_micro) AS BIGINT) AS total, {cuts} FROM pv_per
-),
-pv_probes(top_pct, qname) AS (VALUES {probes}),
-pv_j AS (
-  SELECT CAST(p.top_pct AS INT) AS top_pct, e.spend_micro, c.total,
-         (CASE p.qname {branches} END) AS cut
-  FROM pv_per e CROSS JOIN pv_cuts c CROSS JOIN pv_probes p
-)
-SELECT top_pct,
-       CAST(count(*) AS BIGINT) AS n_users,
-       CAST(sum(spend_micro) * 1000000 // max(total) AS BIGINT) AS share_micro
-FROM pv_j WHERE spend_micro >= cut
-GROUP BY top_pct ORDER BY top_pct"""
-
-
-def q_events_rfm_segments(spark, sf_dir):
-    """RFM segmentation (recency / frequency / monetary quartiles) — the
-    classic lifecycle-marketing rollup. Per-user metrics are ONE
-    map-side-combined aggregation (spend integerized per row BEFORE the
-    sum — raw double sums are partial-order-dependent); quartile CUTS
-    come from three F.percentile aggregates (== quantile_cont) broadcast
-    back, and each score is 1 + the count of cuts strictly below the
-    user's metric — NO global ntile window, which would single-partition
-    billions of users at web scale. Recency compares the user's last
-    event to the corpus max (timestampdiff — events.ts is TIMESTAMP_NTZ).
-    Output: (r, f, m, n_users), bounded by the 64 segments."""
-    ev = _t(spark, sf_dir, "events")
-    per = ev.groupBy("user_id").agg(
-        F.max("ts").alias("last_ts"),
-        F.count(F.lit(1)).cast("long").alias("freq"),
-        F.sum(F.round(F.col("value") * 1_000_000).cast("long")).alias(
-            "spend_micro"
-        ),
-    )
-    corpus_max = F.broadcast(per.agg(F.max("last_ts").alias("_maxts")))
-    scored = per.crossJoin(corpus_max).withColumn(
-        "rec_us",
-        F.expr("timestampdiff(MICROSECOND, last_ts, _maxts)").cast("long"),
-    )
-    cuts = F.broadcast(
-        scored.agg(
-            *[
-                F.percentile(c, q).alias(f"{c}_{int(q * 100)}")
-                for c in ("rec_us", "freq", "spend_micro")
-                for q in (0.25, 0.5, 0.75)
-            ]
-        )
-    )
-
-    def score(col, invert):
-        # quartile score 1..4; for recency SMALLER is better (invert)
-        s = F.lit(1)
-        for q in (25, 50, 75):
-            above = F.col(col) > F.col(f"{col}_{q}")
-            s = s + (~above if invert else above).cast("int")
-        return s
-
-    seg = scored.crossJoin(cuts).select(
-        score("rec_us", True).alias("r"),
-        score("freq", False).alias("f"),
-        score("spend_micro", False).alias("m"),
-    )
-    return (
-        seg.groupBy("r", "f", "m")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_users"))
-        .orderBy("r", "f", "m")
-    )
-
-
-def _rfm_oracle() -> str:
-    cuts = ", ".join(
-        f"quantile_cont({c}, {q}) AS {c}_{int(q * 100)}"
-        for c in ("rec_us", "freq", "spend_micro")
-        for q in (0.25, 0.5, 0.75)
-    )
-
-    def score(col, op):
-        return " + ".join(
-            f"(CASE WHEN {col} {op} {col}_{q} THEN 1 ELSE 0 END)"
-            for q in (25, 50, 75)
-        )
-
-    return f"""
-WITH rfm_per AS (
-  SELECT user_id, max(ts) AS last_ts,
-         CAST(count(*) AS BIGINT) AS freq,
-         CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT)
-           AS spend_micro
-  FROM events GROUP BY user_id
-),
-rfm_mx AS (SELECT max(last_ts) AS maxts FROM rfm_per),
-rfm_sc AS (
-  SELECT p.*, epoch_us(m.maxts) - epoch_us(p.last_ts) AS rec_us
-  FROM rfm_per p CROSS JOIN rfm_mx m
-),
-rfm_cuts AS (SELECT {cuts} FROM rfm_sc),
-rfm_seg AS (
-  SELECT CAST(1 + {score("rec_us", "<=")} AS INT) AS r,
-         CAST(1 + {score("freq", ">")} AS INT) AS f,
-         CAST(1 + {score("spend_micro", ">")} AS INT) AS m
-  FROM rfm_sc CROSS JOIN rfm_cuts
-)
-SELECT r, f, m, CAST(count(*) AS BIGINT) AS n_users
-FROM rfm_seg GROUP BY r, f, m ORDER BY r, f, m"""
-
-
-PATH_TOP = 15
-
-
-def q_events_path_ngrams(spark, sf_dir):
-    """User-journey trigram mining: the most common 3-step event-type
-    sequences across users — the path-analysis table behind funnel
-    DISCOVERY (events_funnel checks a known path; this surfaces the paths
-    worth checking). Per user: one ordered collect (ts, event_id
-    tie-break — array_sort on the struct equals the oracle's ORDER BY),
-    then trigrams via zipped SHIFTED SLICES so the lambda touches only
-    its zipped elements (the round-6 HOF rule), one count shuffle,
-    bounded top-k. Per-user state is that user's own event list — the
-    same bound sessionization carries; a power-user cap would compose in
-    front at 10^12 events (cap_per_host's two-level top-k shape)."""
-    ev = _t(spark, sf_dir, "events")
-    seqs = ev.groupBy("user_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("ts", "event_id", "event_type"))
-        ).alias("s")
-    )
-    staged = seqs.select(
-        F.transform(F.col("s"), lambda x: x["event_type"]).alias("t")
-    ).select("t", F.greatest(F.size("t") - 2, F.lit(0)).alias("n3"))
-    tri = staged.select(
-        F.explode(
-            F.transform(
-                F.arrays_zip(
-                    F.slice("t", 1, F.col("n3")),
-                    F.slice("t", 2, F.col("n3")),
-                    F.slice("t", 3, F.col("n3")),
-                ),
-                lambda x: F.concat_ws(">", x["0"], x["1"], x["2"]),
-            )
-        ).alias("path")
-    )
-    return (
-        tri.groupBy("path")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .orderBy(F.desc("n"), "path")
-        .limit(PATH_TOP)
-    )
-
-
-ORACLE_EVENTS_PATH_NGRAMS = f"""
-WITH pn_seq AS (
-  SELECT user_id, list(event_type ORDER BY ts, event_id) AS t
-  FROM events GROUP BY user_id
-),
-pn_tri AS (
-  SELECT unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-           i -> array_to_string(list_slice(t, i, i + 2), '>'))) AS path
-  FROM pn_seq WHERE len(t) >= 3
-)
-SELECT path, CAST(count(*) AS BIGINT) AS n
-FROM pn_tri GROUP BY path
-ORDER BY n DESC, path LIMIT {PATH_TOP}"""
-
-
-def q_events_anomaly_mad(spark, sf_dir):
-    """Robust daily-volume anomaly detection per event type — deviation in
-    MAD units (median absolute deviation x the 1.4826 normal-consistency
-    constant), the monitoring rule ops dashboards run because mean/stddev
-    are themselves dragged by the outliers they're meant to flag. Two
-    bounded median aggregations (F.percentile == DuckDB quantile_cont,
-    identical linear interpolation) over the (type, day) grid — the grid,
-    not the event stream, is all that shuffles twice; the event-scale work
-    is ONE map-side-combined groupBy. The median frames are genuine
-    dimensions (one row per event type), so the broadcast hints are safe
-    at any corpus size. mad = 0 (a constant-volume type) yields NULL
-    dev_micro and anomalous = 0 in both engines."""
-    ev = _t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type"), F.date_trunc("day", "ts").alias("day")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    med = daily.groupBy("event_type").agg(
-        F.percentile("n_events", 0.5).alias("med")
-    )
-    with_dev = daily.join(F.broadcast(med), "event_type").withColumn(
-        "adev", F.abs(F.col("n_events") - F.col("med"))
-    )
-    mad = with_dev.groupBy("event_type").agg(F.percentile("adev", 0.5).alias("mad"))
-    scored = with_dev.join(F.broadcast(mad), "event_type").select(
-        "event_type",
-        "day",
-        "n_events",
-        F.round(
-            F.expr("adev / nullif(1.4826 * mad, CAST(0 AS DOUBLE)) * 1000000")
-        )
-        .cast("long")
-        .alias("dev_micro"),
-    )
-    return scored.withColumn(
-        "anomalous",
-        (F.coalesce(F.col("dev_micro"), F.lit(0)) > 3_000_000).cast("int"),
-    ).orderBy("event_type", "day")
-
-
-ORACLE_EVENTS_ANOMALY_MAD = """
-WITH am_daily AS (
-  SELECT event_type, date_trunc('day', ts)::TIMESTAMP AS day,
-         CAST(count(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1, 2
-),
-am_med AS (
-  SELECT event_type, quantile_cont(n_events, 0.5) AS med
-  FROM am_daily GROUP BY 1
-),
-am_dev AS (
-  SELECT d.*, abs(d.n_events - m.med) AS adev
-  FROM am_daily d JOIN am_med m USING (event_type)
-),
-am_mad AS (
-  SELECT event_type, quantile_cont(adev, 0.5) AS mad FROM am_dev GROUP BY 1
-),
-am_scored AS (
-  SELECT d.event_type, d.day, d.n_events,
-         CAST(round(d.adev / nullif(1.4826 * m.mad, 0) * 1000000) AS BIGINT)
-           AS dev_micro
-  FROM am_dev d JOIN am_mad m USING (event_type)
-)
-SELECT event_type, day, n_events, dev_micro,
-       CASE WHEN coalesce(dev_micro, 0) > 3000000 THEN 1 ELSE 0 END AS anomalous
-FROM am_scored ORDER BY event_type, day"""
-
-
-def q_events_trailing_window(spark, sf_dir):
-    """RANGE-frame window — the time-based sliding frame ROWS frames can't
-    express: per event, the same user's event count and spend over the
-    trailing hour INCLUDING this event. Ordering key is integer epoch
-    micros via ``timestampdiff`` from a literal epoch (``ts`` is
-    TIMESTAMP_NTZ, which unix_micros rejects; integer keys also make the
-    3600s frame bound exact in both engines — DuckDB's ``epoch()`` returns
-    fractional-second doubles whose frame edges could disagree). RANGE
-    aggregates are peer-order independent, so exact integer outputs are
-    deterministic without any tiebreak column."""
-    ev = _t(spark, sf_dir, "events")
-    us = F.expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(us.alias("_us"))
-        .rangeBetween(-3600 * 1_000_000, 0)
-    )
-    return (
-        ev.select(
-            "event_id",
-            "user_id",
-            "ts",
-            F.count(F.lit(1)).over(w).alias("trailing_n"),
-            F.sum(cents("value")).over(w).alias("trailing_sum_cents"),
-        )
-        .orderBy("event_id")
-    )
-
-
-ORACLE_EVENTS_TRAILING = """
-SELECT event_id, user_id, ts,
-       count(*) OVER w AS trailing_n,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) OVER w AS BIGINT)
-         AS trailing_sum_cents
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-ORDER BY event_id"""
-
-
-EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def q_events_pivot(spark, sf_dir):
-    """PIVOT — long-to-wide reshaping: per-user event counts, one column
-    per event type, plus purchase spend. The pivot VALUES ARE LISTED
-    EXPLICITLY: an unlisted ``pivot()`` first runs a driver-side distinct
-    collect over the pivot column to discover the keys — an extra job and
-    an unbounded driver list at web scale. Listed, the pivot compiles to
-    one conditional aggregation (a single groupBy(user_id) shuffle), which
-    is exactly the SQL oracle's shape."""
-    ev = _t(spark, sf_dir, "events")
-    agged = (
-        ev.groupBy("user_id")
-        .pivot("event_type", EVENT_TYPES)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(cents("value")).alias("spend_cents"),
-        )
-    )
-    return agged.select(
-        "user_id",
-        *[
-            F.coalesce(F.col(f"{t}_n"), F.lit(0)).alias(f"n_{t}")
-            for t in EVENT_TYPES
-        ],
-        F.coalesce(F.col("purchase_spend_cents"), F.lit(0)).alias(
-            "purchase_spend_cents"
-        ),
-    ).orderBy("user_id")
-
-
-ORACLE_EVENTS_PIVOT = """
-SELECT user_id,
-       count(*) FILTER (event_type = 'click')    AS n_click,
-       count(*) FILTER (event_type = 'error')    AS n_error,
-       count(*) FILTER (event_type = 'purchase') AS n_purchase,
-       count(*) FILTER (event_type = 'signup')   AS n_signup,
-       count(*) FILTER (event_type = 'view')     AS n_view,
-       CAST(coalesce(sum(CAST(round(value * 100) AS BIGINT))
-              FILTER (event_type = 'purchase'), 0) AS BIGINT)
-         AS purchase_spend_cents
-FROM events
-GROUP BY user_id
-ORDER BY user_id"""
-
-
-def q_tpch_nation_volume(spark, sf_dir):
-    """Q7-shape (volume shipping): revenue flowing between two nations per
-    ship-year, in both directions. The two nation lookups broadcast (25
-    rows, genuinely bounded); ``supplier``, ``orders`` and ``customer``
-    scale with SF and are hint-free — AQE picks broadcast at toy sf and a
-    shuffle join at 100x. The nation-pair filter is applied right after
-    the two (tiny) dimension joins so the fact-fact joins that follow see
-    only the ~8% of lineitem rows in scope."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1995-01-01"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01"))
-    )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    n1 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")
-    )
-    pair = (
-        ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
-        | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    )
-    return (
-        li.join(supp, li["l_suppkey"] == F.col("s_suppkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .join(orders, li["l_orderkey"] == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
-        .filter(pair)
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").cast("int").alias("ship_year"),
-        )
-        .agg(
-            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-            .alias("revenue_cents"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy("supp_nation", "cust_nation", "ship_year")
-    )
-
-
-ORACLE_TPCH_NATION_VOLUME = """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       year(l.l_shipdate)::INT AS ship_year,
-       CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)) AS BIGINT)
-         AS revenue_cents,
-       count(*) AS n_items
-FROM lineitem l
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-WHERE l.l_shipdate >= TIMESTAMP '1995-01-01'
-  AND l.l_shipdate < TIMESTAMP '1997-01-01'
-  AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-GROUP BY 1, 2, 3
-ORDER BY 1, 2, 3"""
 
 
 def q_tpch_rollup_revenue(spark, sf_dir):
@@ -1383,111 +217,6 @@ GROUP BY 1
 ORDER BY n_customers DESC, n_orders DESC"""
 
 
-def q_tpch_large_volume_customers(spark, sf_dir):
-    """Q18-shape (large-volume customers): orders whose total lineitem
-    quantity exceeds 250, joined back to orders+customer. The HAVING filter
-    runs on the pre-aggregated (one row per order) frame, so the join-back
-    probe is the filtered ~3% of orders, not the fact table; ``orders`` and
-    ``customer`` stay hint-free (AQE broadcasts the tiny filtered build
-    side at any sf). Quantities compare in exact integer centi-units."""
-    li = _t(spark, sf_dir, "lineitem")
-    ql = F.round(F.col("l_quantity") * 100).cast("long")
-    big = (
-        li.groupBy(F.col("l_orderkey").alias("lk"))
-        .agg(F.sum(ql).alias("sum_ql"))
-        .filter(F.col("sum_ql") > 250 * 100)
-    )
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        big.join(orders, F.col("lk") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "c_name",
-            F.col("c_custkey").cast("long").alias("custkey"),
-            F.col("o_orderkey").cast("long").alias("orderkey"),
-            "o_orderdate",
-            cents("o_totalprice").alias("totalprice_cents"),
-            "sum_ql",
-        )
-        .orderBy(F.desc("totalprice_cents"), "orderkey")
-        .limit(100)
-    )
-
-
-ORACLE_TPCH_LARGE_VOLUME = """
-SELECT c.c_name, c.c_custkey::BIGINT AS custkey,
-       o.o_orderkey::BIGINT AS orderkey, o.o_orderdate,
-       CAST(round(o.o_totalprice * 100) AS BIGINT) AS totalprice_cents,
-       big.sum_ql
-FROM (
-  SELECT l_orderkey, CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS sum_ql
-  FROM lineitem GROUP BY 1 HAVING sum_ql > 25000
-) big
-JOIN orders o ON big.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-ORDER BY totalprice_cents DESC, orderkey
-LIMIT 100"""
-
-
-def q_tpch_sales_opportunity(spark, sf_dir):
-    """Q22-shape (global sales opportunity): per market segment, the count
-    and balance of above-average-balance customers with NO order since
-    2000-06-01 — the scalar-subquery + ANTI-join pattern. The global
-    average is a broadcast 1-row aggregate crossJoined in (one extra tiny
-    stage, no second pass over customer); the anti join probes ``customer``
-    against the date-filtered orders projection — LEFT ANTI never
-    materializes match multiplicity, so the probe side stays one row per
-    customer through the shuffle. The avg-balance cutoff compares in exact
-    integer cents (sum_cents * 1 vs bal_cents * n avoids a float average):
-    ``bal > sum/n  ⇔  bal_cents * n > sum_cents``."""
-    cust = _t(spark, sf_dir, "customer")
-    bal_cents = cents("c_acctbal")
-    avg_pos = (
-        cust.filter(F.col("c_acctbal") > 0)
-        .agg(
-            F.sum(bal_cents).alias("sum_cents"),
-            F.count(F.lit(1)).alias("n_pos"),
-        )
-    )
-    recent = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") >= F.lit("2000-06-01"))
-        .select("o_custkey")
-    )
-    return (
-        cust.crossJoin(F.broadcast(avg_pos))
-        .filter(bal_cents * F.col("n_pos") > F.col("sum_cents"))
-        .join(recent, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.sum(bal_cents).alias("acctbal_cents"),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-ORACLE_TPCH_SALES_OPPORTUNITY = """
-WITH avg_pos AS (
-  SELECT CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-         count(*) AS n_pos
-  FROM customer WHERE c_acctbal > 0
-)
-SELECT c.c_mktsegment,
-       count(*) AS n_customers,
-       CAST(sum(CAST(round(c.c_acctbal * 100) AS BIGINT)) AS BIGINT) AS acctbal_cents
-FROM customer c, avg_pos a
-WHERE CAST(round(c.c_acctbal * 100) AS BIGINT) * a.n_pos > a.sum_cents
-  AND NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderdate >= TIMESTAMP '2000-06-01')
-GROUP BY 1
-ORDER BY 1"""
-
-
 def q_tpch_revenue_forecast(spark, sf_dir):
     """Q6-shape (forecasting revenue change): one year of shipments in a
     narrow discount band and below a quantity cap, summed — the pure
@@ -1579,81 +308,6 @@ GROUP BY 1
 ORDER BY 1"""
 
 
-MARKET_SHARE_REGION = "ASIA"
-MARKET_SHARE_NATION = "NATION_7"
-
-
-def q_tpch_market_share(spark, sf_dir):
-    """Q8-shape (national market share): within one customer region, the
-    share of revenue supplied by one nation, per order year — the
-    two-role-dimension join (``nation`` joins twice: once as the
-    customer's nation restricted through ``region``, once as the
-    supplier's). Join order is fact-first: lineitem⋈orders is the one
-    genuine big-big shuffle, customer joins hint-free (AQE), and both
-    nation roles + region + supplier ride explicit broadcasts (O(25), O(5)
-    and O(10k/SF) rows — ``supplier`` is TPC-H's smallest linear table,
-    10k/SF ≈ 1M rows at SF100 ≈ tens of MB, still broadcastable; the
-    VERDICT-r5 rule of thumb: hint only what stays under the threshold at
-    100×). Share is emitted as the exact (nation_cents, total_cents) pair
-    — no bigint/bigint division through double."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region").filter(
-        F.col("r_name") == MARKET_SHARE_REGION
-    )
-    cust_nat = (
-        nat.join(F.broadcast(reg), nat["n_regionkey"] == reg["r_regionkey"])
-        .select(F.col("n_nationkey").alias("cn_key"))
-    )
-    supp_nat = nat.select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    return (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(cust, F.col("o_custkey") == cust["c_custkey"])
-        .join(F.broadcast(cust_nat), cust["c_nationkey"] == F.col("cn_key"))
-        .join(F.broadcast(supp), li["l_suppkey"] == supp["s_suppkey"])
-        .join(F.broadcast(supp_nat), supp["s_nationkey"] == F.col("sn_key"))
-        .groupBy(F.year("o_orderdate").cast("long").alias("order_year"))
-        .agg(
-            F.sum(
-                F.when(F.col("supp_nation") == MARKET_SHARE_NATION, rev)
-                .otherwise(F.lit(0))
-            ).alias("nation_cents"),
-            F.sum(rev).alias("total_cents"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy("order_year")
-    )
-
-
-ORACLE_TPCH_MARKET_SHARE = f"""
-SELECT year(o.o_orderdate)::BIGINT AS order_year,
-       CAST(sum(CASE WHEN sn.n_name = '{MARKET_SHARE_NATION}'
-                THEN CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)
-                ELSE 0 END) AS BIGINT) AS nation_cents,
-       CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)) AS BIGINT)
-         AS total_cents,
-       count(*) AS n_items
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-JOIN region r ON cn.n_regionkey = r.r_regionkey AND r.r_name = '{MARKET_SHARE_REGION}'
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-GROUP BY 1
-ORDER BY 1"""
-
-
 LATE_SHIP_DAYS = 60
 
 
@@ -1696,782 +350,26 @@ GROUP BY 1
 ORDER BY 1"""
 
 
-def q_events_retention_cohorts(spark, sf_dir):
-    """Weekly retention-cohort matrix: users grouped by first-activity
-    week, counted at each week offset — the standard product-analytics
-    triangle. Shapes: one distinct over (user, week) (the activity grid —
-    already the minimal row set, so the per-cell count needs NO
-    countDistinct), a per-user min to pin the cohort, and the offset
-    aggregate; the activity grid is localCheckpoint'ed because it feeds
-    both the cohort aggregate and the join probe. Week offsets floor()
-    in BOTH engines (a bare double→int cast truncates in Spark but
-    ROUNDS in DuckDB — a half-week boundary row would land in different
-    cells)."""
-    ev = _t(spark, sf_dir, "events")
-    uw = (
-        ev.select("user_id", F.date_trunc("week", "ts").alias("week"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    first = uw.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
-    size = first.groupBy("cohort_week").agg(
-        F.count(F.lit(1)).cast("long").alias("cohort_size")
-    )
-    offset = F.floor(
-        F.datediff(F.col("week"), F.col("cohort_week")) / 7
-    ).cast("int")
-    return (
-        uw.join(first, "user_id")
-        .groupBy("cohort_week", offset.alias("week_offset"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_active"))
-        .join(size, "cohort_week")
-        .select("cohort_week", "week_offset", "n_active", "cohort_size")
-        .orderBy("cohort_week", "week_offset")
-    )
-
-
-ORACLE_EVENTS_RETENTION = """
-WITH uw AS (
-  SELECT DISTINCT user_id, date_trunc('week', ts)::TIMESTAMP AS week
-  FROM events
-),
-first_wk AS (
-  SELECT user_id, min(week) AS cohort_week FROM uw GROUP BY 1
-),
-csize AS (
-  SELECT cohort_week, count(*)::BIGINT AS cohort_size FROM first_wk GROUP BY 1
-),
-act AS (
-  SELECT f.cohort_week,
-         CAST(floor(date_diff('day', f.cohort_week, u.week) / 7.0) AS INT)
-           AS week_offset
-  FROM uw u JOIN first_wk f USING (user_id)
-)
-SELECT a.cohort_week, a.week_offset,
-       count(*)::BIGINT AS n_active, s.cohort_size
-FROM act a JOIN csize s USING (cohort_week)
-GROUP BY 1, 2, s.cohort_size
-ORDER BY 1, 2"""
-
-
-def q_tpch_top_supplier(spark, sf_dir):
-    """Q15-shape (top supplier): the supplier(s) whose revenue over one
-    quarter equals the maximum — the view + scalar-max pattern. The
-    per-supplier revenue aggregates ONCE (localCheckpoint: it feeds both
-    the max aggregate and the filter — a view referenced twice re-executes
-    per reference otherwise), the max rides as a broadcast 1-row
-    aggregate, and the equality filter compares exact integer cents so
-    "ties for the top" is well-defined in both engines (TPC-H's own Q15
-    wording anticipates ties). ``supplier`` is the bounded hinted
-    broadcast (10k/SF — smallest linear table, tens of MB at SF100)."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01"))
-    )
-    rev = (
-        li.groupBy(F.col("l_suppkey").alias("sk"))
-        .agg(
-            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-            .alias("total_revenue_cents")
-        )
-        .localCheckpoint()
-    )
-    mx = F.broadcast(rev.agg(F.max("total_revenue_cents").alias("_mx")))
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        rev.crossJoin(mx)
-        .filter(F.col("total_revenue_cents") == F.col("_mx"))
-        .join(F.broadcast(supp), F.col("sk") == F.col("s_suppkey"))
-        .select(
-            F.col("s_suppkey").cast("long").alias("suppkey"),
-            "s_name",
-            "total_revenue_cents",
-        )
-        .orderBy("suppkey")
-    )
-
-
-ORACLE_TPCH_TOP_SUPPLIER = """
-WITH rev AS (
-  SELECT l_suppkey,
-         CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT)
-           AS total_revenue_cents
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate < TIMESTAMP '1996-04-01'
-  GROUP BY 1
-)
-SELECT s.s_suppkey::BIGINT AS suppkey, s.s_name, r.total_revenue_cents
-FROM rev r JOIN supplier s ON r.l_suppkey = s.s_suppkey
-WHERE r.total_revenue_cents = (SELECT max(total_revenue_cents) FROM rev)
-ORDER BY suppkey"""
-
-
-def q_tpch_min_cost_supplier(spark, sf_dir):
-    """Q2-shape (minimum-cost supplier): for every ECONOMY part of size
-    <= 10, the EUROPE supplier(s) offering it at the minimum observed unit
-    price. The corpus has no ``partsupp`` table, so the part-supplier
-    catalog is *derived* from lineitem — min unit price (extendedprice /
-    quantity, exact cents) per (part, supplier) pair — which is itself the
-    realistic web-scale shape (catalogs distilled from fact logs). The
-    min-per-part is a window ``min`` over the region-eligible rows (ONE
-    hash shuffle on partkey), not a self-join; Q2's correlated subquery is
-    exactly this window. Broadcast hints only on genuinely bounded sides:
-    supplier (smallest linear table, 10k/SF) and nation; the filtered part
-    side is left to AQE (linear in SF, a hint would OOM at 100x — the r5
-    verdict lesson). Ref parity: reference TUI sort-by-value semantics
-    (src/tui_app.rs) over a relational plan; classic TPC-H Q2 shape."""
-    li = _t(spark, sf_dir, "lineitem")
-    ps = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.min(cents(F.col("l_extendedprice") / F.col("l_quantity"))).alias(
-            "supplycost_cents"
-        )
-    )
-    part = _t(spark, sf_dir, "part").filter(
-        (F.col("p_type") == "ECONOMY") & (F.col("p_size") <= 10)
-    ).select("p_partkey")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    snat = (
-        supp.join(
-            F.broadcast(
-                nat.join(
-                    F.broadcast(reg), nat.n_regionkey == reg.r_regionkey
-                ).select("n_nationkey", "n_name")
-            ),
-            supp.s_nationkey == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-    )
-    eligible = (
-        ps.join(part, ps.l_partkey == part.p_partkey)
-        .join(F.broadcast(snat), ps.l_suppkey == F.col("s_suppkey"))
-    )
-    w = Window.partitionBy("l_partkey")
-    return (
-        eligible.withColumn(
-            "_mn", F.min("supplycost_cents").over(w)
-        )
-        .filter(F.col("supplycost_cents") == F.col("_mn"))
-        .select(
-            cents("s_acctbal").alias("acctbal_cents"),
-            "s_name",
-            "n_name",
-            F.col("l_partkey").cast("long").alias("partkey"),
-            "supplycost_cents",
-        )
-        .orderBy(F.desc("acctbal_cents"), "n_name", "s_name", "partkey")
-    )
-
-
-ORACLE_TPCH_MIN_COST_SUPPLIER = """
-WITH ps AS (
-  SELECT l_partkey, l_suppkey,
-         CAST(min(CAST(round(l_extendedprice / l_quantity * 100) AS BIGINT)) AS BIGINT)
-           AS supplycost_cents
-  FROM lineitem GROUP BY 1, 2
-), eligible AS (
-  SELECT ps.l_partkey, ps.supplycost_cents, s.s_name, s.s_acctbal, n.n_name
-  FROM ps
-  JOIN part p ON ps.l_partkey = p.p_partkey
-             AND p.p_type = 'ECONOMY' AND p.p_size <= 10
-  JOIN supplier s ON ps.l_suppkey = s.s_suppkey
-  JOIN nation n ON s.s_nationkey = n.n_nationkey
-  JOIN region r ON n.n_regionkey = r.r_regionkey AND r.r_name = 'EUROPE'
-)
-SELECT CAST(round(s_acctbal * 100) AS BIGINT) AS acctbal_cents, s_name, n_name,
-       l_partkey::BIGINT AS partkey, supplycost_cents
-FROM eligible e
-WHERE supplycost_cents = (SELECT min(supplycost_cents) FROM eligible e2
-                          WHERE e2.l_partkey = e.l_partkey)
-ORDER BY acctbal_cents DESC, n_name, s_name, partkey"""
-
-
-def q_tpch_important_parts(spark, sf_dir):
-    """Q11-shape (important stock): per-part value of lineitem shipped by
-    AFRICA (region 0) suppliers, keeping parts whose value exceeds 0.1% of
-    the regional total. The shared per-part aggregate materializes ONCE
-    (localCheckpoint — it feeds both the global total and the filter), the
-    total rides as a broadcast 1-row aggregate, and the threshold compare
-    is the integer cross-multiply ``value_cents * 1000 > total_cents`` so
-    no double fraction can diverge between engines. No hint on lineitem's
-    shuffle; supplier/nation broadcast (bounded)."""
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 0)
-    snat = supp.join(
-        F.broadcast(nat.select("n_nationkey")),
-        supp.s_nationkey == F.col("n_nationkey"),
-    ).select("s_suppkey")
-    val = (
-        li.join(F.broadcast(snat), li.l_suppkey == F.col("s_suppkey"))
-        .groupBy(F.col("l_partkey").alias("partkey"))
-        .agg(
-            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-            .alias("value_cents")
-        )
-        .localCheckpoint()
-    )
-    tot = F.broadcast(val.agg(F.sum("value_cents").alias("_tot")))
-    return (
-        val.crossJoin(tot)
-        .filter(F.col("value_cents") * 1000 > F.col("_tot"))
-        .select(F.col("partkey").cast("long").alias("partkey"), "value_cents")
-        .orderBy(F.desc("value_cents"), "partkey")
-    )
-
-
-ORACLE_TPCH_IMPORTANT_PARTS = """
-WITH val AS (
-  SELECT l_partkey AS partkey,
-         CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT)
-           AS value_cents
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey AND n_regionkey = 0
-  GROUP BY 1
-)
-SELECT partkey::BIGINT AS partkey, value_cents
-FROM val
-WHERE value_cents * 1000 > (SELECT sum(value_cents) FROM val)
-ORDER BY value_cents DESC, partkey"""
-
-
-def q_tpch_supplier_part_counts(spark, sf_dir):
-    """Q16-shape (supplier counts by part group): distinct suppliers per
-    (brand, type, size) over the lineitem-derived part-supplier pairs,
-    excluding one brand, PROMO parts, off-list sizes, and "complained
-    about" suppliers (negative account balance stands in for Q16's comment
-    scan — same anti-join shape). The exclusion is a broadcast LEFT ANTI
-    join (the excluded set is tiny); ``countDistinct`` gets Spark's
-    two-phase partial-distinct plan. The filtered part side is linear in
-    SF, so NO broadcast hint — AQE picks the strategy (r5 verdict rule)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    part = _t(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#5")
-        & (F.col("p_type") != "PROMO")
-        & F.col("p_size").isin(1, 5, 10, 15, 20, 25, 30, 35)
-    ).select("p_partkey", "p_brand", "p_type", "p_size")
-    bad = (
-        _t(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") < 0)
-        .select("s_suppkey")
-    )
-    pairs = li.join(F.broadcast(bad), li.l_suppkey == bad.s_suppkey, "left_anti")
-    return (
-        pairs.join(part, pairs.l_partkey == part.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
-    )
-
-
-ORACLE_TPCH_SUPPLIER_PART_COUNTS = """
-SELECT p_brand, p_type, p_size,
-       CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-WHERE p_brand <> 'Brand#5'
-  AND p_type <> 'PROMO'
-  AND p_size IN (1, 5, 10, 15, 20, 25, 30, 35)
-  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY 1, 2, 3
-ORDER BY supplier_cnt DESC, p_brand, p_type, p_size"""
-
-
-def q_tpch_waiting_suppliers(spark, sf_dir):
-    """Q21-shape (suppliers who kept orders waiting): suppliers that were
-    the ONLY late supplier on a multi-supplier finalized order ("late" =
-    shipped more than a year after the order date; the corpus has no
-    commit/receipt dates). Q21's EXISTS / NOT EXISTS double self-join is
-    rewritten as per-order aggregation — two groupBys, the first on
-    (order, supplier) deduping a supplier's multiple lines, the second on
-    order counting suppliers and late suppliers — which replaces two
-    shuffles of the full lineitem fact with one dedup shuffle plus one
-    order-level shuffle and never materializes the quadratic self-join.
-    The oracle keeps the classic EXISTS form so both derivations are
-    independent."""
-    ords = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus") == "F")
-        .select("o_orderkey", "o_orderdate")
-    )
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 365 DAYS")
-    per_pair = (
-        li.join(ords, li.l_orderkey == ords.o_orderkey)
-        .groupBy("l_orderkey", "l_suppkey")
-        .agg(F.max(late.cast("int")).alias("is_late"))
-    )
-    per_order = per_pair.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_supp"),
-        F.sum("is_late").alias("n_late_supp"),
-        F.min(F.when(F.col("is_late") == 1, F.col("l_suppkey"))).alias(
-            "late_supp"
-        ),
-    )
-    waits = per_order.filter(
-        (F.col("n_supp") >= 2) & (F.col("n_late_supp") == 1)
-    )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        waits.groupBy("late_supp")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .join(F.broadcast(supp), F.col("late_supp") == F.col("s_suppkey"))
-        .select(
-            F.col("s_suppkey").cast("long").alias("suppkey"),
-            "s_name",
-            "numwait",
-        )
-        .orderBy(F.desc("numwait"), "s_name")
-    )
-
-
-ORACLE_TPCH_WAITING_SUPPLIERS = """
-WITH l AS (
-  SELECT li.l_orderkey, li.l_suppkey,
-         (li.l_shipdate > o.o_orderdate + INTERVAL 365 DAY) AS is_late
-  FROM lineitem li JOIN orders o ON li.l_orderkey = o.o_orderkey
-  WHERE o.o_orderstatus = 'F'
-)
-SELECT s.s_suppkey::BIGINT AS suppkey, s.s_name,
-       CAST(count(*) AS BIGINT) AS numwait
-FROM (
-  SELECT DISTINCT l1.l_orderkey, l1.l_suppkey
-  FROM l l1
-  WHERE l1.is_late
-    AND EXISTS (SELECT 1 FROM l l2
-                WHERE l2.l_orderkey = l1.l_orderkey
-                  AND l2.l_suppkey <> l1.l_suppkey)
-    AND NOT EXISTS (SELECT 1 FROM l l3
-                    WHERE l3.l_orderkey = l1.l_orderkey
-                      AND l3.l_suppkey <> l1.l_suppkey
-                      AND l3.is_late)
-) w
-JOIN supplier s ON w.l_suppkey = s.s_suppkey
-GROUP BY 1, 2
-ORDER BY numwait DESC, s_name"""
-
-
-def q_tpch_product_profit(spark, sf_dir):
-    """Q9-shape (product-type profit by nation and year): revenue minus a
-    cost proxy for every 'red' part, rolled up per supplier nation per
-    ship year. The corpus has no ``ps_supplycost``, so cost is
-    ``quantity * p_retailprice * 0.5`` — same join graph (lineitem ⋈ part
-    ⋈ supplier ⋈ nation), same LIKE filter, same (nation, year) rollup as
-    the classic. Profit is integerized to exact cents BEFORE the sum.
-    part is linear in SF → no broadcast hint (AQE decides);
-    supplier/nation are the bounded broadcast sides."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(
-        F.col("p_name").like("%red%")
-    ).select("p_partkey", "p_retailprice")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nat = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    profit = cents(
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.col("l_quantity") * F.col("p_retailprice") * 0.5
-    )
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("l_shipdate").cast("long").alias("o_year"),
-        )
-        .agg(F.sum(profit).alias("profit_cents"))
-        .orderBy("nation", F.desc("o_year"))
-    )
-
-
-ORACLE_TPCH_PRODUCT_PROFIT = """
-SELECT n_name AS nation, year(l_shipdate)::BIGINT AS o_year,
-       CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)
-                 - l_quantity * p_retailprice * 0.5) * 100) AS BIGINT))
-            AS BIGINT) AS profit_cents
-FROM lineitem
-JOIN part ON l_partkey = p_partkey AND p_name LIKE '%red%'
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-GROUP BY 1, 2
-ORDER BY nation, o_year DESC"""
-
-
-def q_tpch_part_promotion(spark, sf_dir):
-    """Q20-shape (potential part promotion): suppliers who shipped MORE
-    THAN HALF of the 1996 volume of some 'red' part — Q20's nested
-    IN/correlated-threshold written as aggregation: per-(part, supplier)
-    1996 quantity (exact cents), per-part totals derived FROM that same
-    checkpointed aggregate (never a second pass over lineitem), and the
-    share test as the integer cross-multiply ``sq * 2 > tq``. The 'red'
-    part restriction is a LEFT SEMI join applied BEFORE either aggregate
-    so the shuffles only carry qualifying parts; part is linear in SF →
-    no broadcast hint."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01"))
-    ).select("l_partkey", "l_suppkey", "l_quantity")
-    red = _t(spark, sf_dir, "part").filter(
-        F.col("p_name").like("%red%")
-    ).select("p_partkey")
-    q = (
-        li.join(red, li.l_partkey == red.p_partkey, "left_semi")
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum(cents("l_quantity")).alias("sq"))
-        .localCheckpoint(eager=False)  # consumers: per-part totals + share test
-    )
-    t = q.groupBy("l_partkey").agg(F.sum("sq").alias("tq"))
-    big = (
-        q.join(t, "l_partkey")
-        .filter(F.col("sq") * 2 > F.col("tq"))
-        .select("l_suppkey")
-        .distinct()
-    )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        big.join(F.broadcast(supp), big.l_suppkey == supp.s_suppkey)
-        .select(F.col("s_suppkey").cast("long").alias("suppkey"), "s_name")
-        .orderBy("suppkey")
-    )
-
-
-ORACLE_TPCH_PART_PROMOTION = """
-WITH q AS (
-  SELECT l_partkey, l_suppkey,
-         CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS sq
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate < TIMESTAMP '1997-01-01'
-    AND l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE '%red%')
-  GROUP BY 1, 2
-),
-t AS (SELECT l_partkey, sum(sq) AS tq FROM q GROUP BY 1)
-SELECT s_suppkey::BIGINT AS suppkey, s_name
-FROM supplier
-WHERE s_suppkey IN (SELECT l_suppkey FROM q JOIN t USING (l_partkey)
-                    WHERE sq * 2 > tq)
-ORDER BY suppkey"""
-
-
-def q_events_user_lifecycle(spark, sf_dir):
-    """Per-user lifecycle profile: first/last activity, event count,
-    distinct active days, lifespan, and a new/active/churned status vs the
-    corpus's last observed day (broadcast 1-row aggregate — no eager
-    collect). Active-day distinctness is a two-level aggregate — (user,
-    day) then user — so the second shuffle groups an already-reduced frame
-    and no countDistinct expand multiplies the event stream. Day deltas
-    use timestampdiff on exact timestamps (events ts is TIMESTAMP_NTZ)."""
-    ev = _t(spark, sf_dir, "events")
-    per_day = ev.groupBy(
-        "user_id", F.to_date("ts").alias("_day")
-    ).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.min("ts").alias("_first"),
-        F.max("ts").alias("_last"),
-    )
-    per_user = per_day.groupBy("user_id").agg(
-        F.min("_first").alias("first_ts"),
-        F.max("_last").alias("last_ts"),
-        F.sum("_n").alias("n_events"),
-        F.count(F.lit(1)).alias("n_active_days"),
-    )
-    mx = F.broadcast(per_user.agg(F.max("last_ts").alias("_mx")))
-    idle_days = F.floor(
-        F.expr("timestampdiff(MICROSECOND, last_ts, _mx)")
-        / F.lit(86_400_000_000)
-    )
-    lifespan = F.floor(
-        F.expr("timestampdiff(MICROSECOND, first_ts, last_ts)")
-        / F.lit(86_400_000_000)
-    )
-    return (
-        per_user.localCheckpoint(eager=False)  # consumers: max agg + rows
-        .crossJoin(mx)
-        .select(
-            "user_id",
-            "first_ts",
-            "last_ts",
-            "n_events",
-            "n_active_days",
-            lifespan.cast("long").alias("lifespan_days"),
-            F.when(idle_days > 14, F.lit("churned"))
-            .when(F.col("n_active_days") == 1, F.lit("one_shot"))
-            .otherwise(F.lit("active"))
-            .alias("status"),
-        )
-        .orderBy("user_id")
-    )
-
-
-ORACLE_EVENTS_USER_LIFECYCLE = """
-WITH per_user AS (
-  SELECT user_id,
-         min(ts) AS first_ts,
-         max(ts) AS last_ts,
-         count(*)::BIGINT AS n_events,
-         count(DISTINCT ts::DATE)::BIGINT AS n_active_days
-  FROM events GROUP BY 1
-),
-mx AS (SELECT max(last_ts) AS m FROM per_user)
-SELECT user_id, first_ts, last_ts, n_events, n_active_days,
-       CAST(floor((epoch_us(last_ts) - epoch_us(first_ts))
-            / 86400000000.0) AS BIGINT) AS lifespan_days,
-       CASE
-         WHEN floor((epoch_us(mx.m) - epoch_us(last_ts))
-              / 86400000000.0) > 14 THEN 'churned'
-         WHEN n_active_days = 1 THEN 'one_shot'
-         ELSE 'active'
-       END AS status
-FROM per_user CROSS JOIN mx
-ORDER BY user_id"""
-
-
-def q_events_active_users(spark, sf_dir):
-    """DAU / trailing-7-day WAU per calendar day. The WAU distinct-count
-    can't use a sliding window frame (count(DISTINCT) over RANGE isn't
-    supported, and a per-day re-scan is quadratic), so each (user, day)
-    activity row is EXPLODED into the <=7 window-end days it contributes
-    to and distinct-counted once per (user, window_day) — a constant 7x
-    fan-out of the already-deduped activity grid, not of the event stream.
-    Days with no activity simply don't appear (no spine join; matches the
-    oracle). Output counts only window days that are real activity days
-    (explode overshoots past the corpus end by up to 6 days — those
-    phantom days are semi-joined away against the DAU frame)."""
-    ev = _t(spark, sf_dir, "events")
-    grid = (
-        ev.select("user_id", F.to_date("ts").alias("day"))
-        .distinct()
-        .localCheckpoint(eager=False)  # consumers: DAU agg + WAU explode
-    )
-    dau = grid.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
-    contrib = grid.select(
-        "user_id",
-        F.explode(
-            F.sequence(F.col("day"), F.date_add(F.col("day"), 6))
-        ).alias("wday"),
-    ).distinct()
-    wau = contrib.groupBy(F.col("wday").alias("day")).agg(
-        F.count(F.lit(1)).alias("wau")
-    )
-    return (
-        dau.join(wau, "day")  # inner: keeps only real activity days
-        .select(F.col("day").cast("timestamp").alias("day"), "dau", "wau")
-        .orderBy("day")
-    )
-
-
-ORACLE_EVENTS_ACTIVE_USERS = """
-WITH grid AS (SELECT DISTINCT user_id, ts::DATE AS day FROM events),
-dau AS (SELECT day, count(*)::BIGINT AS dau FROM grid GROUP BY 1),
-contrib AS (
-  SELECT DISTINCT user_id, wday
-  FROM grid, unnest(range(0, 7)) AS t(off),
-       LATERAL (SELECT day + to_days(off::INT) AS wday)
-),
-wau AS (SELECT wday AS day, count(*)::BIGINT AS wau FROM contrib GROUP BY 1)
-SELECT dau.day::TIMESTAMP AS day, dau.dau, wau.wau
-FROM dau JOIN wau USING (day)
-ORDER BY day"""
-
-
-def q_events_behavior_rank(spark, sf_dir):
-    """PageRank over the event-type TRANSITION graph — which states
-    dominate long user journeys once transition structure (not raw
-    frequency) is accounted for; the stationary-behavior rollup product
-    analytics runs on top of the Markov matrix. Reuses
-    linkgraph.pagerank verbatim (integer rank rounds over the
-    |types|-bounded graph) and the parameterized unrolled-CTE oracle
-    builder; the corpus-scale work is the one lag-window shuffle the
-    Markov matrix already pays."""
-    from ..operators import linkgraph as LG
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        F.col("event_type").alias("dst"),
-        F.lag("event_type").over(w).alias("src"),
-    ).filter(F.col("src").isNotNull())
-    edges = pairs.select("src", "dst", F.lit(1).alias("w"))
-    return (
-        LG.pagerank(edges, n_iter=8)
-        .select(F.col("host").alias("event_type"), "rank_micro")
-        .orderBy(F.desc("rank_micro"), "event_type")
-    )
-
-
-_BEHAVIOR_EDGE_SQL = """
-ev_seq AS (
-  SELECT event_type,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS prev_type
-  FROM events
-),
-e AS (
-  SELECT prev_type AS src, event_type AS dst, count(*)::BIGINT AS w
-  FROM ev_seq WHERE prev_type IS NOT NULL GROUP BY src, dst
-)"""
-
-
-def q_events_markov_transitions(spark, sf_dir):
-    """Event-type transition matrix (first-order Markov over per-user event
-    sequences) — the behavioral-modeling rollup a sessionized event stream
-    feeds. One shuffle: the lag window partitions by user; the
-    (prev, next) count table is |types|^2 rows, and the per-prev totals
-    come from a window over that tiny frame (no second corpus shuffle).
-    Ordering inside a user is (ts, event_id) — a deterministic total
-    order, so lag() agrees across engines."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        F.col("event_type").alias("next_type"),
-        F.lag("event_type").over(w).alias("prev_type"),
-    ).filter(F.col("prev_type").isNotNull())
-    counts = pairs.groupBy("prev_type", "next_type").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    tot = Window.partitionBy("prev_type")
-    return (
-        counts.select(
-            "prev_type",
-            "next_type",
-            "n",
-            F.round(F.col("n") * 1_000_000.0 / F.sum("n").over(tot))
-            .cast("long")
-            .alias("prob_micro"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("prev_type", "next_type")
-    )
-
-
-ORACLE_EVENTS_MARKOV = """
-WITH p AS (
-  SELECT event_type AS next_type,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS prev_type
-  FROM events
-),
-c AS (
-  SELECT prev_type, next_type, CAST(count(*) AS BIGINT) AS n
-  FROM p WHERE prev_type IS NOT NULL GROUP BY 1, 2
-)
-SELECT prev_type, next_type, n,
-       CAST(round(n * 1000000.0 / sum(n) OVER (PARTITION BY prev_type))
-            AS BIGINT) AS prob_micro
-FROM c ORDER BY prev_type, next_type"""
-
-
 REL_QUERIES = {
-    "events_markov_transitions": q_events_markov_transitions,
-    "events_windowed": q_events_windowed,
-    "events_stream_windowed": q_events_stream_windowed,
-    "events_sessionized": q_events_sessionized,
-    "events_stream_sessionized": q_events_stream_sessionized,
-    "events_stream_sessionized_timeout": q_events_stream_sessionized_timeout,
-    "events_top_users": q_events_top_users,
-    "events_funnel": q_events_funnel,
     "tpch_pricing_summary": q_tpch_pricing_summary,
-    "tpch_top_customers": q_tpch_top_customers,
-    "tpch_region_revenue": q_tpch_region_revenue,
-    "tpch_parts_per_supplier": q_tpch_parts_per_supplier,
-    "tpch_shipping_priority": q_tpch_shipping_priority,
-    "tpch_local_supplier_volume": q_tpch_local_supplier_volume,
-    "tpch_returned_items": q_tpch_returned_items,
-    "tpch_promo_revenue": q_tpch_promo_revenue,
     "tpch_order_priority": q_tpch_order_priority,
-    "events_asof_attribution": q_events_asof_attribution,
-    "tpch_nation_volume": q_tpch_nation_volume,
-    "events_stream_interval_join": q_events_stream_interval_join,
-    "events_stream_kmv": q_events_stream_kmv,
-    "events_stream_cms": q_events_stream_cms,
-    "events_pivot": q_events_pivot,
-    "events_trailing_window": q_events_trailing_window,
-    "events_anomaly_mad": q_events_anomaly_mad,
-    "events_path_ngrams": q_events_path_ngrams,
-    "events_rfm_segments": q_events_rfm_segments,
-    "events_value_pareto": q_events_value_pareto,
-    "events_behavior_rank": q_events_behavior_rank,
     "tpch_rollup_revenue": q_tpch_rollup_revenue,
     "tpch_small_qty_revenue": q_tpch_small_qty_revenue,
     "tpch_cust_order_distribution": q_tpch_cust_order_distribution,
-    "tpch_large_volume_customers": q_tpch_large_volume_customers,
-    "tpch_sales_opportunity": q_tpch_sales_opportunity,
     "tpch_revenue_forecast": q_tpch_revenue_forecast,
     "tpch_discounted_brand_revenue": q_tpch_discounted_brand_revenue,
-    "tpch_market_share": q_tpch_market_share,
     "tpch_late_shipments": q_tpch_late_shipments,
-    "tpch_top_supplier": q_tpch_top_supplier,
-    "events_retention_cohorts": q_events_retention_cohorts,
-    "tpch_min_cost_supplier": q_tpch_min_cost_supplier,
-    "tpch_important_parts": q_tpch_important_parts,
-    "tpch_supplier_part_counts": q_tpch_supplier_part_counts,
-    "tpch_waiting_suppliers": q_tpch_waiting_suppliers,
-    "tpch_product_profit": q_tpch_product_profit,
-    "tpch_part_promotion": q_tpch_part_promotion,
-    "events_user_lifecycle": q_events_user_lifecycle,
-    "events_active_users": q_events_active_users,
 }
 
 
 def rel_oracle_sqls() -> dict[str, str]:
-    from .data_queries import _pagerank_oracle
-
     return {
-        "events_markov_transitions": ORACLE_EVENTS_MARKOV,
-        "events_windowed": ORACLE_EVENTS_WINDOWED,
-        "events_stream_windowed": ORACLE_EVENTS_WINDOWED,
-        "events_sessionized": ORACLE_EVENTS_SESSIONS,
-        "events_stream_sessionized": ORACLE_EVENTS_SESSIONS,
-        "events_stream_sessionized_timeout": ORACLE_EVENTS_SESSIONS,
-        "events_top_users": ORACLE_EVENTS_TOP_USERS,
-        "events_funnel": ORACLE_EVENTS_FUNNEL,
         "tpch_pricing_summary": ORACLE_TPCH_PRICING,
-        "tpch_top_customers": ORACLE_TPCH_TOP_CUSTOMERS,
-        "tpch_region_revenue": ORACLE_TPCH_REGION_REVENUE,
-        "tpch_parts_per_supplier": ORACLE_TPCH_PARTS_PER_SUPPLIER,
-        "tpch_shipping_priority": ORACLE_TPCH_SHIPPING,
-        "tpch_local_supplier_volume": ORACLE_TPCH_LOCAL_SUPPLIER,
-        "tpch_returned_items": ORACLE_TPCH_RETURNED,
-        "tpch_promo_revenue": ORACLE_TPCH_PROMO,
         "tpch_order_priority": ORACLE_TPCH_ORDER_PRIORITY,
-        "events_asof_attribution": ORACLE_EVENTS_ASOF,
-        "tpch_nation_volume": ORACLE_TPCH_NATION_VOLUME,
-        "events_stream_interval_join": ORACLE_EVENTS_INTERVAL_JOIN,
-        "events_stream_kmv": _stream_kmv_oracle(),
-        "events_stream_cms": _stream_cms_oracle(),
-        "events_pivot": ORACLE_EVENTS_PIVOT,
-        "events_trailing_window": ORACLE_EVENTS_TRAILING,
-        "events_anomaly_mad": ORACLE_EVENTS_ANOMALY_MAD,
-        "events_path_ngrams": ORACLE_EVENTS_PATH_NGRAMS,
-        "events_rfm_segments": _rfm_oracle(),
-        "events_value_pareto": _pareto_oracle(),
-        "events_behavior_rank": _pagerank_oracle(
-            n_iter=8,
-            edge_sql=_BEHAVIOR_EDGE_SQL,
-            tail="SELECT host AS event_type, rank_micro FROM r8"
-                 "\nORDER BY rank_micro DESC, event_type",
-        ),
         "tpch_rollup_revenue": ORACLE_TPCH_ROLLUP,
         "tpch_small_qty_revenue": ORACLE_TPCH_SMALL_QTY,
         "tpch_cust_order_distribution": ORACLE_TPCH_CUST_DIST,
-        "tpch_large_volume_customers": ORACLE_TPCH_LARGE_VOLUME,
-        "tpch_sales_opportunity": ORACLE_TPCH_SALES_OPPORTUNITY,
         "tpch_revenue_forecast": ORACLE_TPCH_REVENUE_FORECAST,
         "tpch_discounted_brand_revenue": ORACLE_TPCH_DISCOUNTED_BRAND,
-        "tpch_market_share": ORACLE_TPCH_MARKET_SHARE,
         "tpch_late_shipments": ORACLE_TPCH_LATE_SHIPMENTS,
-        "tpch_top_supplier": ORACLE_TPCH_TOP_SUPPLIER,
-        "events_retention_cohorts": ORACLE_EVENTS_RETENTION,
-        "tpch_min_cost_supplier": ORACLE_TPCH_MIN_COST_SUPPLIER,
-        "tpch_important_parts": ORACLE_TPCH_IMPORTANT_PARTS,
-        "tpch_supplier_part_counts": ORACLE_TPCH_SUPPLIER_PART_COUNTS,
-        "tpch_waiting_suppliers": ORACLE_TPCH_WAITING_SUPPLIERS,
-        "tpch_product_profit": ORACLE_TPCH_PRODUCT_PROFIT,
-        "tpch_part_promotion": ORACLE_TPCH_PART_PROMOTION,
-        "events_user_lifecycle": ORACLE_EVENTS_USER_LIFECYCLE,
-        "events_active_users": ORACLE_EVENTS_ACTIVE_USERS,
     }

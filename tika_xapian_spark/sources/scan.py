@@ -25,41 +25,51 @@ the storage layout makes it redundant.
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# row-group/row counts are immutable storage metadata (NOT query results):
-# one driver-side footer peek per path per process
-_META_CACHE: dict[str, tuple[int, int]] = {}
+# the counts _table_meta reports for a layout it cannot read: "splittable",
+# so read_spread leaves the scan alone
+_SPLITTABLE = (1 << 30, 1 << 60)
+
+
+def _data_files(path: str) -> list[str]:
+    """The parquet files Spark would scan under ``path``: the file itself,
+    or every ``*.parquet`` below the directory, partition subdirectories
+    (``k=v/``) included; names starting with ``_`` or ``.`` are skipped,
+    as Spark skips them."""
+    if os.path.isfile(path):
+        return [path]
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        files += [
+            os.path.join(root, n)
+            for n in sorted(names)
+            if n.endswith(".parquet") and not n.startswith(("_", "."))
+        ]
+    return files
 
 
 def _table_meta(path: str) -> tuple[int, int]:
-    """(total row groups, total rows) from parquet footers."""
-    if path not in _META_CACHE:
-        try:
-            import pyarrow.parquet as pq
+    """(total row groups, total rows) from parquet footers, read on every
+    call: a footer peek costs well under a millisecond, and an uncached
+    peek always sees a rewritten file. A layout with no local parquet
+    files, or one whose footers cannot be read, is reported splittable."""
+    import pyarrow.parquet as pq
 
-            files = (
-                [path]
-                if os.path.isfile(path)
-                else glob.glob(os.path.join(path, "*.parquet"))
-            )
-            metas = [pq.ParquetFile(f).metadata for f in files]
-            _META_CACHE[path] = (
-                sum(m.num_row_groups for m in metas) or 1,
-                sum(m.num_rows for m in metas),
-            )
-        except Exception:
-            # non-local / unreadable layout: assume splittable, don't spread
-            _META_CACHE[path] = (1 << 30, 1 << 60)
-    return _META_CACHE[path]
-
-
-def _row_groups(path: str) -> int:
-    return _table_meta(path)[0]
+    try:
+        metas = [pq.read_metadata(f) for f in _data_files(path)]
+    except (OSError, ValueError):  # unreadable footer (pyarrow's ArrowInvalid)
+        return _SPLITTABLE
+    if not metas:
+        return _SPLITTABLE
+    return (
+        sum(m.num_row_groups for m in metas) or 1,
+        sum(m.num_rows for m in metas),
+    )
 
 
 def spread_parallelism(spark: SparkSession) -> int:
