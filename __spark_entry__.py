@@ -61,14 +61,12 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from tika_xapian_spark.plans.data_queries import DATA_QUERIES
     from tika_xapian_spark.plans.doc_queries import QUERIES
-    from tika_xapian_spark.plans.rel_queries import REL_QUERIES
 
-    return {**QUERIES, **DATA_QUERIES, **REL_QUERIES}
+    return {**QUERIES, **DATA_QUERIES}
 
 
 def oracle_sql() -> dict[str, str]:
     from tika_xapian_spark.plans.data_queries import data_oracle_sqls
     from tika_xapian_spark.plans.doc_queries import oracle_sqls
-    from tika_xapian_spark.plans.rel_queries import rel_oracle_sqls
 
-    return {**oracle_sqls(), **data_oracle_sqls(), **rel_oracle_sqls()}
+    return {**oracle_sqls(), **data_oracle_sqls()}

@@ -143,8 +143,6 @@ BENCH_QUERIES = (
     "bitext_margin_pairs",  # banded cross-lingual margin kNN (round 6)
     "dedup_containment_pairs",  # directed shingle containment (round 6)
     "text_zipf_fit",  # decimal-exact OLS corpus fingerprint (round 6)
-    "tpch_pricing_summary",
-    "tpch_revenue_forecast",  # Q6 pure pushed-down scan baseline (round 6)
 )
 
 

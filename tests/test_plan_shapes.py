@@ -557,98 +557,6 @@ class TestDenormalizedDoclen:
             idx.unpersist()
 
 
-class TestTpchJoinStrategy:
-    """The TPC-H queries must NOT force-broadcast
-    relations that scale linearly with the data (customer; date-filtered
-    orders). With autoBroadcastJoinThreshold=-1 (simulating "too big to
-    broadcast", i.e. the 100x cluster) those joins must plan as shuffle
-    joins — a forced F.broadcast() hint would override the threshold and
-    keep them broadcast, OOMing executors at scale. The genuinely bounded
-    dims (region 5 rows, nation 25, supplier sublinear) keep their hints
-    and may stay broadcast."""
-
-    SF = "/root/testdata/sf0.001"
-
-    @pytest.fixture()
-    def no_auto_broadcast(self, spark):
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            yield spark
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-    def _plan(self, qname, spark):
-        from tika_xapian_spark.plans.rel_queries import REL_QUERIES
-
-        return plan_of(REL_QUERIES[qname](spark, self.SF))
-
-    @pytest.mark.parametrize(
-        "qname,n_shuffle_joins,n_hinted_broadcasts",
-        [
-            # (query, de-hinted joins that must shuffle, remaining hints)
-            ("tpch_order_priority", 1, 0),       # lineitem (semi, hint-free)
-            ("tpch_small_qty_revenue", 1, 0),    # part (hint-free)
-            ("tpch_cust_order_distribution", 1, 0),  # customer LEFT join
-            ("tpch_discounted_brand_revenue", 1, 0),  # part (hint-free)
-            ("tpch_late_shipments", 1, 0),       # orders
-        ],
-    )
-    def test_scaling_relations_not_forced_broadcast(
-        self, no_auto_broadcast, qname, n_shuffle_joins, n_hinted_broadcasts
-    ):
-        plan = self._plan(qname, no_auto_broadcast)
-        # every de-hinted fact join degrades to a shuffle join when the
-        # threshold says "too big" — no hint is forcing a broadcast
-        n_smj = plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin")
-        assert n_smj >= n_shuffle_joins, plan
-        # hints on bounded dims still pin their broadcasts (and nothing else
-        # broadcasts: the threshold is -1, so every broadcast here is a hint)
-        assert plan.count("BroadcastHashJoin") == n_hinted_broadcasts, plan
-
-    def test_revenue_forecast_is_pure_scan(self, spark):
-        """Q6's plan must be a single pushed-down parquet scan feeding a
-        partial+final aggregate: all three predicates in PushedFilters, a
-        4-column ReadSchema, and the only exchange the 1-row final agg's
-        SinglePartition — at 10^12 rows this query is exactly as fast as
-        the scan layout allows, and anything more in the plan is a bug."""
-        from tika_xapian_spark.plans.rel_queries import q_tpch_revenue_forecast
-
-        plan = plan_of(q_tpch_revenue_forecast(spark, self.SF))
-        scan = next(ln for ln in plan.splitlines() if "FileScan" in ln)
-        for col in ("l_shipdate", "l_discount", "l_quantity"):
-            assert col in scan.split("PushedFilters")[-1], scan
-        assert "[l_quantity#" in scan and "l_shipdate#" in scan, scan
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "SinglePartition" in plan, plan
-
-    def test_discounted_brand_pushes_disjunction_to_both_scans(self, spark):
-        """Q19's OR-of-ANDs must not defeat pushdown: Catalyst extracts the
-        per-side projection of the disjunction, so the brand/size OR lands
-        in part's PushedFilters and the quantity envelope in lineitem's —
-        the fact arrives at the join pre-cut, not post-filtered."""
-        from tika_xapian_spark.plans.rel_queries import (
-            q_tpch_discounted_brand_revenue,
-        )
-
-        plan = plan_of(q_tpch_discounted_brand_revenue(spark, self.SF))
-        scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
-        li = next(s for s in scans if "lineitem" in s)
-        pt = next(s for s in scans if "part.parquet" in s)
-        assert "Or(" in li.split("PushedFilters")[-1], li
-        assert "l_quantity" in li.split("PushedFilters")[-1], li
-        assert "p_brand" in pt.split("PushedFilters")[-1], pt
-
-    def test_small_qty_revenue_scans_fact_once(self, spark):
-        """Q17's window form must scan lineitem ONCE and shuffle it ONCE
-        (the window exchange on l_partkey) — the aggregate self-join
-        alternative scans the fact twice and shuffles both sides."""
-        plan = self._plan("tpch_small_qty_revenue", spark)
-        assert plan.count("lineitem.parquet") == 1, plan
-        assert plan.count("hashpartitioning(l_partkey") == 1, plan
-        assert "Window" in plan, plan
-
-
 class TestPackingPlan:
     """pack_sequences' scale claim: the global prefix sum never pushes
     the corpus through one task. In the executed plan the ONLY
@@ -675,24 +583,6 @@ class TestPackingPlan:
         # offsets rejoin via broadcast; the explode adds no exchange
         assert "BroadcastHashJoin [bucket" in plan, plan
         assert "Generate explode" in plan, plan
-
-
-class TestRollupPlan:
-    """tpch_rollup_revenue's docstring claims ONE shuffle: Spark expands
-    the grouping sets (Expand node) BEFORE the exchange and still combines
-    partial aggregates map-side. Pin both — a plan that aggregated each
-    grouping set separately would shuffle once per set."""
-
-    def test_rollup_single_exchange_with_expand(self, spark):
-        from tika_xapian_spark.plans.rel_queries import q_tpch_rollup_revenue
-
-        df = q_tpch_rollup_revenue(spark, "/root/testdata/sf0.001")
-        plan = plan_of(df)
-        assert "Expand" in plan, plan
-        # one aggregation exchange + the final orderBy's range exchange
-        n_ex = plan.count("Exchange hashpartitioning")
-        assert n_ex == 1, plan
-        assert "partial" in plan.lower(), plan  # map-side combine survives
 
 
 class TestPowerIterationPlan:

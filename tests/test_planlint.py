@@ -110,8 +110,6 @@ class TestRegistrySweep:
             "embedding_quantize",
             "ann_cosine_topk", "ann_range_search", "doc_fingerprint",
             "token_count", "sample_stratified", "mix_sources", "token_budget",
-            "tpch_pricing_summary", "tpch_order_priority",
-            "tpch_revenue_forecast", "tpch_late_shipments",
             "quality_gate_matrix", "embedding_hard_negatives",
         ]
         from tika_xapian_spark.plans.planlint import lint_df

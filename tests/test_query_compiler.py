@@ -267,32 +267,6 @@ class TestEndToEnd:
             for partial in (True, False):
                 assert self.docs_of(search(sindex, q, partial=partial)) == set()
 
-    def test_wildcard_max_mode(self, sindex):
-        """Opt-in OP_MAX wildcard combiner (modern Xapian's default):
-        expansions score as best-single-term, vs the reference parser's
-        synonym fold (merged pseudo-term) — same match set, different
-        weights."""
-        default = search(sindex, "s*", partial=False).collect()
-        maxed = search(
-            sindex, "s*", partial=False, wildcard_max=True
-        ).collect()
-        # s* expands to {spark, slow}: same docs either way
-        assert {r["doc"] for r in default} == {r["doc"] for r in maxed}
-        exp = {
-            r["doc"]: r["score"]
-            for r in S.top_k(
-                S.op_max_terms(sindex, ["spark", "slow"])
-            ).collect()
-        }
-        got = {r["doc"]: r["score"] for r in maxed}
-        for d in exp:
-            assert got[d] == pytest.approx(exp[d], rel=1e-12), d
-        # and the two modes genuinely differ on a multi-expansion doc
-        syn = {r["doc"]: r["score"] for r in default}
-        assert any(
-            abs(syn[d] - got[d]) > 1e-9 for d in got
-        )
-
     def test_partial_last_word(self, sindex):
         # partial mode: 'spar' matches via wildcard expansion of 'spar*'
         got = self.docs_of(search(sindex, "spar", partial=True))

@@ -7,6 +7,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from tika_xapian_spark.operators.index import bucket_col
 from tika_xapian_spark.sources.pages import synth_pages
 from tika_xapian_spark.streaming import resume as R
 
@@ -75,48 +76,30 @@ def test_noop_on_fully_complete(spark, tmp_path):
     assert summary["skipped"] == [0, 1, 2, 3]
 
 
-def test_stream_index_resumes_via_checkpoint(spark, tmp_path):
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "stream_out")
-    synth_pages(spark, 128).write.parquet(src)
+def test_new_pages_arrive_through_upsert(spark, tmp_path):
+    # new pages reach a resumable index through upsert_postings (the
+    # reference's replace_document path): the result equals a clean build
+    # over old + new pages, and only the new pages' buckets are rewritten.
+    # The three new pages include a quarantined one (no front matter).
+    pages = synth_pages(spark, 128)
+    is_new = F.col("url").rlike(r"/note4[036]\.")
+    old, new = pages.filter(~is_new), pages.filter(is_new)
+    out = str(tmp_path / "upserted")
+    R.index_resumable(spark, old, out, N_BUCKETS)
+    summary = R.upsert_postings(spark, out, new, N_BUCKETS)
 
-    R.stream_index(spark, src, out)
-    n1 = R.read_postings(spark, out).count()
-    assert n1 > 0
-
-    # second invocation with the same checkpoint: no new files -> no growth
-    R.stream_index(spark, src, out)
-    assert R.read_postings(spark, out).count() == n1
-
-    # new files arrive -> only they are processed
-    synth_pages(spark, 64).withColumn(
-        "url", F.concat(F.lit("https://new/"), F.col("url"))
-    ).write.mode("append").parquet(src)
-    R.stream_index(spark, src, out)
-    assert R.read_postings(spark, out).count() > n1
-
-
-def test_stream_index_replay_is_idempotent(spark, tmp_path):
-    # foreachBatch is at-least-once: simulate a crash after the batch write
-    # but before the offset commit by deleting the last commit marker — the
-    # restart must REPLAY that batch, and the deterministic batch=<id>
-    # overwrite must leave the postings byte-identical (no duplicates).
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    synth_pages(spark, 128).write.parquet(src)
-    R.stream_index(spark, src, out, checkpoint_dir=ckpt)
-    before = _postings_set(spark, out)
-
-    commits = sorted(
-        f for f in os.listdir(os.path.join(ckpt, "commits")) if not f.startswith(".")
+    want = sorted(
+        r["b"]
+        for r in new.select(bucket_col("url", N_BUCKETS).alias("b"))
+        .distinct()
+        .collect()
     )
-    os.remove(os.path.join(ckpt, "commits", commits[-1]))  # un-commit last batch
-    crc = os.path.join(ckpt, "commits", f".{commits[-1]}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    R.stream_index(spark, src, out, checkpoint_dir=ckpt)  # replays it
-    assert _postings_set(spark, out) == before
+    assert 0 < len(want) < N_BUCKETS
+    assert summary["rewritten_buckets"] == want
+
+    clean = str(tmp_path / "clean")
+    R.index_resumable(spark, old.unionByName(new), clean, N_BUCKETS)
+    assert _postings_set(spark, out) == _postings_set(spark, clean)
 
 
 def test_resume_runs_two_jobs_per_bucket(spark, tmp_path):
@@ -130,131 +113,3 @@ def test_resume_runs_two_jobs_per_bucket(spark, tmp_path):
     R.index_resumable(spark, pages, str(tmp_path / "jobs"), n_buckets=4)
     n_jobs = len(tracker.getJobIdsForGroup(None)) - before
     assert n_jobs <= 2 * 4, n_jobs
-
-
-def _multi_batch_stream(spark, tmp_path, n_chunks=3, n=96):
-    """stream_index over several source files -> several batch dirs."""
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    pages = synth_pages(spark, n).collect()
-    chunk = len(pages) // n_chunks
-    schema = synth_pages(spark, 1).schema
-    for i in range(n_chunks):
-        part = pages[i * chunk : (i + 1) * chunk] if i < n_chunks - 1 else pages[i * chunk :]
-        spark.createDataFrame(part, schema).coalesce(1).write.mode("append").parquet(src)
-        R.stream_index(spark, src, out)
-    return src, out
-
-
-def test_compact_stream_postings_preserves_rows(spark, tmp_path):
-    src, out = _multi_batch_stream(spark, tmp_path)
-    before = _postings_set(spark, out)
-    summary = R.compact_stream_postings(spark, out)
-    assert len(summary["folded"]) >= 2
-    assert _postings_set(spark, out) == before
-    # folded source dirs are gone; the merged target remains
-    import os as _os
-
-    dirs = [d for d in _os.listdir(_os.path.join(out, "postings")) if d.startswith("batch=")]
-    assert len(dirs) < len(summary["folded"]) + 1 or len(summary["folded"]) == 0
-
-
-def test_stream_resumes_after_compaction(spark, tmp_path):
-    # ingest -> compact -> MORE ingest: layout stays compatible and the
-    # postings equal a never-compacted run over the same input
-    src, out = _multi_batch_stream(spark, tmp_path)
-    R.compact_stream_postings(spark, out)
-    extra = synth_pages(spark, 32).withColumn(
-        "url", F.concat(F.lit("https://later/"), F.col("url"))
-    )
-    extra.coalesce(1).write.mode("append").parquet(src)
-    R.stream_index(spark, src, out)
-    got = _postings_set(spark, out)
-
-    clean_out = str(tmp_path / "clean_out")
-    R.stream_index(spark, src, clean_out)
-    assert got == _postings_set(spark, clean_out)
-
-
-def test_compaction_crash_recovery(spark, tmp_path):
-    import json
-    import os as _os
-    import shutil as _sh
-
-    src, out = _multi_batch_stream(spark, tmp_path)
-    before = _postings_set(spark, out)
-    R.compact_stream_postings(spark, out)
-    after = _postings_set(spark, out)
-    assert after == before
-    # simulate a crash right after the swap: re-create the pending marker
-    # with an already-deleted source list — recovery must be idempotent
-    staging = _os.path.join(out, "_staging")
-    _os.makedirs(staging, exist_ok=True)
-    with open(_os.path.join(staging, "compact-pending.json"), "w") as f:
-        json.dump(
-            {"target": _os.path.join(out, "postings", "batch=0"),
-             "delete": [_os.path.join(out, "postings", "batch=999")]},
-            f,
-        )
-    assert _postings_set(spark, out) == before  # read triggers recovery
-    assert not _os.path.exists(_os.path.join(staging, "compact-pending.json"))
-
-
-def test_compact_rerun_recovers_mid_swap_crash(spark, tmp_path):
-    """Rerunning compact (the CLI retry path) after a crash BETWEEN the two
-    swap renames must first roll back — otherwise the min-id batch's rows
-    (parked as _staging/compacted.old with the target dir absent) are lost."""
-    import json
-    import os as _os
-
-    src, out = _multi_batch_stream(spark, tmp_path)
-    before = _postings_set(spark, out)
-    committed = sorted(R._committed_batch_ids(_os.path.join(out, "_stream_checkpoint")))
-    target = _os.path.join(out, "postings", f"batch={committed[0]}")
-    staging = _os.path.join(out, "_staging")
-    _os.makedirs(staging, exist_ok=True)
-    # simulate: tmp written, marker written, first rename done, crash
-    spark.read.parquet(target).write.mode("overwrite").parquet(
-        _os.path.join(staging, "compacted.tmp")
-    )
-    with open(_os.path.join(staging, "compact-pending.json"), "w") as f:
-        json.dump(
-            {"target": target,
-             "delete": [_os.path.join(out, "postings", f"batch={b}")
-                        for b in committed[1:]]},
-            f,
-        )
-    _os.rename(target, _os.path.join(staging, "compacted.old"))
-    summary = R.compact_stream_postings(spark, out)  # retry path
-    assert set(summary["folded"]) == set(committed)
-    assert _postings_set(spark, out) == before
-
-
-def test_compact_rerun_recovers_post_swap_crash(spark, tmp_path):
-    """Rerunning compact after a crash AFTER the swap but BEFORE source
-    deletion must roll forward first — otherwise the folded batch dirs are
-    merged a second time on top of the already-merged target (doubled rows)."""
-    import json
-    import os as _os
-    import shutil as _sh
-
-    src, out = _multi_batch_stream(spark, tmp_path)
-    before = _postings_set(spark, out)
-    committed = sorted(R._committed_batch_ids(_os.path.join(out, "_stream_checkpoint")))
-    target = _os.path.join(out, "postings", f"batch={committed[0]}")
-    folded_dirs = [_os.path.join(out, "postings", f"batch={b}") for b in committed[1:]]
-    staging = _os.path.join(out, "_staging")
-    _os.makedirs(staging, exist_ok=True)
-    # simulate the post-swap window: target holds the merged data, old copy
-    # parked, pending marker present, sources NOT yet deleted
-    merged = spark.read.parquet(target, *folded_dirs)
-    merged.write.mode("overwrite").parquet(_os.path.join(staging, "swapin.tmp"))
-    _os.rename(target, _os.path.join(staging, "compacted.old"))
-    _os.rename(_os.path.join(staging, "swapin.tmp"), target)
-    with open(_os.path.join(staging, "compact-pending.json"), "w") as f:
-        json.dump({"target": target, "delete": folded_dirs}, f)
-    summary = R.compact_stream_postings(spark, out)  # retry path
-    assert _postings_set(spark, out) == before
-    # roll-forward deleted the folded sources before the new listing
-    for d in folded_dirs:
-        assert not _os.path.exists(d)

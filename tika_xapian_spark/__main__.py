@@ -28,12 +28,6 @@ def main(argv: list[str] | None = None) -> int:
     pi.add_argument("--buckets", type=int, default=16)
     pi.add_argument("--master", default=None)
 
-    pc = sub.add_parser(
-        "compact", help="fold committed streaming batch=<id> postings into one"
-    )
-    pc.add_argument("--out", required=True, help="stream_index output dir")
-    pc.add_argument("--master", default=None)
-
     pd = sub.add_parser(
         "curate",
         help="corpus curation: lang -> quality gate -> repetition cap -> "
@@ -65,7 +59,11 @@ def main(argv: list[str] | None = None) -> int:
     pd.add_argument("--master", default=None)
 
     pq = sub.add_parser("query", help="ranked search over a written index")
-    pq.add_argument("--index", required=True, help="index dir (write() layout)")
+    pq.add_argument(
+        "--index", required=True,
+        help="index dir; reads <index>/postings as written by the `index` "
+        "command or InvertedIndex.write",
+    )
     pq.add_argument("qstr", help="query string (reference grammar)")
     pq.add_argument("-k", type=int, default=100)
     pq.add_argument("--no-partial", action="store_true")
@@ -98,10 +96,6 @@ def main(argv: list[str] | None = None) -> int:
             pages = spark.read.parquet(args.pages)
             summary = index_resumable(spark, pages, args.out, args.buckets)
             print(json.dumps(summary))
-        elif args.cmd == "compact":
-            from .streaming.resume import compact_stream_postings
-
-            print(json.dumps(compact_stream_postings(spark, args.out)))
         elif args.cmd == "explain":
             import __spark_entry__ as entrymod
 

@@ -801,19 +801,12 @@ class Executor:
         range_cols: dict[str, str] | None = None,
         wildcard_limit: int = 1000,
         doc_key: str = "doc",
-        wildcard_max: bool = False,
     ):
         self.index = index
         self.docs = docs
         self.range_cols = range_cols or {}
         self.wildcard_limit = wildcard_limit
         self.doc_key = doc_key
-        # opt-in: combine wildcard expansions with OP_MAX (an alternative
-        # combiner Xapian supports — best single expansion per doc; the
-        # queryparser default is OP_SYNONYM) instead of the reference
-        # parser's WILDCARD-SYNONYM fold. Off by default: the goldens pin
-        # the reference's synonym semantics.
-        self.wildcard_max = wildcard_max
 
     def run(self, node: Node) -> DataFrame:
         idx = self.index
@@ -845,8 +838,6 @@ class Executor:
             expanded = [t for t in expanded if not t.startswith("Z")]
             if not expanded:
                 return S._empty_matches(idx)
-            if self.wildcard_max:
-                return S.op_max_terms(idx, expanded)
             return S.op_synonym(idx, expanded)
         if isinstance(node, Bool):
             if node.op == "AND":
@@ -926,7 +917,6 @@ def search(
     range_cols: dict[str, str] | None = None,
     doc_key: str = "doc",
     use_wand: bool = False,
-    wildcard_max: bool = False,
 ) -> DataFrame:
     """The TUI contract (U1): query string -> ranked top-k (doc, score).
 
@@ -941,9 +931,4 @@ def search(
         leaves = _or_leaf_terms(node)
         if leaves is not None and len(set(t for t, _ in leaves)) == len(leaves):
             return S.top_k_wand(index, dict(leaves), k)
-    return S.top_k(
-        Executor(
-            index, docs, range_cols, doc_key=doc_key, wildcard_max=wildcard_max
-        ).run(node),
-        k,
-    )
+    return S.top_k(Executor(index, docs, range_cols, doc_key=doc_key).run(node), k)

@@ -78,11 +78,7 @@ def spread_parallelism(spark: SparkSession) -> int:
     # (guide §2.4: same key + same partition count = no second exchange;
     # a mismatched count forces ENSURE_REQUIREMENTS to re-shuffle).
     # Scale-adaptive by construction — it follows whatever the deployment
-    # sets `spark.sql.shuffle.partitions` to; env knob for tuning without
-    # code edits.
-    env = os.environ.get("SPARK_GRAFT_SPREAD_N")
-    if env:
-        return max(int(env), 1)
+    # sets `spark.sql.shuffle.partitions` to.
     try:
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:

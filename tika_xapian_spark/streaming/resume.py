@@ -2,7 +2,7 @@
 metrics (north rule: "resumable from checkpoint with per-partition lineage +
 metrics"; SURVEY.md §2.1 S5, §5.2 T-resume).
 
-Two mechanisms, mirroring what a 10^12-row run needs:
+One write path, restartable at bucket granularity:
 
   bucketed batch (index_resumable)
       Work is sharded by url-hash bucket (the same bucket(url) layout the
@@ -10,18 +10,16 @@ Two mechanisms, mirroring what a 10^12-row run needs:
       files). Each bucket commits atomically: postings parquet first, then a
       _done marker; a restart skips every marked bucket, so the job is
       idempotent under kill/retry — the DataFrame analogue of the
-      reference's single durable db.commit() (/root/reference/src/main.rs:102),
-      except commits are per-shard to bound re-work.
+      reference's single durable db.commit() (src/main.rs:102), except
+      commits are per-shard to bound re-work.
 
-  Structured Streaming (stream_index)
-      readStream over the pages table + Trigger.availableNow +
-      checkpointLocation: Spark's offset log makes restarts at-least-once,
-      and each micro-batch writes to a deterministic batch=<id> directory
-      with overwrite, so replays are idempotent — effective exactly-once.
-      There is no event-time semantics to preserve (the reference is a batch
-      CLI, SURVEY.md §2.6) — streaming here is purely for resumability.
+  re-index (upsert_postings)
+      New and changed pages reach the same layout through the reference's
+      replace_document upsert: only the buckets holding their urls are
+      rewritten, swapped in through ``_staging`` so a crash at any step
+      leaves a recoverable bucket (``recover_postings``).
 
-Lineage: one metrics row per processing unit (bucket or micro-batch):
+Lineage: one metrics row per bucket:
 (unit, n_pages, n_ok, n_error, n_postings, wall_sec) appended to
 ``<out>/_metrics`` — enough to audit which input slice produced which output
 files, and to spot skew (a hot host inflates one bucket's wall_sec).
@@ -226,9 +224,8 @@ def _recover_bucket(path: str) -> None:
 
 
 def recover_postings(out_dir: str) -> None:
-    """Roll every bucket swap and any interrupted compaction forward/back —
-    cheap directory scan, run by read_postings so readers never observe a
-    mid-operation state."""
+    """Roll every interrupted bucket swap forward/back — cheap directory
+    scan, run by read_postings so readers never observe a mid-swap state."""
     staging = os.path.join(out_dir, "_staging")
     if not os.path.isdir(staging):
         return
@@ -236,8 +233,6 @@ def recover_postings(out_dir: str) -> None:
         if name.startswith("bucket-"):
             b = int(name.split("-", 1)[1].split(".")[0])
             _recover_bucket(os.path.join(out_dir, "postings", f"bucket={b}"))
-    if any(n.startswith("compact") for n in os.listdir(staging)):
-        _finish_compaction(out_dir)
 
 
 def read_postings(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -247,170 +242,3 @@ def read_postings(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(out_dir, "_metrics"))
-
-
-def stream_index(
-    spark: SparkSession,
-    pages_path: str,
-    out_dir: str,
-    checkpoint_dir: str | None = None,
-) -> None:
-    """Structured Streaming ingest with availableNow + checkpoint: process
-    whatever is in the source and stop; a restart resumes from the offset log
-    and never reprocesses committed files."""
-    checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_stream_checkpoint")
-    static = spark.read.parquet(pages_path)
-    stream = spark.readStream.schema(static.schema).parquet(pages_path)
-
-    from pyspark.sql import Observation
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once: a crash after the write but before
-        # the offset commit replays this batch_id on restart. Writing each
-        # batch to its own deterministic batch=<id> directory with overwrite
-        # makes the replay idempotent (effective exactly-once), the same
-        # trick Iceberg uses via commit-dedup on batch_id.
-        obs = Observation(f"batch_{batch_id}")
-        carrier = extract_index_carrier(batch_df).observe(
-            obs, F.count(F.lit(1)).alias("n_pages")
-        )
-        postings = explode_fused_carrier(carrier)
-        postings.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "postings", f"batch={batch_id}")
-        )
-        batch_df.sparkSession.createDataFrame(
-            [{"unit": batch_id, "n_pages": obs.get["n_pages"]}],
-            "unit long, n_pages long",
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "_metrics", f"batch={batch_id}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def _committed_batch_ids(checkpoint_dir: str) -> set[int]:
-    commits = os.path.join(checkpoint_dir, "commits")
-    if not os.path.isdir(commits):
-        return set()
-    return {
-        int(f) for f in os.listdir(commits) if not f.startswith(".") and f.isdigit()
-    }
-
-
-def compact_stream_postings(
-    spark: SparkSession,
-    out_dir: str,
-    checkpoint_dir: str | None = None,
-) -> dict:
-    """Merge COMMITTED ``batch=<id>`` directories into one — the small-files
-    compaction that follows streaming ingest at scale (thousands of tiny
-    batch files otherwise dominate scan planning).
-
-    Safe to interleave with further stream_index runs:
-      - only batches recorded in the checkpoint's offset-commit log are
-        folded; an uncommitted (possibly replayed) batch keeps its own
-        directory, so the replay-overwrite idempotence is preserved;
-      - the merged data lands back in the SAME batch=<min folded id>
-        partition scheme, so subsequent batch writes stay layout-compatible;
-      - crash recovery: the merged directory is swapped in before any
-        source directory is deleted, with a pending-deletes marker in
-        ``_staging`` that recover_postings() (run by every read) rolls
-        forward — a crash can leave extra work, never lost or doubled rows.
-
-    Rows inside the merged directory are clustered by term for row-group
-    pruning. Concurrent compactions are not supported (same contract as any
-    table-maintenance job)."""
-    import json as _json
-
-    checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_stream_checkpoint")
-    src = os.path.join(out_dir, "postings")
-    # Roll a previously crashed compaction forward/back BEFORE listing batch
-    # dirs: rerunning the compact CLI is a natural retry path that never goes
-    # through read_postings. Without this, a crash between the two swap
-    # renames loses the min-id batch (its dir is parked as compacted.old),
-    # and a crash after the swap but before source deletion double-counts
-    # the folded dirs in the new merge.
-    _finish_compaction(out_dir)
-    committed = _committed_batch_ids(checkpoint_dir)
-    batch_dirs = {
-        int(d.split("=", 1)[1]): os.path.join(src, d)
-        for d in os.listdir(src)
-        if d.startswith("batch=")
-    }
-    fold = sorted(b for b in batch_dirs if b in committed)
-    if len(fold) < 2:
-        return {"out": src, "folded": [], "n_files": _count_parquet(src)}
-    target_id = fold[0]
-    target = batch_dirs[target_id]
-    staging = os.path.join(out_dir, "_staging")
-    os.makedirs(staging, exist_ok=True)
-    tmp = os.path.join(staging, "compacted.tmp")
-    old = os.path.join(staging, "compacted.old")
-    pending = os.path.join(staging, "compact-pending.json")
-    merged = spark.read.parquet(*[batch_dirs[b] for b in fold])
-    (
-        merged.repartition(F.col("term"))
-        .sortWithinPartitions("term", "doc")
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    # marker first: after the swap below, these directories' rows live in
-    # the target and must be deleted; recover_postings rolls this forward
-    with open(pending, "w") as f:
-        _json.dump({"target": target, "delete": [batch_dirs[b] for b in fold[1:]]}, f)
-    os.rename(target, old)
-    os.rename(tmp, target)
-    _finish_compaction(out_dir)
-    return {
-        "out": src,
-        "folded": fold,
-        "target": f"batch={target_id}",
-        "n_files": _count_parquet(src),
-    }
-
-
-def _count_parquet(path: str) -> int:
-    return sum(
-        1 for _, _, files in os.walk(path) for f in files if f.endswith(".parquet")
-    )
-
-
-def _finish_compaction(out_dir: str) -> None:
-    """Roll a (possibly crashed) compaction forward or back. Invariants:
-    the pending marker exists for the whole danger window; ``compacted.old``
-    is the pre-swap target (its rows are a subset of the merged data, so
-    discarding it post-swap loses nothing); pre-swap crashes (tmp still in
-    _staging) just discard the tmp."""
-    import json as _json
-    import shutil as _sh
-
-    staging = os.path.join(out_dir, "_staging")
-    tmp = os.path.join(staging, "compacted.tmp")
-    old = os.path.join(staging, "compacted.old")
-    pending = os.path.join(staging, "compact-pending.json")
-    if not os.path.exists(pending):
-        _sh.rmtree(tmp, ignore_errors=True)
-        _sh.rmtree(old, ignore_errors=True)
-        return
-    with open(pending) as f:
-        plan = _json.load(f)
-    if os.path.exists(tmp):
-        # crashed before (or during) the swap: target still original if old
-        # absent -> abort cleanly; old present means mid-swap -> roll back
-        if os.path.exists(old) and not os.path.exists(plan["target"]):
-            os.rename(old, plan["target"])
-        _sh.rmtree(tmp, ignore_errors=True)
-        os.remove(pending)
-        _sh.rmtree(old, ignore_errors=True)
-        return
-    # swap completed: roll forward — delete folded sources and the old copy
-    for d in plan["delete"]:
-        _sh.rmtree(d, ignore_errors=True)
-    _sh.rmtree(old, ignore_errors=True)
-    os.remove(pending)
