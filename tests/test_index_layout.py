@@ -45,14 +45,13 @@ def test_term_lookup_prunes_partitions(spark, written_index):
     assert pruned.count() == 100  # every doc contains spark
 
 
-def test_query_plan_uses_broadcast_and_topk(spark, written_index):
+def test_query_plan_is_one_scan_and_topk(spark, written_index):
     _, idx = written_index
     df = S.top_k(S.score_terms(idx, ["Zspark", "Zmerg"]))
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan
-    # no sort-merge join should appear for tiny broadcast sides
-    assert "SortMergeJoin" not in plan
+    # literal termweights: no join of any kind
+    assert "Join" not in plan
 
 
 def test_fused_carrier_equals_two_stage_pipeline(spark):

@@ -524,10 +524,10 @@ class TestTfidfPlan:
 
 class TestDenormalizedDoclen:
     def test_score_plan_has_no_docstats_join(self, spark, docs):
-        """BM25 scoring over the denormalized layout is one postings scan +
-        one broadcast (query weights) + one final aggregation — the
-        doc_stats join (a full doc-side shuffle at 10^12 docs) is gone;
-        doclen rides each posting like Xapian's postlist entries."""
+        """BM25 scoring over the denormalized layout is one postings scan
+        (literal query weights) + one final aggregation — the doc_stats
+        join (a full doc-side shuffle at 10^12 docs) is gone; doclen rides
+        each posting like Xapian's postlist entries."""
         from tika_xapian_spark.operators import search as S
 
         idx = InvertedIndex.build_from_body(docs, key="doc_id", stem=False)
@@ -535,8 +535,7 @@ class TestDenormalizedDoclen:
             assert "doclen" in idx.postings.columns
             df = S.score_terms(idx, ["spark", "merge"])
             plan = plan_of(df)
-            # no join keyed on doc anywhere (the weights' term-keyed
-            # broadcast joins remain — they're bounded by |query terms|)
+            # no join keyed on doc anywhere
             assert "Join [doc" not in plan and "Join [cast(doc" not in plan
             assert "SortMergeJoin" not in plan
             # exactly one doc-keyed exchange: the final groupBy(doc)
@@ -544,8 +543,8 @@ class TestDenormalizedDoclen:
             n_doc_exchange = plan.count("Exchange hashpartitioning(doc")
             assert n_doc_exchange == 1, plan
             got = {r["doc"]: r["score"] for r in df.collect()}
-            # and the scores equal the legacy joined form
-            legacy = idx.postings.drop("doclen")
+            # and the scores equal the legacy joined form, doclen from doc_stats
+            legacy = idx.postings.drop("doclen").join(idx.doc_stats, "doc")
             from tika_xapian_spark.operators.index import InvertedIndex as II
 
             lidx = II(legacy, idx.doc_stats, idx.term_stats, idx.n_docs, idx.avg_len)

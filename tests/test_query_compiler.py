@@ -387,10 +387,11 @@ class TestDigitInitialTerms:
         assert got == {1, 2, 3}
 
     def test_and_fusion_with_digit_leaf(self, dindex):
-        from tika_xapian_spark.plans.query_compiler import _and_leaf_terms
+        from tika_xapian_spark.plans.query_compiler import Executor
 
         node = compile_query("2024 AND report", partial=False)
-        assert _and_leaf_terms(node) == [("2024", 1), ("Zreport", 1)]
+        plan = Executor(dindex).run(node)._jdf.queryExecution().optimizedPlan().toString()
+        assert "IN (2024,Zreport)" in plan and "Z2024" not in plan, plan
         got = {r["doc"] for r in search(dindex, "2024 AND report", partial=False).collect()}
         assert got == {1}
 

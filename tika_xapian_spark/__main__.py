@@ -134,29 +134,17 @@ def main(argv: list[str] | None = None) -> int:
             }))
         else:
             from .operators.index import InvertedIndex
-            from .plans.query_compiler import compile_query, explain, search
-
-            # the CLI index layout stores exploded postings; rebuild the
-            # stats the searcher needs
-            from pyspark.sql import functions as F
-
-            postings = spark.read.parquet(f"{args.index}/postings")
-            from .operators.index import build_doc_stats, build_term_stats
-
-            doc_stats = build_doc_stats(postings)
-            term_stats = build_term_stats(postings)
-            row = doc_stats.agg(
-                F.count(F.lit(1)).alias("n"), F.avg("doclen").alias("avg")
-            ).collect()[0]
-            idx = InvertedIndex(
-                postings=postings,
-                doc_stats=doc_stats.persist(),
-                term_stats=term_stats.persist(),
-                n_docs=int(row["n"] or 0),
-                avg_len=float(row["avg"] or 0.0),
+            from .plans.query_compiler import (
+                compile_query,
+                explain,
+                get_description,
+                search,
             )
-            from .plans.query_compiler import get_description
+            from .streaming.resume import read_postings
 
+            # the `index` layout stores postings only: the one postings
+            # constructor derives the stats and the term dictionary
+            idx = InvertedIndex.from_postings(read_postings(spark, args.index))
             node = compile_query(args.qstr, partial=not args.no_partial)
             print(f"# plan: {explain(node)}", file=sys.stderr)
             print(f"# query: {get_description(node)}", file=sys.stderr)

@@ -10,7 +10,9 @@ with columnar posting-list DataFrames/tables:
                                           the doc (incl. Z-stems), Xapian's
                                           document-length definition
   term_stats(term, df, cf, max_wdf)     — collection frequencies for BM25 R1
-                                          and the WAND-style max-score bound
+                                          and the WAND-style max-score bound;
+                                          held on the driver as the term
+                                          dictionary (TermDictionary)
 
 One postings pipeline, the reference's one TermGenerator loop per note:
   - every build runs one ``mapInPandas`` pass that emits the flat per-doc
@@ -26,13 +28,22 @@ One postings pipeline, the reference's one TermGenerator loop per note:
     partition columns so `term = X` probes prune to 1/B of files — the
     DataFrame equivalent of Iceberg's `bucket(B, term)` partition transform
     (no Iceberg runtime is available in this sandbox; the layout is the same).
+    InvertedIndex.postings_of is the one term probe, and it prunes.
+
+A reopened index runs no aggregation: the term dictionary is read from the
+term_stats files, the document count from the doc_stats footers, and the
+total length is the dictionary's sum of cf (doclen is the sum of wdf).
 """
 
 from __future__ import annotations
 
+from bisect import bisect_left
 from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -48,6 +59,10 @@ from ..functions import tokenizer as tok
 from .extract import parse_page
 
 N_BUCKETS = 64  # bucket count for term/doc hash partitioning
+# Byte cap of the driver-held term dictionary (its Arrow bytes). A
+# 1,000-page gen_row index holds ~3.8k terms in ~0.1 MB, and gen_row adds
+# about one term per page, so the cap holds a few million terms.
+DICTIONARY_MAX_BYTES = 64 << 20
 
 # The extracted-document columns assemble_fields consumes, in its argument
 # order (extract_pages / parse_page names).
@@ -224,6 +239,11 @@ def explode_fused_carrier(carrier: DataFrame) -> DataFrame:
     )
 
 
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def bucket_col(col: str | Column, n: int = N_BUCKETS) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.pmod(F.xxhash64(c), F.lit(n)).cast("int")
@@ -280,6 +300,50 @@ def build_vocab_frag(term_stats: DataFrame) -> DataFrame:
     )
 
 
+class TermDictionary:
+    """The term dictionary held on the driver: term_stats sorted by term —
+    the sorted key space of Xapian's postlist B-tree (SURVEY.md §1.2). A
+    term's statistics are a bisect and a prefix expansion is two, with no
+    Spark job. Over DICTIONARY_MAX_BYTES it raises, naming the size."""
+
+    def __init__(self, table: pa.Table):
+        if table.nbytes > DICTIONARY_MAX_BYTES:
+            raise ValueError(
+                f"term dictionary is {table.nbytes:,} bytes, over the "
+                f"{DICTIONARY_MAX_BYTES:,}-byte cap (DICTIONARY_MAX_BYTES)"
+            )
+        # Arrow sorts strings bytewise, which for UTF-8 is code point order:
+        # Python's str order (bisect) and Spark's (the old orderBy)
+        table = table.sort_by("term")
+        self.terms: list[str] = table.column("term").to_pylist()
+        self.df = table.column("df").to_numpy()
+        self.max_wdf = table.column("max_wdf").to_numpy()
+        self.total_len = int(table.column("cf").to_numpy().sum())
+
+    def stats(self, term: str) -> tuple[int, int] | None:
+        """(df, max_wdf) of ``term``, or None when no document holds it."""
+        i = bisect_left(self.terms, term)
+        if i == len(self.terms) or self.terms[i] != term:
+            return None
+        return int(self.df[i]), int(self.max_wdf[i])
+
+    def expand(self, prefix: str, limit: int) -> list[str]:
+        """The terms starting with ``prefix``: the ``limit`` with the highest
+        df, ties by term ascending."""
+        lo = bisect_left(self.terms, prefix)
+        # the least string above every extension of prefix: drop trailing
+        # max code points, then bump the last one
+        head = prefix.rstrip("\U0010ffff")
+        hi = (
+            bisect_left(self.terms, head[:-1] + chr(ord(head[-1]) + 1), lo)
+            if head
+            else len(self.terms)
+        )
+        # stable sort on -df keeps the range's term order within a df
+        order = np.argsort(-self.df[lo:hi], kind="stable")[:limit]
+        return [self.terms[lo + int(i)] for i in order]
+
+
 @dataclass
 class InvertedIndex:
     """The index tables + cached collection-level stats."""
@@ -296,11 +360,68 @@ class InvertedIndex:
     # only): unpersist() must release it, or a rebuild over a rewritten
     # input with the same plan is served the old cached rows
     carrier: DataFrame | None = None
+    # the driver-held term dictionary: loaded by read(), else collected
+    # from term_stats on first use (term_dictionary())
+    dictionary: TermDictionary | None = None
+    # read() only: postings with their term_bucket partition column, which
+    # postings_of() filters so a probe opens only its terms' buckets
+    bucketed_postings: DataFrame | None = None
 
     def spelling_table(self) -> DataFrame:
         if self.vocab_frag is None:
             self.vocab_frag = build_vocab_frag(self.term_stats).persist()
         return self.vocab_frag
+
+    def term_dictionary(self) -> TermDictionary:
+        """The driver-held dictionary, collected on first use if unread."""
+        if self.dictionary is None:
+            self.dictionary = TermDictionary(self.term_stats.toArrow())
+        return self.dictionary
+
+    def postings_of(self, terms: list[str]) -> DataFrame:
+        """The postings of ``terms`` — the one term probe every scoring
+        operator scans. ``term IN (...)`` reaches the parquet scan as a
+        pushed filter (row-group pruning on the term-sorted files); over a
+        written index ``term_bucket IN (...)`` is a partition filter, so the
+        scan lists only the query terms' bucket directories. Each bucket is
+        bucket_col's expression of a literal, which Catalyst folds. The
+        predicate is one SQL string: one call into the JVM, where building
+        it from Columns costs ~5 per term."""
+        lits = [sql_string(t) for t in terms]
+        hit = f"term IN ({', '.join(lits)})"
+        if self.bucketed_postings is None:
+            return self.postings.filter(hit)
+        buckets = ", ".join(
+            f"CAST(pmod(xxhash64({t}), {N_BUCKETS}) AS INT)" for t in lits
+        )
+        return self.bucketed_postings.filter(
+            f"term_bucket IN ({buckets}) AND {hit}"
+        ).drop("term_bucket")
+
+    @classmethod
+    def from_postings(
+        cls,
+        postings: DataFrame,
+        doc_stats: DataFrame | None = None,
+        carrier: DataFrame | None = None,
+    ) -> "InvertedIndex":
+        """Index over a postings frame: term_stats aggregates (persisted, the
+        dictionary is collected from it on first use); doc_stats defaults to
+        one row per doc of the postings; n_docs and avg_len come from one
+        aggregation job."""
+        if doc_stats is None:
+            doc_stats = build_doc_stats(postings)
+        row = doc_stats.agg(
+            F.count(F.lit(1)).alias("n"), F.avg("doclen").alias("avg")
+        ).collect()[0]
+        return cls(
+            postings=postings,
+            doc_stats=doc_stats,
+            term_stats=build_term_stats(postings).persist(),
+            n_docs=int(row["n"] or 0),
+            avg_len=float(row["avg"] or 0.0),
+            carrier=carrier,
+        )
 
     @classmethod
     def from_fused_carrier(cls, carrier: DataFrame) -> "InvertedIndex":
@@ -313,19 +434,10 @@ class InvertedIndex:
         streaming/resume.py (pinned in test_plan_shapes)."""
         carrier = carrier.persist()
         ok = carrier.filter(F.col("status") == "ok")
-        postings = explode_fused_carrier(carrier)
-        doc_stats = ok.select("doc", F.col("doclen").cast("long").alias("doclen"))
-        term_stats = build_term_stats(postings).persist()
-        row = doc_stats.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("doclen").alias("avg")
-        ).collect()[0]
-        return cls(
-            postings=postings,
-            doc_stats=doc_stats,
-            term_stats=term_stats,
-            n_docs=int(row["n"] or 0),
-            avg_len=float(row["avg"] or 0.0),
-            carrier=carrier,
+        return cls.from_postings(
+            explode_fused_carrier(carrier),
+            ok.select("doc", F.col("doclen").cast("long").alias("doclen")),
+            carrier,
         )
 
     @classmethod
@@ -378,31 +490,34 @@ class InvertedIndex:
 
     @classmethod
     def read(cls, spark, base_dir: str, store=None) -> "InvertedIndex":
-        """Reopen a written index. Collection stats come from doc_stats (two
-        tiny aggregations); the bucket partition columns stay available for
-        pruned point lookups."""
+        """Reopen a written index with no aggregation job (its only jobs
+        are the parquet reader's file listing and schema inference): the
+        term dictionary is read from term_stats on the driver, n_docs is
+        the doc_stats row count from its footers, and total length is the
+        dictionary's sum of cf (doclen is the sum of wdf), so avg_len equals
+        Spark's avg of doclen for integer sums below 2^53."""
         if store is None:
             from ..sources.tables import ParquetDirStore
 
             store = ParquetDirStore(base_dir)
-        postings = store.read_table(spark, "postings").drop("term_bucket")
-        doc_stats = store.read_table(spark, "doc_stats").drop("doc_bucket")
-        term_stats = store.read_table(spark, "term_stats")
-        try:  # older indexes lack the table (or carry the pre-round-4
-            # plain-trigram layout under "vocab_tri"): rebuilt lazily instead
+        bucketed = store.read_table(spark, "postings")
+        try:  # an index written before the table: built lazily instead
             vocab_frag = store.read_table(spark, "vocab_frag")
-        except Exception:
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             vocab_frag = None
-        row = doc_stats.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("doclen").alias("avg")
-        ).collect()[0]
+        dictionary = TermDictionary(store.read_arrow(spark, "term_stats"))
+        n_docs = store.row_count(spark, "doc_stats")
         return cls(
-            postings=postings,
-            doc_stats=doc_stats,
-            term_stats=term_stats,
-            n_docs=int(row["n"] or 0),
-            avg_len=float(row["avg"] or 0.0),
+            postings=bucketed.drop("term_bucket"),
+            doc_stats=store.read_table(spark, "doc_stats").drop("doc_bucket"),
+            term_stats=store.read_table(spark, "term_stats"),
+            n_docs=n_docs,
+            avg_len=float(dictionary.total_len) / n_docs if n_docs else 0.0,
             vocab_frag=vocab_frag,
+            dictionary=dictionary,
+            bucketed_postings=bucketed,
         )
 
     def write(self, base_dir: str, store=None) -> None:

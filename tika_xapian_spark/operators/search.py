@@ -20,10 +20,18 @@ Weights sum across matched terms (R4); ties break by ascending doc key (R6,
 Enquire::ASCENDING — omenquire.cc:524-528); page size 100 matches the
 reference's get_mset(0, 100) (/root/reference/src/xapian_utils.rs:700).
 
-Scale notes: query-term statistics are tiny (q terms) — they broadcast-join
-against postings; the postings side is bucket-partitioned by term so the scan
-prunes. Top-k is TakeOrderedAndProject — the distributed analogue of the
-reference's bounded result heap (XC matcher/multimatch.cc:794-830).
+Scale notes: every scoring operator is one postings scan
+(InvertedIndex.postings_of): a pushed ``term IN`` filter and, over a written
+index, a ``term_bucket IN`` partition filter, so the scan opens only the
+query terms' bucket directories. Query-term statistics come from the
+index's driver-held term dictionary, so termweights are plan literals — a
+literal term -> weight map, no join. A SYNONYM of two or more terms is the
+one statistic the dictionary cannot give: its pseudo-term df (docs matching
+any member) is a broadcast 1-row aggregate of the same scan. A boolean tree
+over term, synonym and wildcard leaves is one scan and one groupBy
+(match_leaves; the query compiler's Executor combines the leaves). Top-k
+is TakeOrderedAndProject — the distributed analogue of the reference's
+bounded result heap (XC matcher/multimatch.cc:794-830).
 """
 
 from __future__ import annotations
@@ -32,7 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.porter2 import stem as porter2_stem
-from .index import InvertedIndex
+from .index import InvertedIndex, sql_string
 
 K1 = 1.0
 K2 = 0.0
@@ -60,31 +68,52 @@ def stem_query_term(term: str, prefix: str = "") -> str:
     return "Z" + prefix + porter2_stem(t) if _should_stem(t) else prefix + t
 
 
-def _literal_qterms(spark, terms: dict[str, int]):
-    """(term, wqf) rows as a PURE-PLAN literal relation: createDataFrame on
-    a Python list runs a driver RDD job per call (~0.4s of serial latency on
-    every query); exploding a literal array costs nothing until the
-    broadcast build and never touches the Python-RDD path."""
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("term"), F.lit(int(w)).cast("int").alias("wqf")
-            )
-            for t, w in terms.items()
-        ]
-    )
+# Scoring expressions are SQL text: one call into the JVM each, where
+# Column composition costs several per operator and dominated a keystroke's
+# plan-building time. Doubles ride as repr literals, which round-trip.
+
+
+def _termweight(df: str, n_docs: int, wqf: int) -> str:
+    """BM25's termweight over the SQL df expression ``df``. Over a literal
+    df Catalyst folds it, log included, to one double with the JVM's log
+    (Python's math.log differs from it in the last place on ~5% of (N, df)
+    pairs, so the log stays in the plan)."""
+    tw = f"(({float(n_docs)!r}D - {df} + 0.5D) / ({df} + 0.5D))"
+    factor = (K3 + 1) * wqf / (K3 + wqf)
     return (
-        spark.range(1)
-        .select(F.explode(entries).alias("e"))
-        .select("e.term", "e.wqf")
+        f"(ln(CASE WHEN {tw} < 2.0D THEN {tw} * 0.5D + 1.0D ELSE {tw} END)"
+        f" * {factor!r}D * {K1 + 1!r}D)"
     )
 
 
-def _termweight(df_col: Column, n_docs: int, wqf: Column) -> Column:
-    tw = (F.lit(float(n_docs)) - df_col + 0.5) / (df_col + 0.5)
-    tw = F.when(tw < 2.0, tw * 0.5 + 1.0).otherwise(tw)
-    wqf_factor = (F.lit(K3 + 1) * wqf) / (F.lit(K3) + wqf)
-    return F.log(tw) * wqf_factor * F.lit(K1 + 1)
+def _bm25(index: InvertedIndex, weight: str, wdf: str) -> str:
+    """SQL of the BM25 part of a term with ``weight`` occurring ``wdf``
+    times in a doc; doclen rides every postings row."""
+    avg_len = index.avg_len if index.avg_len > 0 else 1.0
+    norm = (
+        f"{K1!r}D * (greatest(doclen / {avg_len!r}D, {MIN_NORMLEN!r}D)"
+        f" * {B!r}D + {1 - B!r}D)"
+    )
+    return f"({weight} * ({wdf} / ({norm} + {wdf})))"
+
+
+def _weighted_postings(index: InvertedIndex, terms: dict[str, int]) -> DataFrame | None:
+    """The postings of the dictionary terms of ``terms`` (the others have no
+    postings), each with its BM25 ``part``: one pruned scan, weighted
+    through a literal term -> termweight map. None when no term is in the
+    dictionary."""
+    d = index.term_dictionary()
+    weights = {
+        t: _termweight(str(stats[0]), index.n_docs, wqf)
+        for t, wqf in terms.items()
+        if (stats := d.stats(t)) is not None
+    }
+    if not weights:
+        return None
+    wmap = ", ".join(f"{sql_string(t)}, {w}" for t, w in weights.items())
+    return index.postings_of(list(weights)).withColumn(
+        "part", F.expr(_bm25(index, f"map({wmap})[term]", "wdf"))
+    )
 
 
 def score_terms(
@@ -110,38 +139,16 @@ def score_terms(
     """
     if isinstance(terms, list):
         terms = {t: 1 for t in terms}
-    if not terms:
+    parts = _weighted_postings(index, terms)
+    if parts is None:
         out = _empty_matches(index)
         return out.withColumn("n_sub", F.lit(0)) if with_nsub else out
-    term_list = list(terms)
-    qdf = _literal_qterms(index.postings.sparkSession, terms)
-    # tiny build side: broadcast term stats + query terms into the postings
-    # scan. The static IN filter is semantically redundant with the join but
-    # REACHES THE PARQUET SCAN as a pushed filter (the join key alone never
-    # pushes), so over a written term-sorted index the row-group stats skip
-    # every non-matching group — the B-tree-seek analogue; without it every
-    # query is a full postings scan.
-    weights = (
-        index.term_stats.filter(F.col("term").isin(term_list))
-        .join(F.broadcast(qdf), "term")
-        .withColumn("termweight", _termweight(F.col("df"), index.n_docs, F.col("wqf")))
-        .select("term", "termweight")
-    )
-    avg_len = index.avg_len if index.avg_len > 0 else 1.0
-    normlen = F.greatest(F.col("doclen") / F.lit(avg_len), F.lit(MIN_NORMLEN))
-    denom = F.lit(K1) * (normlen * F.lit(B) + F.lit(1 - B)) + F.col("wdf")
-    part = F.col("termweight") * (F.col("wdf") / denom)
+    if candidates is not None:
+        parts = parts.join(candidates.select("doc"), "doc", "left_semi")
     aggs = [F.sum("part").alias("score")]
     if with_nsub:
         aggs.append(F.count(F.lit(1)).cast("int").alias("n_sub"))
-    postings = index.postings.filter(F.col("term").isin(term_list))
-    if candidates is not None:
-        postings = postings.join(candidates.select("doc"), "doc", "left_semi")
-    scored = postings.join(F.broadcast(weights), "term")
-    if "doclen" not in postings.columns:
-        # legacy layout without denormalized doclen: join doc_stats
-        scored = scored.join(index.doc_stats, "doc")
-    return scored.withColumn("part", part).groupBy("doc").agg(*aggs)
+    return parts.groupBy("doc").agg(*aggs)
 
 
 def score_terms_all(
@@ -151,8 +158,7 @@ def score_terms_all(
     op_and over per-term match sets — score is the sum of per-term BM25
     parts, docs restricted to those matching every term — but the postings
     table is scanned once (filter term IN (...), groupBy doc, HAVING
-    count = |terms|) instead of once per term. The Executor fuses Bool AND
-    over term leaves into this plan."""
+    count = |terms|) instead of once per term."""
     if isinstance(terms, list):
         terms = {t: 1 for t in terms}
     if not terms:
@@ -250,30 +256,10 @@ def op_max_terms(index: InvertedIndex, terms: list[str]) -> DataFrame:
     the single-term score, so groupBy(doc).max(part) beats folding op_max
     over |expansion| separate scans — scan volume constant in expansion
     width, one shuffle total."""
-    if not terms:
+    parts = _weighted_postings(index, dict.fromkeys(terms, 1))
+    if parts is None:
         return _empty_matches(index)
-    term_list = list(dict.fromkeys(terms))
-    qdf = _literal_qterms(index.postings.sparkSession, {t: 1 for t in term_list})
-    weights = (
-        index.term_stats.filter(F.col("term").isin(term_list))
-        .join(F.broadcast(qdf), "term")
-        .withColumn(
-            "termweight", _termweight(F.col("df"), index.n_docs, F.lit(1))
-        )
-        .select("term", "termweight")
-    )
-    avg_len = index.avg_len if index.avg_len > 0 else 1.0
-    normlen = F.greatest(F.col("doclen") / F.lit(avg_len), F.lit(MIN_NORMLEN))
-    denom = F.lit(K1) * (normlen * F.lit(B) + F.lit(1 - B)) + F.col("wdf")
-    scored = index.postings.filter(F.col("term").isin(term_list)).join(
-        F.broadcast(weights), "term"
-    )
-    if "doclen" not in index.postings.columns:
-        scored = scored.join(index.doc_stats, "doc")
-    part = F.col("termweight") * (F.col("wdf") / denom)
-    return scored.withColumn("part", part).groupBy("doc").agg(
-        F.max("part").alias("score")
-    )
+    return parts.groupBy("doc").agg(F.max("part").alias("score"))
 
 
 def value_weight_matches(
@@ -302,33 +288,44 @@ def op_pure_not(index: InvertedIndex, m: DataFrame) -> DataFrame:
 # ----------------------------------------------------------- positional ops
 
 
-def _positions_for(index: InvertedIndex, terms: list[str]) -> DataFrame:
-    """doc rows carrying one positions array column per query term (p0..pn-1),
-    restricted to docs containing ALL terms — as ONE postings scan
-    (term IN (...) + groupBy doc with a per-term positions pivot) instead of
-    one filtered scan per term chained through M-1 self-joins: scan volume
-    is constant in M and a single aggregation replaces the join shuffles.
-    Duplicate query terms (e.g. a repeated phrase word) share the scanned
-    positions array, exactly as the join form duplicated it."""
+def _positions_for(index: InvertedIndex, terms: list[str]) -> DataFrame | None:
+    """doc rows carrying one positions array column per query term (p0..pn-1)
+    and the BM25 score summed over the distinct terms, restricted to docs
+    containing ALL terms — as ONE postings scan (term IN (...) + groupBy doc
+    with a per-term positions pivot) instead of one filtered scan per term
+    chained through M-1 self-joins, and a second scan to score them: scan
+    volume is constant in M and a single aggregation replaces the join
+    shuffles. Duplicate query terms (e.g. a repeated phrase word) share the
+    scanned positions array, exactly as the join form duplicated it. None
+    when a term is in no document (nothing can match)."""
     uniq = list(dict.fromkeys(terms))
-    sub = index.postings.filter(F.col("term").isin(uniq)).select(
-        "doc", "term", "positions"
-    )
+    d = index.term_dictionary()
+    if any(d.stats(t) is None for t in uniq):
+        return None
     aggs = [
-        F.first(
-            F.when(F.col("term") == t, F.col("positions")), ignorenulls=True
-        ).alias(f"u{i}")
+        f"first(CASE WHEN term = {sql_string(t)} THEN positions END, true) AS u{i}"
         for i, t in enumerate(uniq)
     ]
     # postings are unique per (doc, term), so count(*) == matched term count
+    aggs += ["count(1) AS _nt", "sum(part) AS score"]
     agg = (
-        sub.groupBy("doc")
-        .agg(*aggs, F.count(F.lit(1)).alias("_nt"))
-        .filter(F.col("_nt") == len(uniq))
+        _weighted_postings(index, dict.fromkeys(uniq, 1))
+        .groupBy("doc")
+        .agg(*map(F.expr, aggs))
+        .filter(f"_nt = {len(uniq)}")
     )
     pos_of = {t: f"u{i}" for i, t in enumerate(uniq)}
     return agg.select(
-        "doc", *[F.col(pos_of[t]).alias(f"p{i}") for i, t in enumerate(terms)]
+        "doc", "score",
+        *[F.col(pos_of[t]).alias(f"p{i}") for i, t in enumerate(terms)],
+    )
+
+
+def _positional(j: DataFrame, hit: Column, score: bool) -> DataFrame:
+    """The docs of _positions_for rows ``j`` that pass ``hit``, scored by
+    the BM25 sum of their terms, or 0 (boolean) without ``score``."""
+    return j.filter(hit).select(
+        "doc", F.col("score") if score else F.lit(0.0).alias("score")
     )
 
 
@@ -344,25 +341,17 @@ def match_phrase(index: InvertedIndex, terms: list[str], score: bool = True) -> 
         raise ValueError("empty phrase")
     j = _positions_for(index, terms)
     if j is None:
-        raise ValueError("empty phrase")
-    if len(terms) == 1:
-        matched = j.select("doc")
-    else:
-        # closure factory, not a default-arg lambda: pyspark derives HOF
-        # arity from the signature, so a 2-param lambda would get (elem, idx)
-        def shift_by(off: int):
-            return lambda x: x - off
+        return _empty_matches(index)
 
-        inter = F.col("p0")
-        for k in range(1, len(terms)):
-            inter = F.array_intersect(
-                inter, F.transform(F.col(f"p{k}"), shift_by(k))
-            )
-        matched = j.filter(F.size(inter) > 0).select("doc")
-    if not score:
-        return matched.select("doc", F.lit(0.0).alias("score"))
-    scored = score_terms(index, list(dict.fromkeys(terms)))
-    return scored.join(matched, "doc", "left_semi")
+    # closure factory, not a default-arg lambda: pyspark derives HOF arity
+    # from the signature, so a 2-param lambda would get (elem, idx)
+    def shift_by(off: int):
+        return lambda x: x - off
+
+    inter = F.col("p0")
+    for k in range(1, len(terms)):
+        inter = F.array_intersect(inter, F.transform(F.col(f"p{k}"), shift_by(k)))
+    return _positional(j, F.size(inter) > 0, score)
 
 
 def match_near(
@@ -380,6 +369,8 @@ def match_near(
     if len(terms) < 2:
         raise ValueError("NEAR needs >= 2 terms")
     j = _positions_for(index, terms)
+    if j is None:
+        return _empty_matches(index)
     k = len(terms)
 
     # Sorted-merge sweep (the plan Xapian's nearpostlist runs): merge all
@@ -413,11 +404,7 @@ def match_near(
             *[l.alias(f"l{i}") for i, l in enumerate(lasts)],
         )
 
-    matched = j.filter(F.aggregate(merged, init, step)["found"]).select("doc")
-    if not score:
-        return matched.select("doc", F.lit(0.0).alias("score"))
-    scored = score_terms(index, list(dict.fromkeys(terms)))
-    return scored.join(matched, "doc", "left_semi")
+    return _positional(j, F.aggregate(merged, init, step)["found"], score)
 
 
 def match_adj(
@@ -445,6 +432,8 @@ def match_adj(
     if len(terms) < 2:
         raise ValueError("ADJ needs >= 2 terms")
     j = _positions_for(index, terms)
+    if j is None:
+        return _empty_matches(index)
     k = len(terms)
 
     def tag_with(i: int):
@@ -481,53 +470,79 @@ def match_adj(
             *[m.alias(f"m{i}") for i, m in enumerate(new_m)],
         )
 
-    matched = j.filter(F.aggregate(merged, init, step)["found"]).select("doc")
-    if not score:
-        return matched.select("doc", F.lit(0.0).alias("score"))
-    scored = score_terms(index, list(dict.fromkeys(terms)))
-    return scored.join(matched, "doc", "left_semi")
+    return _positional(j, F.aggregate(merged, init, step)["found"], score)
 
 
 # ------------------------------------------------------------- synonym/elite
 
 
+def match_leaves(
+    index: InvertedIndex, leaves: list[tuple[list[str], int]]
+) -> tuple[DataFrame, list[tuple[str, str]]] | None:
+    """Query leaves in ONE postings scan and ONE groupBy(doc): the per-doc
+    frame, and per leaf the SQL of its (score, matched) columns — score 0.0
+    where the doc does not match the leaf — so boolean operators combine
+    leaves as column math instead of joins and unions of match sets.
+
+    A leaf is (member terms, wqf). One member is a term weighted by its
+    dictionary df; a term in no document matches nothing. Two or more are a
+    Q12 SYNONYM (synonympostlist.cc): one pseudo-term whose wdf is the
+    members' summed wdf and whose df is the number of docs matching any
+    member. That df is the one statistic the dictionary cannot give, so it
+    rides the plan as a broadcast 1-row aggregate of the same per-doc frame
+    — no eager driver job. None when no leaf can match."""
+    terms: list[str] = []
+    aggs, syn_dfs, scores = ["max(doclen) AS doclen"], [], []
+    for i, (members, wqf) in enumerate(leaves):
+        members = list(dict.fromkeys(members))
+        if len(members) == 1:
+            stats = index.term_dictionary().stats(members[0])
+            members = members if stats is not None else []
+        if not members:
+            scores.append(("0.0D", "false"))
+            continue
+        wdf = f"_w{i}"
+        if len(members) == 1:
+            weight = _termweight(str(stats[0]), index.n_docs, wqf)
+            hit = f"term = {sql_string(members[0])}"
+        else:
+            weight = _termweight(f"_df{i}", index.n_docs, wqf)
+            hit = f"term IN ({', '.join(map(sql_string, members))})"
+            syn_dfs.append(f"CAST(count({wdf}) AS DOUBLE) AS _df{i}")
+        terms += members
+        aggs.append(f"sum(CASE WHEN {hit} THEN wdf END) AS {wdf}")
+        scores.append(
+            (f"coalesce({_bm25(index, weight, wdf)}, 0.0D)", f"({wdf} IS NOT NULL)")
+        )
+    if not terms:
+        return None
+    frame = (
+        index.postings_of(list(dict.fromkeys(terms)))
+        .groupBy("doc")
+        .agg(*map(F.expr, aggs))
+    )
+    if syn_dfs:
+        frame = frame.crossJoin(F.broadcast(frame.agg(*map(F.expr, syn_dfs))))
+    return frame, scores
+
+
 def op_synonym(index: InvertedIndex, terms: list[str], wqf: int = 1) -> DataFrame:
     """Q12 SYNONYM: match like OR but weight as a single pseudo-term whose
     postings are the merged member postings (synonympostlist.cc semantics,
-    with df = docs matching any member, wdf summed)."""
-    sub = index.postings.filter(F.col("term").isin(terms))
-    has_doclen = "doclen" in sub.columns
-    aggs = [F.sum("wdf").cast("int").alias("wdf")]
-    if has_doclen:  # denormalized doclen: no doc_stats join below
-        aggs.append(F.max("doclen").alias("doclen"))
-    merged = sub.groupBy("doc").agg(*aggs)
-    # The pseudo-term's df (docs matching any member) is folded into the plan
-    # as a broadcast 1-row scalar instead of an eager .count(): no extra
-    # driver-synchronized job per query, and no re-execution of the merge
-    # subplan in the returned DataFrame (FLAG_PARTIAL hits this per keystroke).
-    syn_df = merged.agg(F.count(F.lit(1)).cast("double").alias("_syn_df"))
-    tw = _termweight(F.col("_syn_df"), index.n_docs, F.lit(float(wqf)))
-    avg_len = index.avg_len if index.avg_len > 0 else 1.0
-    normlen = F.greatest(F.col("doclen") / F.lit(avg_len), F.lit(MIN_NORMLEN))
-    denom = F.lit(K1) * (normlen * F.lit(B) + F.lit(1 - B)) + F.col("wdf")
-    out = merged.crossJoin(F.broadcast(syn_df))
-    if not has_doclen:
-        out = out.join(index.doc_stats, "doc")
-    return out.select("doc", (tw * (F.col("wdf") / denom)).alias("score"))
+    with df = docs matching any member, wdf summed) — one leaf of
+    match_leaves."""
+    fused = match_leaves(index, [(terms, wqf)])
+    if fused is None:
+        return _empty_matches(index)
+    frame, ((score, _),) = fused
+    return frame.selectExpr("doc", f"{score} AS score")
 
 
 def expand_wildcard(index: InvertedIndex, prefix: str, limit: int = 1000) -> list[str]:
-    """Q15: term-dictionary expansion of a trailing-* pattern. Bounded collect
-    of matching vocabulary terms (ordered by df desc, then term, for a
-    deterministic cap)."""
-    rows = (
-        index.term_stats.filter(F.col("term").startswith(prefix))
-        .orderBy(F.desc("df"), F.asc("term"))
-        .limit(limit)
-        .select("term")
-        .collect()
-    )
-    return [r["term"] for r in rows]
+    """Q15: term-dictionary expansion of a trailing-* pattern — a bisect
+    over the driver-held dictionary, Xapian's seek in the term B-tree.
+    Capped at ``limit`` terms by df descending, then term ascending."""
+    return index.term_dictionary().expand(prefix, limit)
 
 
 def op_elite_set(index: InvertedIndex, terms: list[str], n: int) -> DataFrame:
@@ -535,9 +550,9 @@ def op_elite_set(index: InvertedIndex, terms: list[str], n: int) -> DataFrame:
     then OR them — Xapian ranks elite candidates by each subquery's
     ``get_maxweight()`` (XC api/queryinternal.cc QueryEliteSet::done), which
     for a term is the BM25 ceiling we already store for WAND
-    (term_stats.max_wdf → _term_upper_bounds), NOT raw rarity: a common but
-    bursty term (huge max_wdf) can outrank a rare flat one. Ties break by
-    term asc for determinism."""
+    (the dictionary's max_wdf → _term_upper_bounds), NOT raw rarity: a
+    common but bursty term (huge max_wdf) can outrank a rare flat one. Ties
+    break by term asc for determinism."""
     ubs = _term_upper_bounds(index, {t: 1 for t in terms})
     keep = [t for t in sorted(ubs, key=lambda t: (-ubs[t], t))[:n]]
     return score_terms(index, keep)
@@ -651,7 +666,7 @@ def spelling_suggestions(
     vocab_frag = index.spelling_table().filter(F.col("frag").isin(qfrags))
     if min_df > 1:
         vocab_frag = vocab_frag.filter(F.col("df") >= min_df)
-    # literal relation (no per-keystroke driver RDD job — cf. _literal_qterms)
+    # literal relation: an exploded literal array, no driver RDD job
     pairs = F.array(
         *[
             F.struct(F.lit(w).alias("word"), F.lit(f).alias("frag"))
@@ -706,26 +721,26 @@ def top_k(matches: DataFrame, k: int = PAGE_SIZE, key: str = "doc") -> DataFrame
 
 
 def _term_upper_bounds(index: InvertedIndex, terms: dict[str, int]) -> dict[str, float]:
-    """Per-term BM25 score ceiling from the stored term_stats.max_wdf (the
+    """Per-term BM25 score ceiling from the dictionary's max_wdf (the
     WAND max-score bound — Broder et al. CIKM'03; Xapian stores the same
     bound as wdf_upper_bound). The per-posting part is increasing in wdf and
-    decreasing in normlen, so the max is at wdf=max_wdf, normlen=MIN_NORMLEN."""
+    decreasing in normlen, so the max is at wdf=max_wdf, normlen=MIN_NORMLEN.
+    Terms in no document have no bound."""
     import math
 
-    rows = (
-        index.term_stats.filter(F.col("term").isin(list(terms)))
-        .select("term", "df", "max_wdf")
-        .collect()  # bounded: |query terms| rows, same dictionary read Xapian does
-    )
+    d = index.term_dictionary()
     ubs: dict[str, float] = {}
-    for r in rows:
-        tw = (index.n_docs - r["df"] + 0.5) / (r["df"] + 0.5)
+    for t, wqf in terms.items():
+        stats = d.stats(t)
+        if stats is None:
+            continue
+        df, max_wdf = stats
+        tw = (index.n_docs - df + 0.5) / (df + 0.5)
         if tw < 2.0:
             tw = tw * 0.5 + 1.0
-        wqf = terms[r["term"]]
         termweight = math.log(tw) * ((K3 + 1) * wqf / (K3 + wqf)) * (K1 + 1)
-        denom = K1 * (MIN_NORMLEN * B + (1 - B)) + r["max_wdf"]
-        ubs[r["term"]] = termweight * r["max_wdf"] / denom
+        denom = K1 * (MIN_NORMLEN * B + (1 - B)) + max_wdf
+        ubs[t] = termweight * max_wdf / denom
     return ubs
 
 
@@ -752,25 +767,14 @@ def top_k_wand(
     groupBy over the stopword's full posting list into one over the rare
     term's candidates.
 
-    ONE driver round-trip (r4 verdict #8): only the bounded
-    ``_term_upper_bounds`` dictionary read collects (Xapian reads the same
-    term stats from its B-tree headers). tau is NOT collected — it rides
-    the plan as a broadcast 1-row aggregate (k-th best partial score of the
-    highest-ceiling term), and prefix membership becomes a per-term
-    CONSTANT: in ceiling-descending order, term t is in the prune prefix
-    iff ``rest_from[t]`` (the driver-known sum of ceilings from t onward)
-    ``>= tau - margin``. The candidate branch joins each posting to its
-    term's rest_from literal, cross-joins broadcast tau, and filters —
-    non-prefix postings die map-side right after the broadcast joins, so
-    the candidate DISTINCT and the scoring groupBy still shuffle only
-    prefix-matched docs. Trade vs the two-job form: the candidate branch
-    map-scans all query terms' postings instead of only the prefix's (the
-    prefix isn't known at plan time), but that scan is shuffle-free and the
-    pushed ``term IN`` filter still skips every non-query row group; the
-    saved ~0.3s driver sync dominates at serving latency. When tau
-    resolves to 0 (fewer than k matches) or every ceiling is needed, the
-    filter passes everything and the plan degrades to the exact OR — same
-    results, no special-case fallback."""
+    No driver round-trip: the ceilings come from the driver-held
+    dictionary, and tau rides the plan as a broadcast 1-row aggregate.
+    Prefix membership is a per-term constant: in ceiling-descending order,
+    term t is in the prune prefix iff ``rest_from[t]`` (the sum of ceilings
+    from t onward, a literal term -> value map) ``>= tau - margin``, so
+    non-prefix postings die map-side and only prefix-matched docs shuffle.
+    When tau resolves to 0 (fewer than k matches) or every ceiling is
+    needed, the filter passes everything: the exact OR, no special case."""
     if isinstance(terms, list):
         terms = {t: 1 for t in terms}
     ubs = _term_upper_bounds(index, terms)
@@ -784,7 +788,6 @@ def top_k_wand(
     for t in order:
         rest_from[t] = rest
         rest -= ubs[t]
-    spark = index.postings.sparkSession
     # k-th best single-term partial score as a broadcast scalar: a valid
     # lower bound on the true k-th best final score (every doc's final
     # score >= its partial). Fewer than k matches -> tau = 0 (no pruning).
@@ -798,26 +801,14 @@ def top_k_wand(
             ).alias("_tau")
         )
     )
-    rf_entries = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("term"),
-                F.lit(float(rest_from[t])).alias("_rest_from"),
-            )
-            for t in order
-        ]
-    )
-    rf_df = (
-        spark.range(1)
-        .select(F.explode(rf_entries).alias("e"))
-        .select("e.term", "e._rest_from")
-    )
+    rest_of = F.create_map(
+        *[x for t in order for x in (F.lit(t), F.lit(float(rest_from[t])))]
+    )[F.col("term")]
     # float-accumulation safety margin on the bound, as an expression of tau
     margin = F.lit(1e-9) * (F.lit(1.0) + F.abs(F.col("_tau")))
     cand = (
-        index.postings.filter(F.col("term").isin(order))
-        .select("doc", "term")
-        .join(F.broadcast(rf_df), "term")
+        index.postings_of(order)
+        .select("doc", rest_of.alias("_rest_from"))
         .crossJoin(F.broadcast(tau_df))
         .filter(F.col("_rest_from") >= F.col("_tau") - margin)
         .select("doc")
@@ -982,8 +973,6 @@ def expand_terms(
         F.lit(expand_k) * F.col("doclen") / F.lit(avg_len) + wdf_adj
     )
     contrib = index.postings.join(rel, "doc", "left_semi")
-    if "doclen" not in contrib.columns:
-        contrib = contrib.join(index.doc_stats, "doc")
     # aggregate only what the chosen scheme reads (a dead crossJoin or
     # aggregate is not pruned by Catalyst once multiplicity changes)
     if scheme == "bo1":

@@ -1149,7 +1149,7 @@ def kcenter_seeds(
             for s, i, d in picks
         ]
     )
-    # literal relation (zero driver RDD jobs — the _literal_qterms pattern)
+    # literal relation: an exploded literal array, zero driver RDD jobs
     return (
         spark.range(1)
         .select(F.explode(entries).alias("e"))

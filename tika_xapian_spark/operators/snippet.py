@@ -431,22 +431,18 @@ def snippets_for_page(
 
     This is page rendering, the exact operation Xapian's TUI runs per hit —
     so the page is collected (it is bounded by construction, like every
-    other driver-side page read in this engine) and stats are prefetched in
-    TWO bounded jobs, not one per word:
+    other driver-side page read in this engine). The stats come from the
+    index's driver-held term dictionary, with no Spark job:
 
-      1. termweights: the query terms' max_part bounds (one term_stats
-         probe — search._term_upper_bounds, the WAND ceilings);
+      1. termweights: the query terms' max_part bounds
+         (search._term_upper_bounds, the WAND ceilings);
       2. background dfs: the page texts are tokenized driver-side with the
-         SAME scanner the snippets use, and term_stats is probed once with
-         `term IN (page vocabulary + Z-stems)` — a pushed point-lookup
-         bounded by the page's vocabulary, the df dictionary the background
-         model needs.
+         SAME scanner the snippets use, and the page vocabulary (+ Z-stems)
+         is looked up in the dictionary.
 
-    At larger page sizes the same two probes feed a broadcast dict + a
+    At larger page sizes the same lookups feed a broadcast dict + a
     mapInPandas over the page instead; the algorithm is per-row either way.
     """
-    from pyspark.sql import functions as F
-
     from . import search as S
 
     # bounded: the page. Sorted by key because the background model below
@@ -474,12 +470,8 @@ def snippets_for_page(
                 vocab.add("Z" + stem_fn(term))
     df_map: dict[str, int] = {}
     if vocab and flags & SNIPPET_BACKGROUND_MODEL:
-        stats = (
-            index.term_stats.filter(F.col("term").isin(sorted(vocab)))
-            .select("term", "df")
-            .collect()
-        )
-        df_map = {r["term"]: int(r["df"]) for r in stats}
+        d = index.term_dictionary()
+        df_map = {t: s[0] for t in vocab if (s := d.stats(t)) is not None}
 
     ctx = SnippetContext(
         termweights=tws,

@@ -31,6 +31,7 @@ import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..functions.tokenizer import scan_terms
 from ..operators import search as S
@@ -737,20 +738,6 @@ def _or_leaf_terms(node: Node) -> list[tuple[str, int]] | None:
     return None
 
 
-def _and_leaf_terms(node: Node) -> list[tuple[str, int]] | None:
-    """Index terms of a pure AND-of-StemTerm subtree, or None if any
-    descendant is not a plain stemmed term (the fusion precondition for
-    score_terms_all)."""
-    if isinstance(node, StemTerm):
-        return [(S.stem_query_term(node.word, node.prefix), node.wqf)]
-    if isinstance(node, Bool) and node.op == "AND":
-        l = _and_leaf_terms(node.left)
-        r = _and_leaf_terms(node.right)
-        if l is not None and r is not None:
-            return l + r
-    return None
-
-
 def snippet_shapes(node: Node) -> tuple[list[str], list[tuple[str, ...]], list[str]]:
     """check_query (termgenerator_internal.cc:672-720) over our AST: the
     (loose_terms, exact_phrases, wildcards) decomposition MSet::snippet
@@ -787,6 +774,24 @@ def snippet_shapes(node: Node) -> tuple[list[str], list[tuple[str, ...]], list[s
     return loose, phrases, wildcards
 
 
+# The boolean operators of operators/search.py (op_and ... op_filter) as
+# SQL over match_leaves' scores. A side is (score, matched), its score 0.0
+# wherever it does not match; each operator adds the weights the join form
+# adds (x + 0.0 == x), so a fused tree scores every doc bit-identically.
+def _gated(matched: str, score: str) -> tuple[str, str]:
+    return f"(CASE WHEN {matched} THEN {score} ELSE 0.0D END)", matched
+
+
+_BOOL_SCORES = {
+    "AND": lambda l, r: _gated(f"({l[1]} AND {r[1]})", f"({l[0]} + {r[0]})"),
+    "OR": lambda l, r: (f"({l[0]} + {r[0]})", f"({l[1]} OR {r[1]})"),
+    "AND_NOT": lambda l, r: _gated(f"({l[1]} AND NOT {r[1]})", l[0]),
+    "XOR": lambda l, r: _gated(f"({l[1]} <> {r[1]})", f"({l[0]} + {r[0]})"),
+    "AND_MAYBE": lambda l, r: _gated(l[1], f"({l[0]} + {r[0]})"),
+    "FILTER": lambda l, r: _gated(f"({l[1]} AND {r[1]})", l[0]),
+}
+
+
 class Executor:
     """Lowers the AST to (doc, score) DataFrames over an InvertedIndex.
 
@@ -810,49 +815,11 @@ class Executor:
 
     def run(self, node: Node) -> DataFrame:
         idx = self.index
-        if isinstance(node, Empty):
-            return S._empty_matches(idx)
-        if isinstance(node, PartialTerm):
-            # (WILDCARD SYNONYM prefix+word) OR Zstem
-            expanded = S.expand_wildcard(
-                idx, node.prefix + node.word, self.wildcard_limit
-            )
-            expanded = [t for t in expanded if not t.startswith("Z")]
-            wc = (
-                S.op_synonym(idx, expanded)
-                if expanded
-                else S._empty_matches(idx)
-            )
-            st = S.score_terms(idx, [S.stem_query_term(node.word, node.prefix)])
-            return S.op_or(wc, st)
-        if isinstance(node, StemTerm):
-            return S.score_terms(
-                idx, {S.stem_query_term(node.word, node.prefix): node.wqf}
-            )
+        if _fusable(node):
+            return self._fused(node)
         if isinstance(node, PhraseTerms):
             return S.match_phrase(idx, [node.prefix + w for w in node.words])
-        if isinstance(node, WildcardTerm):
-            expanded = S.expand_wildcard(
-                idx, node.prefix + node.pattern, self.wildcard_limit
-            )
-            expanded = [t for t in expanded if not t.startswith("Z")]
-            if not expanded:
-                return S._empty_matches(idx)
-            return S.op_synonym(idx, expanded)
         if isinstance(node, Bool):
-            if node.op == "AND":
-                # fuse AND-of-term-leaves into one postings scan
-                leaves = _and_leaf_terms(node)
-                if leaves is not None and len(set(t for t, _ in leaves)) == len(leaves):
-                    return S.score_terms_all(idx, dict(leaves))
-            if node.op == "OR":
-                # fuse OR-of-distinct-term-leaves into one postings scan
-                # (duplicate terms stay as separate branches: the reference
-                # OR-joins repeated words, whose weights SUM — wqf folding
-                # would change the score)
-                leaves = _or_leaf_terms(node)
-                if leaves is not None and len(set(t for t, _ in leaves)) == len(leaves):
-                    return S.score_terms(idx, dict(leaves))
             l, r = self.run(node.left), self.run(node.right)
             return {
                 "AND": S.op_and,
@@ -889,15 +856,10 @@ class Executor:
                 S.stem_query_term(w, p) for p, w in _collect_term_pairs(node.child)
             ]
             return S.op_elite_set(idx, zterms, node.n)
-        if isinstance(node, Synonym):
-            terms = _collect_terms(node.left) + _collect_terms(node.right)
-            return S.op_synonym(idx, terms)
         if isinstance(node, RangeOp):
             col = self.range_cols.get(node.fld)
             if self.docs is None or col is None:
                 return S._empty_matches(idx)
-            from pyspark.sql import functions as F
-
             m = self.docs.filter(
                 (F.col(col) >= node.lo.replace("_", " "))
                 & (F.col(col) <= node.hi.replace("_", " "))
@@ -906,6 +868,75 @@ class Executor:
                 F.col(self.doc_key).alias("doc"), F.lit(0.0).alias("score")
             )
         raise ValueError(f"unexecutable node {type(node).__name__}")
+
+    def _expanded(self, pattern: str) -> list[str]:
+        """Unstemmed dictionary terms matching a trailing-* ``pattern``."""
+        expanded = S.expand_wildcard(self.index, pattern, self.wildcard_limit)
+        return [t for t in expanded if not t.startswith("Z")]
+
+    def _fused(self, node: Node) -> DataFrame:
+        """A _fusable tree as ONE postings scan: its leaves become
+        match_leaves columns and its operators column math over them."""
+        leaves: list[tuple[list[str], int]] = []
+
+        def leaf(members: list[str], wqf: int = 1) -> int:
+            leaves.append((members, wqf))
+            return len(leaves) - 1
+
+        def shape(n: Node):
+            """n as a leaf index, an (op, left, right) / (factor, child)
+            tuple, or None for a leaf that matches nothing."""
+            if isinstance(n, StemTerm):
+                return leaf([S.stem_query_term(n.word, n.prefix)], n.wqf)
+            if isinstance(n, PartialTerm):
+                # (WILDCARD SYNONYM prefix+word) OR Zstem
+                wc = self._expanded(n.prefix + n.word)
+                stem = leaf([S.stem_query_term(n.word, n.prefix)])
+                return ("OR", leaf(wc) if wc else None, stem)
+            if isinstance(n, WildcardTerm):
+                wc = self._expanded(n.prefix + n.pattern)
+                return leaf(wc) if wc else None
+            if isinstance(n, Synonym):
+                return leaf(_collect_terms(n.left) + _collect_terms(n.right))
+            if isinstance(n, Bool):
+                return (n.op, shape(n.left), shape(n.right))
+            if isinstance(n, Scale):
+                return (n.factor, shape(n.child))
+            return None  # Empty
+
+        tree = shape(node)
+        fused = S.match_leaves(self.index, leaves)
+        if fused is None:
+            return S._empty_matches(self.index)
+        frame, scores = fused
+
+        def column(t) -> tuple[str, str]:
+            """SQL of a shape's (score, matched); score 0.0 where unmatched."""
+            if t is None:
+                return "0.0D", "false"
+            if isinstance(t, int):
+                return scores[t]
+            if len(t) == 2:
+                score, matched = column(t[1])
+                return f"({score} * {float(t[0])!r}D)", matched
+            return _BOOL_SCORES[t[0]](column(t[1]), column(t[2]))
+
+        score, matched = column(tree)
+        return frame.filter(matched).selectExpr("doc", f"{score} AS score")
+
+
+_FUSED_LEAVES = (Empty, StemTerm, PartialTerm, WildcardTerm, Synonym)
+
+
+def _fusable(node: Node) -> bool:
+    """Whether ``node`` is a tree of boolean operators and scales over term,
+    partial, wildcard and synonym leaves — all of which one match_leaves
+    scan scores."""
+    if isinstance(node, _FUSED_LEAVES):
+        return True
+    if isinstance(node, Bool):
+        return _fusable(node.left) and _fusable(node.right)
+    return isinstance(node, Scale) and _fusable(node.child)
 
 
 def search(

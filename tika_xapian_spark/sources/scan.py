@@ -53,15 +53,28 @@ def _data_files(path: str) -> list[str]:
     return files
 
 
-def _table_meta(path: str) -> tuple[int, int]:
-    """(total row groups, total rows) from parquet footers, read on every
+def _footers(path: str) -> list:
+    """The parquet footers of every data file under ``path``, read on every
     call: a footer peek costs well under a millisecond, and an uncached
-    peek always sees a rewritten file. A layout with no local parquet
-    files, or one whose footers cannot be read, is reported splittable."""
+    peek always sees a rewritten file. An unreadable footer raises."""
     import pyarrow.parquet as pq
 
+    return [pq.read_metadata(f) for f in _data_files(path)]
+
+
+def parquet_rows(path: str) -> int:
+    """The row count of the parquet table at ``path``, from its footers.
+    An unreadable footer raises: a count read around it would be silently
+    wrong."""
+    return sum(m.num_rows for m in _footers(path))
+
+
+def _table_meta(path: str) -> tuple[int, int]:
+    """(total row groups, total rows) from parquet footers. A layout with
+    no local parquet files, or one whose footers cannot be read, is
+    reported splittable."""
     try:
-        metas = [pq.read_metadata(f) for f in _data_files(path)]
+        metas = _footers(path)
     except (OSError, ValueError):  # unreadable footer (pyarrow's ArrowInvalid)
         return _SPLITTABLE
     if not metas:

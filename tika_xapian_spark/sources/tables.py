@@ -21,6 +21,8 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -45,6 +47,16 @@ class ParquetDirStore:
 
     def read_table(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.parquet(self.path(name))
+
+    def read_arrow(self, spark: SparkSession, name: str) -> pa.Table:
+        """A small table, read on the driver with pyarrow: no Spark job."""
+        return pq.read_table(self.path(name))
+
+    def row_count(self, spark: SparkSession, name: str) -> int:
+        """Rows of a table, from its parquet footers: no Spark job."""
+        from .scan import parquet_rows
+
+        return parquet_rows(self.path(name))
 
 
 class IcebergStore:
@@ -87,6 +99,12 @@ class IcebergStore:
     def read_table(self, spark: SparkSession, name: str) -> DataFrame:
         self._check(spark)
         return spark.read.table(self.qualified(name))
+
+    def read_arrow(self, spark: SparkSession, name: str) -> pa.Table:
+        return self.read_table(spark, name).toArrow()
+
+    def row_count(self, spark: SparkSession, name: str) -> int:
+        return self.read_table(spark, name).count()
 
     def merge_sql(self, name: str, source_view: str, key_cols: list[str]) -> str:
         """The MERGE INTO statement for a replace-document upsert: delete the
