@@ -143,20 +143,26 @@ class TestDictionary:
 
     def test_read_runs_no_aggregation_job(self, spark, written):
         """n_docs from the doc_stats footers, total length from the
-        dictionary: a reopen's only Spark jobs are the parquet reader's own
-        (file listing, schema inference)."""
+        dictionary, every table's schema from one footer: a reopen's only
+        Spark jobs are the parallel file listings of the two bucketed
+        tables, one task per partition directory."""
         tracker = spark.sparkContext.statusTracker()
         spark.sparkContext.setJobGroup("read", "read")
         try:
             idx = InvertedIndex.read(spark, written)
         finally:
             spark.sparkContext.setJobGroup("after", "after")
-        names = [
-            tracker.getStageInfo(s).name
+        stages = [
+            tracker.getStageInfo(s)
             for j in tracker.getJobIdsForGroup("read")
             for s in tracker.getJobInfo(j).stageIds
         ]
-        assert all(n.startswith("parquet at ") for n in names), names
+        assert all(st.name.startswith("parquet at ") for st in stages), stages
+        dirs = [
+            sum("=" in d for d in os.listdir(os.path.join(written, table)))
+            for table in ("postings", "doc_stats")
+        ]
+        assert sorted(st.numTasks for st in stages) == sorted(dirs), (stages, dirs)
         row = spark.read.parquet(os.path.join(written, "doc_stats")).agg(
             F.count(F.lit(1)).alias("n"), F.avg("doclen").alias("avg")
         ).collect()[0]
@@ -251,6 +257,51 @@ class TestKeystrokeJobs:
             I.bucket_col("term").alias("b")
         )
         assert buckets == {str(r["b"]) for r in want.collect()}
+
+
+def _z(*words):
+    return [S.stem_query_term(w) for w in words]
+
+
+# query string -> the same match set from the registry's join algebra
+LOWERED = {
+    '"example article" AND markdown': lambda idx: S.op_and(
+        S.match_phrase(idx, ["example", "article"]), S.score_terms(idx, _z("markdown"))
+    ),
+    "markdown NEAR subtitle OR syntax": lambda idx: S.op_or(
+        S.match_near(idx, ["markdown", "subtitle"]), S.score_terms(idx, _z("syntax"))
+    ),
+    'markdown -("example article")': lambda idx: S.op_and_not(
+        S.score_terms(idx, _z("markdown")), S.match_phrase(idx, ["example", "article"])
+    ),
+    "(markdown syntax article ELITE 2) AND NOT subtitle": lambda idx: S.op_and_not(
+        S.op_elite_set(idx, _z("markdown", "syntax", "article"), 2),
+        S.score_terms(idx, _z("subtitle")),
+    ),
+    "article AND NOT (body ADJ main)": lambda idx: S.op_and_not(
+        S.score_terms(idx, _z("article")), S.match_adj(idx, ["body", "main"])
+    ),
+    "article AND NOT (main ADJ body)": lambda idx: S.op_and_not(
+        S.score_terms(idx, _z("article")), S.match_adj(idx, ["main", "body"])
+    ),
+}
+
+
+class TestOneScan:
+    @pytest.mark.parametrize("q", list(LOWERED))
+    def test_positional_and_elite_trees_are_one_scan(self, spark, reopened, q):
+        """Every compiled tree, positional and elite leaves included, is one
+        postings scan and no join, within the keystroke job limit, and
+        matches the join algebra it replaces."""
+        df = search(reopened, q, partial=False)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 1 and "Join" not in plan, plan
+        rows, jobs = jobs_of(spark, "one-scan", df.collect)
+        assert jobs <= 2, (q, jobs)
+        got = {r["doc"]: r["score"] for r in rows}
+        want = {r["doc"]: r["score"] for r in LOWERED[q](reopened).collect()}
+        assert got.keys() == want.keys()
+        assert all(got[d] == pytest.approx(want[d], rel=1e-12) for d in got), q
 
 
 def test_cli_query_matches_search(spark, pages_path, tmp_path):

@@ -235,8 +235,8 @@ class TestPositionalFusion:
         built.unpersist()
         idx = InvertedIndex.read(spark, base)
         for df in (
-            S.match_phrase(idx, ["spark", "join", "merge"], score=False),
-            S.match_near(idx, ["spark", "merge"], score=False),
+            S.match_phrase(idx, ["spark", "join", "merge"]).select("doc"),
+            S.match_near(idx, ["spark", "merge"]).select("doc"),
         ):
             plan = df._jdf.queryExecution().executedPlan().toString()
             assert plan.count("FileScan parquet") == 1

@@ -113,3 +113,21 @@ def test_resume_runs_two_jobs_per_bucket(spark, tmp_path):
     R.index_resumable(spark, pages, str(tmp_path / "jobs"), n_buckets=4)
     n_jobs = len(tracker.getJobIdsForGroup(None)) - before
     assert n_jobs <= 2 * 4, n_jobs
+
+
+def test_build_reads_each_input_row_once(spark, tmp_path):
+    # The pending pages are extracted once into a persisted carrier that
+    # every bucket's write filters: a counting pass-through over the input
+    # sees each row once, not once per bucket.
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    pages = synth_pages(spark, N)
+    counted = pages.mapInPandas(count, pages.schema)
+    summary = R.index_resumable(spark, counted, str(tmp_path / "once"), 4)
+    assert summary["processed"] == [0, 1, 2, 3]
+    assert seen.value == N

@@ -189,8 +189,8 @@ class TestPositionalOps:
 
 
 class TestPositionalProperties:
-    """Property tests for the sorted-merge NEAR / intersect PHRASE rewrites
-    against a brute-force position-set oracle."""
+    """Property tests for the sorted-merge NEAR / ADJ sweeps and the
+    intersect PHRASE against a brute-force position-set oracle."""
 
     def _mk_index(self, spark, docs):
         df = spark.createDataFrame(docs, "doc_id long, text string")
@@ -238,6 +238,25 @@ class TestPositionalProperties:
                     )
                 }
                 assert got == exp, terms
+            for terms, window in [
+                (["aa", "bb"], 2),
+                (["aa", "bb"], 4),
+                (["aa", "bb", "cc"], 5),
+                (["aa", "aa"], 3),
+                (["cc", "aa", "cc"], 11),
+            ]:
+                got = set(scores_of(S.match_adj(idx, terms, window=window)))
+                exp = set()
+                for d, text in docs:
+                    toks = text.split()
+                    poss = [[i + 1 for i, w in enumerate(toks) if w == t] for t in terms]
+                    if any(
+                        all(a < b for a, b in zip(sel, sel[1:]))
+                        and sel[-1] - sel[0] < window
+                        for sel in itertools.product(*poss)
+                    ):
+                        exp.add(d)
+                assert got == exp, (terms, window)
         finally:
             idx.unpersist()
 
@@ -588,7 +607,7 @@ class TestMatchAdj:
 
     def test_order_and_window(self, adj_index):
         got = self.docs_of(
-            S.match_adj(adj_index, ["alpha", "beta"], score=False)
+            S.match_adj(adj_index, ["alpha", "beta"]).select("doc")
         )
         # default window 11: doc 3's span-12 pair is out; doc 2 wrong order;
         # doc 4 has alpha@2 -> beta@4 in order
@@ -596,7 +615,7 @@ class TestMatchAdj:
 
     def test_tight_window(self, adj_index):
         got = self.docs_of(
-            S.match_adj(adj_index, ["alpha", "beta"], window=2, score=False)
+            S.match_adj(adj_index, ["alpha", "beta"], window=2).select("doc")
         )
         assert got == [1]  # adjacency only
 
@@ -604,7 +623,7 @@ class TestMatchAdj:
         # "gamma ADJ gamma" must not match a doc with ONE gamma: the
         # position-tie ordering processes the higher term index first
         got = self.docs_of(
-            S.match_adj(adj_index, ["gamma", "gamma"], window=11, score=False)
+            S.match_adj(adj_index, ["gamma", "gamma"], window=11).select("doc")
         )
         assert got == []
 

@@ -67,8 +67,6 @@ def main(argv: list[str] | None = None) -> int:
     pq.add_argument("qstr", help="query string (reference grammar)")
     pq.add_argument("-k", type=int, default=100)
     pq.add_argument("--no-partial", action="store_true")
-    pq.add_argument("--wand", action="store_true",
-                    help="WAND candidate pruning for pure OR term queries (exact)")
     pq.add_argument("--master", default=None)
 
     pe = sub.add_parser(
@@ -148,16 +146,8 @@ def main(argv: list[str] | None = None) -> int:
             node = compile_query(args.qstr, partial=not args.no_partial)
             print(f"# plan: {explain(node)}", file=sys.stderr)
             print(f"# query: {get_description(node)}", file=sys.stderr)
-            if args.wand and not args.no_partial:
-                print(
-                    "# note: --wand prunes pure term queries; partial mode "
-                    "compiles wildcard forms, so this query runs unpruned "
-                    "(pass --no-partial to engage WAND)",
-                    file=sys.stderr,
-                )
             for r in search(
-                idx, args.qstr, k=args.k, partial=not args.no_partial,
-                use_wand=args.wand,
+                idx, args.qstr, k=args.k, partial=not args.no_partial
             ).collect():
                 print(f"{r['score']:.6f}\t{r['doc']}")
     finally:

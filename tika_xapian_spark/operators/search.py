@@ -27,16 +27,21 @@ query terms' bucket directories. Query-term statistics come from the
 index's driver-held term dictionary, so termweights are plan literals — a
 literal term -> weight map, no join. A SYNONYM of two or more terms is the
 one statistic the dictionary cannot give: its pseudo-term df (docs matching
-any member) is a broadcast 1-row aggregate of the same scan. A boolean tree
-over term, synonym and wildcard leaves is one scan and one groupBy
-(match_leaves; the query compiler's Executor combines the leaves). Top-k
-is TakeOrderedAndProject — the distributed analogue of the reference's
-bounded result heap (XC matcher/multimatch.cc:794-830).
+any member) is a broadcast 1-row aggregate of the same scan. Any query tree
+— term, synonym, wildcard, PHRASE, NEAR and ADJ leaves under boolean and
+scale operators — is one scan and one groupBy(doc) (match_leaves; the query
+compiler's Executor combines the leaves as column math); the join operators
+below (op_and ... op_filter) are the registry's algebra and the reference
+the lowering is tested against. Top-k is TakeOrderedAndProject — the
+distributed analogue of the reference's bounded result heap (XC
+matcher/multimatch.cc:794-830).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.porter2 import stem as porter2_stem
@@ -60,7 +65,7 @@ def stem_query_term(term: str, prefix: str = "") -> str:
     for them — STEM_SOME queries must use the raw ``prefix+term`` or they
     silently match nothing. Prefixed stemmable terms follow the QueryParser
     form ``Z<prefix><stem>``. Every StemTerm-lowering site (Executor,
-    leaf-term fusion, explain, get_description) routes through here so the
+    explain, get_description, snippet_shapes) routes through here so the
     compiled plan, the debug dump, and the index agree."""
     t = term.lower()
     from ..functions.tokenizer import _should_stem
@@ -286,217 +291,205 @@ def op_pure_not(index: InvertedIndex, m: DataFrame) -> DataFrame:
 
 
 # ----------------------------------------------------------- positional ops
+# A positional leaf's predicate is SQL text over its terms' position arrays,
+# evaluated once per doc in match_leaves' aggregate: one call into the JVM,
+# where a lambda composed from Columns costs 1-4 ms of py4j per op.
 
 
-def _positions_for(index: InvertedIndex, terms: list[str]) -> DataFrame | None:
-    """doc rows carrying one positions array column per query term (p0..pn-1)
-    and the BM25 score summed over the distinct terms, restricted to docs
-    containing ALL terms — as ONE postings scan (term IN (...) + groupBy doc
-    with a per-term positions pivot) instead of one filtered scan per term
-    chained through M-1 self-joins, and a second scan to score them: scan
-    volume is constant in M and a single aggregation replaces the join
-    shuffles. Duplicate query terms (e.g. a repeated phrase word) share the
-    scanned positions array, exactly as the join form duplicated it. None
-    when a term is in no document (nothing can match)."""
-    uniq = list(dict.fromkeys(terms))
-    d = index.term_dictionary()
-    if any(d.stats(t) is None for t in uniq):
-        return None
-    aggs = [
-        f"first(CASE WHEN term = {sql_string(t)} THEN positions END, true) AS u{i}"
-        for i, t in enumerate(uniq)
+@dataclass
+class Positional:
+    """A PHRASE, NEAR or ADJ leaf of match_leaves: index ``terms`` in query
+    order (repeats allowed) whose positions must satisfy ``op`` within
+    ``window`` (NEAR and ADJ only)."""
+
+    op: str  # PHRASE | NEAR | ADJ
+    terms: list[str]
+    window: int = 0
+
+
+def _tagged(ps: list[str], tag: str, tag_of) -> str:
+    """The position arrays ``ps`` merged into one sorted array of
+    (pos, ``tag``) structs, array i tagged ``tag_of(i)``."""
+    return "sort_array(concat({}))".format(", ".join(
+        f"transform({p}, x -> named_struct('pos', CAST(x AS BIGINT), "
+        f"'{tag}', {tag_of(i)}))"
+        for i, p in enumerate(ps)
+    ))
+
+
+def _phrase_hit(ps: list[str], window: int) -> str:
+    """Q8 PHRASE (exactphrasepostlist): consecutive positions in order. Term
+    k's positions shifted by -k, all intersected with term 0's: each
+    pairwise intersect is a hash build over the smaller array, so per-doc
+    cost is linear in total positions (the sorted-merge cost profile of
+    Xapian's phrase postlist)."""
+    inter = ps[0]
+    for k, p in enumerate(ps[1:], 1):
+        inter = f"array_intersect({inter}, transform({p}, x -> x - {k}))"
+    return f"size({inter}) > 0"
+
+
+def _near_hit(ps: list[str], window: int) -> str:
+    """Q7 NEAR (nearpostlist): all terms within a ``window``-wide span, any
+    order — max(pos) - min(pos) < window. A sorted-merge sweep, the plan
+    Xapian's nearpostlist runs: one aggregate() pass over the merged
+    (pos, t) list tracking the last-seen position per term; a span
+    [min(last), current] < window at any step means a valid selection
+    exists. Linear in total positions."""
+    k = len(ps)
+    lasts = [f"IF(e.t = {i}, e.pos, acc.l{i})" for i in range(k)]
+    seen = " AND ".join(f"{l} IS NOT NULL" for l in lasts)
+    hit = f"({seen} AND e.pos - least({', '.join(lasts)}) < {window})"
+    init = ", ".join(f"'l{i}', CAST(NULL AS BIGINT)" for i in range(k))
+    step = ", ".join(f"'l{i}', {l}" for i, l in enumerate(lasts))
+    return (
+        f"aggregate({_tagged(ps, 't', str)}, named_struct('found', false, {init}),"
+        f" (acc, e) -> named_struct('found', acc.found OR {hit}, {step})).found"
+    )
+
+
+def _adj_hit(ps: list[str], window: int) -> str:
+    """ADJ — Xapian lowers it to OP_PHRASE with a widened window
+    (queryparser.lemony:1732-1740 as_adj_query), whose matcher semantics
+    (XC matcher/phrasepostlist.cc test_doc) are: there exist
+    strictly-increasing positions q0 < q1 < ... < q_{k-1}, one per term in
+    query order, with q_{k-1} - q0 < window.
+
+    One aggregate() pass over the merged sorted positions tracks, per
+    prefix 0..i of the term sequence, m_i: the maximum chain start q0 among
+    in-order chains ending before the current position (intermediate gaps
+    are unconstrained). Positions ascend, so m_0 is the latest term-0
+    position, and m_i <= m_{i-1} always, so a term-i position extends the
+    best chain to m_{i-1}. Within a position tie the higher term index
+    sorts first (tag rt = k-1-i), so the fold consumes m_{i-1} from
+    strictly-earlier positions only and an occurrence never chains with
+    itself."""
+    k = len(ps)
+    m = [f"IF(e.rt = {k - 1}, e.pos, acc.m0)"] + [
+        f"IF(e.rt = {k - 1 - i} AND acc.m{i - 1} IS NOT NULL, acc.m{i - 1}, acc.m{i})"
+        for i in range(1, k)
     ]
-    # postings are unique per (doc, term), so count(*) == matched term count
-    aggs += ["count(1) AS _nt", "sum(part) AS score"]
-    agg = (
-        _weighted_postings(index, dict.fromkeys(uniq, 1))
-        .groupBy("doc")
-        .agg(*map(F.expr, aggs))
-        .filter(f"_nt = {len(uniq)}")
+    hit = (
+        f"(e.rt = 0 AND acc.m{k - 2} IS NOT NULL"
+        f" AND e.pos - acc.m{k - 2} <= {window - 1})"
     )
-    pos_of = {t: f"u{i}" for i, t in enumerate(uniq)}
-    return agg.select(
-        "doc", "score",
-        *[F.col(pos_of[t]).alias(f"p{i}") for i, t in enumerate(terms)],
+    init = ", ".join(f"'m{i}', CAST(NULL AS BIGINT)" for i in range(k))
+    step = ", ".join(f"'m{i}', {x}" for i, x in enumerate(m))
+    merged = _tagged(ps, "rt", lambda i: k - 1 - i)
+    return (
+        f"aggregate({merged}, named_struct('found', false, {init}),"
+        f" (acc, e) -> named_struct('found', acc.found OR {hit}, {step})).found"
     )
 
 
-def _positional(j: DataFrame, hit: Column, score: bool) -> DataFrame:
-    """The docs of _positions_for rows ``j`` that pass ``hit``, scored by
-    the BM25 sum of their terms, or 0 (boolean) without ``score``."""
-    return j.filter(hit).select(
-        "doc", F.col("score") if score else F.lit(0.0).alias("score")
-    )
+# op -> (SQL of the hit over the position arrays, fewest terms)
+_POSITIONAL = {
+    "PHRASE": (_phrase_hit, 1),
+    "NEAR": (_near_hit, 2),
+    "ADJ": (_adj_hit, 2),
+}
 
 
-def match_phrase(index: InvertedIndex, terms: list[str], score: bool = True) -> DataFrame:
-    """Q8 PHRASE: consecutive positions in order (exactphrasepostlist
-    semantics). The position check is a chain of shifted array_intersects —
-    term k's positions shifted by -k, all intersected with term 0's: a doc
-    matches iff the intersection is non-empty. Each pairwise intersect is a
-    hash build over the smaller array, so per-doc cost is linear in total
-    positions (the sorted-merge cost profile of Xapian's phrase postlist),
-    not |p0| x sum|pk| as a nested exists/array_contains would be."""
-    if not terms:
-        raise ValueError("empty phrase")
-    j = _positions_for(index, terms)
-    if j is None:
+def _one_leaf(index: InvertedIndex, leaf) -> DataFrame:
+    """The (doc, score) match set of one match_leaves leaf."""
+    fused = match_leaves(index, [leaf])
+    if fused is None:
         return _empty_matches(index)
+    frame, ((score, matched),) = fused
+    return frame.filter(matched).selectExpr("doc", f"{score} AS score")
 
-    # closure factory, not a default-arg lambda: pyspark derives HOF arity
-    # from the signature, so a 2-param lambda would get (elem, idx)
-    def shift_by(off: int):
-        return lambda x: x - off
 
-    inter = F.col("p0")
-    for k in range(1, len(terms)):
-        inter = F.array_intersect(inter, F.transform(F.col(f"p{k}"), shift_by(k)))
-    return _positional(j, F.size(inter) > 0, score)
+def match_phrase(index: InvertedIndex, terms: list[str]) -> DataFrame:
+    """Q8 PHRASE over ``terms``, scored by the BM25 sum of its distinct
+    terms: one leaf of match_leaves (_phrase_hit)."""
+    return _one_leaf(index, Positional("PHRASE", terms))
 
 
 def match_near(
-    index: InvertedIndex, terms: list[str], window: int | None = None,
-    score: bool = True,
+    index: InvertedIndex, terms: list[str], window: int | None = None
 ) -> DataFrame:
-    """Q7 NEAR: all terms within a ``window``-wide span, any order
-    (nearpostlist semantics: max(pos)-min(pos) < window). The default
-    reproduces the QueryParser's sizing: "a NEAR b" means "a within 10 terms
-    of b" = window 11, plus one per extra term — w = (10-1) + n_terms
-    (XC queryparser/queryparser.lemony:1722-1730, as_opwindow_query :1655-1658).
-    """
+    """Q7 NEAR over ``terms``, scored by the BM25 sum of its distinct terms:
+    one leaf of match_leaves (_near_hit). The default window reproduces the
+    QueryParser's sizing: "a NEAR b" means "a within 10 terms of b" =
+    window 11, plus one per extra term — w = (10-1) + n_terms
+    (XC queryparser/queryparser.lemony:1722-1730, as_opwindow_query
+    :1655-1658)."""
     if window is None:
         window = 9 + len(terms)
-    if len(terms) < 2:
-        raise ValueError("NEAR needs >= 2 terms")
-    j = _positions_for(index, terms)
-    if j is None:
-        return _empty_matches(index)
-    k = len(terms)
-
-    # Sorted-merge sweep (the plan Xapian's nearpostlist runs): merge all
-    # terms' positions into one sorted (pos, term) list, then one aggregate()
-    # pass tracking the last-seen position per term; a span [min(last),
-    # current] < window at any step means a valid selection exists. Linear in
-    # total positions — replaces the nested exists whose cost was
-    # O(prod |positions|) on long documents.
-    def tag_with(i: int):
-        return lambda x: F.struct(
-            x.cast("long").alias("pos"), F.lit(i).cast("int").alias("t")
-        )
-
-    tagged = [F.transform(F.col(f"p{i}"), tag_with(i)) for i in range(k)]
-    merged = F.sort_array(F.concat(*tagged))
-    init = F.struct(
-        F.lit(False).alias("found"),
-        *[F.lit(None).cast("long").alias(f"l{i}") for i in range(k)],
-    )
-
-    def step(acc: Column, e: Column) -> Column:
-        lasts = [
-            F.when(e["t"] == i, e["pos"]).otherwise(acc[f"l{i}"]) for i in range(k)
-        ]
-        all_seen = lasts[0].isNotNull()
-        for l in lasts[1:]:
-            all_seen = all_seen & l.isNotNull()
-        hit = all_seen & ((e["pos"] - F.least(*lasts)) < F.lit(window))
-        return F.struct(
-            (acc["found"] | hit).alias("found"),
-            *[l.alias(f"l{i}") for i, l in enumerate(lasts)],
-        )
-
-    return _positional(j, F.aggregate(merged, init, step)["found"], score)
+    return _one_leaf(index, Positional("NEAR", terms, window))
 
 
 def match_adj(
-    index: InvertedIndex, terms: list[str], window: int | None = None,
-    score: bool = True,
+    index: InvertedIndex, terms: list[str], window: int | None = None
 ) -> DataFrame:
-    """ADJ: all terms IN ORDER within a ``window``-wide span — Xapian lowers
-    ADJ to OP_PHRASE with a widened window (queryparser.lemony:1732-1740
-    as_adj_query), whose matcher semantics (XC matcher/phrasepostlist.cc
-    test_doc) are: there exist strictly-increasing positions q0 < q1 < ... <
-    q_{k-1}, one per term in query order, with q_{k-1} - q0 < window.
-    Default window mirrors NEAR's sizing: "a ADJ b" = "a at most 10 terms
-    before b" = (10 - 1) + n_terms.
-
-    Same fused single-postings-scan shape as NEAR/PHRASE (_positions_for),
-    with one linear aggregate() pass over the doc's merged sorted positions:
-    for each prefix of the term sequence we track the MAXIMUM chain start
-    q0 among in-order chains ending before the current position (the only
-    cross-position state the span check needs — intermediate gaps are
-    unconstrained), and test the span when the final term extends a chain.
-    Ties in position (a term ADJ itself) sort the HIGHER term index first,
-    so a single occurrence can never chain with itself."""
+    """ADJ (ordered NEAR) over ``terms``, scored by the BM25 sum of its
+    distinct terms: one leaf of match_leaves (_adj_hit). The default window
+    mirrors NEAR's sizing: "a ADJ b" = "a at most 10 terms before b" =
+    (10 - 1) + n_terms."""
     if window is None:
         window = 9 + len(terms)
-    if len(terms) < 2:
-        raise ValueError("ADJ needs >= 2 terms")
-    j = _positions_for(index, terms)
-    if j is None:
-        return _empty_matches(index)
-    k = len(terms)
-
-    def tag_with(i: int):
-        # rt = k-1-i: descending term index within a position tie, so the
-        # fold consumes m_{i-1} from strictly-earlier positions only
-        return lambda x: F.struct(
-            x.cast("long").alias("pos"), F.lit(k - 1 - i).cast("int").alias("rt")
-        )
-
-    tagged = [F.transform(F.col(f"p{i}"), tag_with(i)) for i in range(k)]
-    merged = F.sort_array(F.concat(*tagged))
-    init = F.struct(
-        F.lit(False).alias("found"),
-        *[F.lit(None).cast("long").alias(f"m{i}") for i in range(k)],
-    )
-
-    def step(acc: Column, e: Column) -> Column:
-        t = F.lit(k - 1) - e["rt"]
-        # m_i = max start q0 over in-order chains of terms 0..i seen so far
-        new_m = [F.when(t == 0, F.greatest(F.coalesce(acc["m0"], e["pos"]), e["pos"])).otherwise(acc["m0"])]
-        for i in range(1, k):
-            ext = F.when(
-                (t == i) & acc[f"m{i - 1}"].isNotNull(),
-                F.greatest(F.coalesce(acc[f"m{i}"], acc[f"m{i - 1}"]), acc[f"m{i - 1}"]),
-            ).otherwise(acc[f"m{i}"])
-            new_m.append(ext)
-        hit = (
-            (t == k - 1)
-            & acc[f"m{k - 2}"].isNotNull()
-            & ((e["pos"] - acc[f"m{k - 2}"]) <= F.lit(window - 1))
-        )
-        return F.struct(
-            (acc["found"] | hit).alias("found"),
-            *[m.alias(f"m{i}") for i, m in enumerate(new_m)],
-        )
-
-    return _positional(j, F.aggregate(merged, init, step)["found"], score)
+    return _one_leaf(index, Positional("ADJ", terms, window))
 
 
 # ------------------------------------------------------------- synonym/elite
 
 
 def match_leaves(
-    index: InvertedIndex, leaves: list[tuple[list[str], int]]
+    index: InvertedIndex, leaves: list[tuple[list[str], int] | Positional]
 ) -> tuple[DataFrame, list[tuple[str, str]]] | None:
     """Query leaves in ONE postings scan and ONE groupBy(doc): the per-doc
     frame, and per leaf the SQL of its (score, matched) columns — score 0.0
     where the doc does not match the leaf — so boolean operators combine
     leaves as column math instead of joins and unions of match sets.
 
-    A leaf is (member terms, wqf). One member is a term weighted by its
-    dictionary df; a term in no document matches nothing. Two or more are a
-    Q12 SYNONYM (synonympostlist.cc): one pseudo-term whose wdf is the
+    A term leaf is (member terms, wqf). One member is a term weighted by
+    its dictionary df; a term in no document matches nothing. Two or more
+    are a Q12 SYNONYM (synonympostlist.cc): one pseudo-term whose wdf is the
     members' summed wdf and whose df is the number of docs matching any
     member. That df is the one statistic the dictionary cannot give, so it
     rides the plan as a broadcast 1-row aggregate of the same per-doc frame
-    — no eager driver job. None when no leaf can match."""
+    — no eager driver job.
+
+    A Positional leaf matches where its position predicate holds over its
+    terms' positions (each distinct term's positions are one aggregate of
+    the scan; the predicate is evaluated in the aggregate, once per doc),
+    which implies every term is present; it scores the BM25 sum of its
+    distinct terms, each at wqf 1. A term in no document matches nothing.
+
+    None when no leaf can match."""
+    d = index.term_dictionary()
     terms: list[str] = []
     aggs, syn_dfs, scores = ["max(doclen) AS doclen"], [], []
-    for i, (members, wqf) in enumerate(leaves):
+    for i, leaf in enumerate(leaves):
+        if isinstance(leaf, Positional):
+            hit_of, fewest = _POSITIONAL[leaf.op]
+            if len(leaf.terms) < fewest:
+                raise ValueError(f"{leaf.op} needs >= {fewest} terms")
+            uniq = list(dict.fromkeys(leaf.terms))
+            stats = [d.stats(t) for t in uniq]
+            if None in stats:
+                scores.append(("0.0D", "false"))
+                continue
+            positions = {
+                t: f"first(CASE WHEN term = {sql_string(t)} THEN positions END, true)"
+                for t in uniq
+            }
+            hit = hit_of([positions[t] for t in leaf.terms], leaf.window)
+            aggs.append(f"coalesce({hit}, false) AS _h{i}")
+            parts = []
+            for j, (t, (df, _)) in enumerate(zip(uniq, stats)):
+                aggs.append(f"sum(CASE WHEN term = {sql_string(t)} THEN wdf END) AS _w{i}_{j}")
+                weight = _termweight(str(df), index.n_docs, 1)
+                parts.append(_bm25(index, weight, f"_w{i}_{j}"))
+            terms += uniq
+            scores.append(
+                (f"(CASE WHEN _h{i} THEN {' + '.join(parts)} ELSE 0.0D END)", f"_h{i}")
+            )
+            continue
+        members, wqf = leaf
         members = list(dict.fromkeys(members))
         if len(members) == 1:
-            stats = index.term_dictionary().stats(members[0])
+            stats = d.stats(members[0])
             members = members if stats is not None else []
         if not members:
             scores.append(("0.0D", "false"))
@@ -531,11 +524,7 @@ def op_synonym(index: InvertedIndex, terms: list[str], wqf: int = 1) -> DataFram
     postings are the merged member postings (synonympostlist.cc semantics,
     with df = docs matching any member, wdf summed) — one leaf of
     match_leaves."""
-    fused = match_leaves(index, [(terms, wqf)])
-    if fused is None:
-        return _empty_matches(index)
-    frame, ((score, _),) = fused
-    return frame.selectExpr("doc", f"{score} AS score")
+    return _one_leaf(index, (terms, wqf))
 
 
 def expand_wildcard(index: InvertedIndex, prefix: str, limit: int = 1000) -> list[str]:
@@ -545,17 +534,21 @@ def expand_wildcard(index: InvertedIndex, prefix: str, limit: int = 1000) -> lis
     return index.term_dictionary().expand(prefix, limit)
 
 
-def op_elite_set(index: InvertedIndex, terms: list[str], n: int) -> DataFrame:
-    """Q11 ELITE: keep the N subterms with the highest max-weight estimate,
-    then OR them — Xapian ranks elite candidates by each subquery's
+def elite_terms(index: InvertedIndex, terms: list[str], n: int) -> list[str]:
+    """Q11 ELITE's selection: the ``n`` distinct terms with the highest
+    max-weight estimate — Xapian ranks elite candidates by each subquery's
     ``get_maxweight()`` (XC api/queryinternal.cc QueryEliteSet::done), which
-    for a term is the BM25 ceiling we already store for WAND
-    (the dictionary's max_wdf → _term_upper_bounds), NOT raw rarity: a
-    common but bursty term (huge max_wdf) can outrank a rare flat one. Ties
-    break by term asc for determinism."""
+    for a term is the BM25 ceiling we already store for WAND (the
+    dictionary's max_wdf → _term_upper_bounds), NOT raw rarity: a common but
+    bursty term (huge max_wdf) can outrank a rare flat one. Ties break by
+    term asc for determinism; terms in no document are never kept."""
     ubs = _term_upper_bounds(index, {t: 1 for t in terms})
-    keep = [t for t in sorted(ubs, key=lambda t: (-ubs[t], t))[:n]]
-    return score_terms(index, keep)
+    return sorted(ubs, key=lambda t: (-ubs[t], t))[:n]
+
+
+def op_elite_set(index: InvertedIndex, terms: list[str], n: int) -> DataFrame:
+    """Q11 ELITE: the OR of the elite_terms."""
+    return score_terms(index, elite_terms(index, terms, n))
 
 
 def spelling_query_fragments(w: str) -> list[str]:

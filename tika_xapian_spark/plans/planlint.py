@@ -17,8 +17,8 @@ The rules encode the 100 TB failure modes this codebase has actually hit:
                  without an eager collect.
   row-python     BatchEvalPython — a row-at-a-time Python UDF in the data
                  path (Arrow/pandas evaluation shows as ArrowEvalPython /
-                 MapInPandas and is allowed; FlatMapGroupsInPandas is the
-                 streaming/stateful surface).
+                 MapInPandas and is allowed, as is the grouped
+                 FlatMapGroupsInPandas).
 Informational (printed, never a violation, because intent is query-specific):
 exchange count, broadcast-join count, pushed-filter fragments, Arrow-eval
 stages, WholeStageCodegen span count (higher-order-function projections are

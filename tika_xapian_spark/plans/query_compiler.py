@@ -21,8 +21,8 @@ Reimplements the *intended* grammar of /root/reference/src/xapian_utils.rs:
     the green goldens (``WILDCARD SYNONYM Sfoo OR ZSfoo@1``).
 
 ``compile_query`` returns the AST; ``explain`` renders a deterministic
-structural dump (the T-query-compile golden hook); ``execute`` lowers it to
-the search-operator DataFrame algebra.
+structural dump (the T-query-compile golden hook); ``Executor`` lowers any
+tree to one postings scan (operators/search.py::match_leaves).
 """
 
 from __future__ import annotations
@@ -31,7 +31,6 @@ import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.tokenizer import scan_terms
 from ..operators import search as S
@@ -204,8 +203,8 @@ class Synonym(Node):
 
 @dataclass
 class RangeOp(Node):
-    """Q9 metadata range: field RANGE lo hi (inert in the reference — no
-    values indexed; real here)."""
+    """Q9 metadata range: field RANGE lo hi. Inert, as in the reference: no
+    values are indexed, so it matches nothing (SURVEY.md §2.4 Q9)."""
 
     fld: str = ""
     lo: str = ""
@@ -723,21 +722,6 @@ def _collect_term_pairs(node: Node) -> list[tuple[str, str]]:
     return []
 
 
-def _or_leaf_terms(node: Node) -> list[tuple[str, int]] | None:
-    """Index terms of a pure OR-of-StemTerm subtree, or None. For DISTINCT
-    terms, OR-folding per-term match sets (union + per-doc sum) equals one
-    grouped scan over all terms — score_terms — so the Executor fuses an
-    M-word free-text query into ONE postings scan instead of M."""
-    if isinstance(node, StemTerm):
-        return [(S.stem_query_term(node.word, node.prefix), node.wqf)]
-    if isinstance(node, Bool) and node.op == "OR":
-        l = _or_leaf_terms(node.left)
-        r = _or_leaf_terms(node.right)
-        if l is not None and r is not None:
-            return l + r
-    return None
-
-
 def snippet_shapes(node: Node) -> tuple[list[str], list[tuple[str, ...]], list[str]]:
     """check_query (termgenerator_internal.cc:672-720) over our AST: the
     (loose_terms, exact_phrases, wildcards) decomposition MSet::snippet
@@ -777,7 +761,7 @@ def snippet_shapes(node: Node) -> tuple[list[str], list[tuple[str, ...]], list[s
 # The boolean operators of operators/search.py (op_and ... op_filter) as
 # SQL over match_leaves' scores. A side is (score, matched), its score 0.0
 # wherever it does not match; each operator adds the weights the join form
-# adds (x + 0.0 == x), so a fused tree scores every doc bit-identically.
+# adds (x + 0.0 == x), so a lowered tree scores every doc as the join form.
 def _gated(matched: str, score: str) -> tuple[str, str]:
     return f"(CASE WHEN {matched} THEN {score} ELSE 0.0D END)", matched
 
@@ -792,117 +776,88 @@ _BOOL_SCORES = {
 }
 
 
+def _positional_leaf(node: Node) -> S.Positional:
+    """The match_leaves leaf of a NEAR, ADJ or PHRASE operator over the
+    unstemmed terms of both operands. A NEAR/n or ADJ/n width n means
+    "within n terms": window n - 1 + n_terms, n = 10 when absent (and for
+    ADJ/0) (as_near_query / as_adj_query, queryparser.lemony:1722-1740)."""
+    terms = _collect_terms(node.left) + _collect_terms(node.right)
+    if isinstance(node, PhraseOp):
+        return S.Positional("PHRASE", terms)
+    if isinstance(node, AdjOp):
+        return S.Positional("ADJ", terms, (node.width or 10) - 1 + len(terms))
+    window = node.window
+    if window is None:
+        window = (9 if node.width is None else node.width - 1) + len(terms)
+    return S.Positional("NEAR", terms, window)
+
+
 class Executor:
-    """Lowers the AST to (doc, score) DataFrames over an InvertedIndex.
+    """Lowers the AST to a (doc, score) DataFrame over an InvertedIndex.
+    Every tree is ONE match_leaves scan: its leaves (terms, partial words,
+    wildcards, synonyms, phrases, NEAR/ADJ windows, ELITE's kept terms)
+    become per-doc columns of one postings scan and one groupBy(doc), and
+    its operators column math over them. A query-string RANGE matches
+    nothing: no values are indexed, as in the reference (SURVEY.md §2.4
+    Q9); metadata filtering is the metadata_range registry query's."""
 
-    ``docs`` (optional) provides metadata columns for RangeOp; ``range_cols``
-    maps query field names to docs columns.
-    """
-
-    def __init__(
-        self,
-        index: InvertedIndex,
-        docs: DataFrame | None = None,
-        range_cols: dict[str, str] | None = None,
-        wildcard_limit: int = 1000,
-        doc_key: str = "doc",
-    ):
+    def __init__(self, index: InvertedIndex):
         self.index = index
-        self.docs = docs
-        self.range_cols = range_cols or {}
-        self.wildcard_limit = wildcard_limit
-        self.doc_key = doc_key
-
-    def run(self, node: Node) -> DataFrame:
-        idx = self.index
-        if _fusable(node):
-            return self._fused(node)
-        if isinstance(node, PhraseTerms):
-            return S.match_phrase(idx, [node.prefix + w for w in node.words])
-        if isinstance(node, Bool):
-            l, r = self.run(node.left), self.run(node.right)
-            return {
-                "AND": S.op_and,
-                "OR": S.op_or,
-                "AND_NOT": S.op_and_not,
-                "XOR": S.op_xor,
-                "AND_MAYBE": S.op_and_maybe,
-                "FILTER": S.op_filter,
-            }[node.op](l, r)
-        if isinstance(node, (NearOp, AdjOp, PhraseOp)) and (
-            isinstance(node.left, Empty) or isinstance(node.right, Empty)
-        ):
-            # an incomplete keystroke ("article NEAR"): like Xapian's
-            # AND-like operators over a MatchNothing subquery, it matches
-            # nothing (XC api/queryinternal.cc empty-query elision)
-            return S._empty_matches(idx)
-        if isinstance(node, NearOp):
-            terms = _collect_terms(node.left) + _collect_terms(node.right)
-            window = node.window
-            if window is None and node.width is not None:
-                window = node.width - 1 + len(terms)
-            return S.match_near(idx, terms, window=window)
-        if isinstance(node, AdjOp):
-            terms = _collect_terms(node.left) + _collect_terms(node.right)
-            window = (node.width or 10) - 1 + len(terms)
-            return S.match_adj(idx, terms, window=window)
-        if isinstance(node, PhraseOp):
-            terms = _collect_terms(node.left) + _collect_terms(node.right)
-            return S.match_phrase(idx, terms)
-        if isinstance(node, Scale):
-            return S.op_scale(self.run(node.child), node.factor)
-        if isinstance(node, Elite):
-            zterms = [
-                S.stem_query_term(w, p) for p, w in _collect_term_pairs(node.child)
-            ]
-            return S.op_elite_set(idx, zterms, node.n)
-        if isinstance(node, RangeOp):
-            col = self.range_cols.get(node.fld)
-            if self.docs is None or col is None:
-                return S._empty_matches(idx)
-            m = self.docs.filter(
-                (F.col(col) >= node.lo.replace("_", " "))
-                & (F.col(col) <= node.hi.replace("_", " "))
-            )
-            return m.select(
-                F.col(self.doc_key).alias("doc"), F.lit(0.0).alias("score")
-            )
-        raise ValueError(f"unexecutable node {type(node).__name__}")
 
     def _expanded(self, pattern: str) -> list[str]:
         """Unstemmed dictionary terms matching a trailing-* ``pattern``."""
-        expanded = S.expand_wildcard(self.index, pattern, self.wildcard_limit)
-        return [t for t in expanded if not t.startswith("Z")]
+        return [
+            t for t in S.expand_wildcard(self.index, pattern)
+            if not t.startswith("Z")
+        ]
 
-    def _fused(self, node: Node) -> DataFrame:
-        """A _fusable tree as ONE postings scan: its leaves become
-        match_leaves columns and its operators column math over them."""
-        leaves: list[tuple[list[str], int]] = []
+    def run(self, node: Node) -> DataFrame:
+        leaves: list = []
 
-        def leaf(members: list[str], wqf: int = 1) -> int:
-            leaves.append((members, wqf))
+        def leaf(l) -> int:
+            leaves.append(l)
             return len(leaves) - 1
 
         def shape(n: Node):
             """n as a leaf index, an (op, left, right) / (factor, child)
             tuple, or None for a leaf that matches nothing."""
             if isinstance(n, StemTerm):
-                return leaf([S.stem_query_term(n.word, n.prefix)], n.wqf)
+                return leaf(([S.stem_query_term(n.word, n.prefix)], n.wqf))
             if isinstance(n, PartialTerm):
                 # (WILDCARD SYNONYM prefix+word) OR Zstem
                 wc = self._expanded(n.prefix + n.word)
-                stem = leaf([S.stem_query_term(n.word, n.prefix)])
-                return ("OR", leaf(wc) if wc else None, stem)
+                stem = leaf(([S.stem_query_term(n.word, n.prefix)], 1))
+                return ("OR", leaf((wc, 1)) if wc else None, stem)
             if isinstance(n, WildcardTerm):
                 wc = self._expanded(n.prefix + n.pattern)
-                return leaf(wc) if wc else None
+                return leaf((wc, 1)) if wc else None
             if isinstance(n, Synonym):
-                return leaf(_collect_terms(n.left) + _collect_terms(n.right))
+                return leaf((_collect_terms(n.left) + _collect_terms(n.right), 1))
+            if isinstance(n, PhraseTerms):
+                return leaf(S.Positional("PHRASE", [n.prefix + w for w in n.words]))
+            if isinstance(n, (NearOp, AdjOp, PhraseOp)):
+                if isinstance(n.left, Empty) or isinstance(n.right, Empty):
+                    # an incomplete keystroke ("article NEAR"): like
+                    # Xapian's AND-like operators over a MatchNothing
+                    # subquery, it matches nothing (XC
+                    # api/queryinternal.cc empty-query elision)
+                    return None
+                return leaf(_positional_leaf(n))
+            if isinstance(n, Elite):
+                zterms = [
+                    S.stem_query_term(w, p) for p, w in _collect_term_pairs(n.child)
+                ]
+                out = None
+                for t in S.elite_terms(self.index, zterms, n.n):
+                    out = leaf(([t], 1)) if out is None else ("OR", out, leaf(([t], 1)))
+                return out
             if isinstance(n, Bool):
                 return (n.op, shape(n.left), shape(n.right))
             if isinstance(n, Scale):
                 return (n.factor, shape(n.child))
-            return None  # Empty
+            if isinstance(n, (Empty, RangeOp)):
+                return None
+            raise ValueError(f"unexecutable node {type(n).__name__}")
 
         tree = shape(node)
         fused = S.match_leaves(self.index, leaves)
@@ -925,41 +880,9 @@ class Executor:
         return frame.filter(matched).selectExpr("doc", f"{score} AS score")
 
 
-_FUSED_LEAVES = (Empty, StemTerm, PartialTerm, WildcardTerm, Synonym)
-
-
-def _fusable(node: Node) -> bool:
-    """Whether ``node`` is a tree of boolean operators and scales over term,
-    partial, wildcard and synonym leaves — all of which one match_leaves
-    scan scores."""
-    if isinstance(node, _FUSED_LEAVES):
-        return True
-    if isinstance(node, Bool):
-        return _fusable(node.left) and _fusable(node.right)
-    return isinstance(node, Scale) and _fusable(node.child)
-
-
 def search(
-    index: InvertedIndex,
-    qstr: str,
-    k: int = S.PAGE_SIZE,
-    partial: bool = True,
-    docs: DataFrame | None = None,
-    range_cols: dict[str, str] | None = None,
-    doc_key: str = "doc",
-    use_wand: bool = False,
+    index: InvertedIndex, qstr: str, k: int = S.PAGE_SIZE, partial: bool = True
 ) -> DataFrame:
-    """The TUI contract (U1): query string -> ranked top-k (doc, score).
-
-    ``use_wand=True`` routes pure OR-of-distinct-term queries through
-    top_k_wand (exact, max_wdf candidate pruning) — the right default on a
-    large corpus where the common terms' posting lists dominate. It only
-    engages with ``partial=False``: FLAG_PARTIAL compiles every word to a
-    wildcard-synonym form, whose merged-postings score has no per-term
-    ceiling, so those queries run the plain plan unchanged."""
-    node = compile_query(qstr, partial)
-    if use_wand:
-        leaves = _or_leaf_terms(node)
-        if leaves is not None and len(set(t for t, _ in leaves)) == len(leaves):
-            return S.top_k_wand(index, dict(leaves), k)
-    return S.top_k(Executor(index, docs, range_cols, doc_key=doc_key).run(node), k)
+    """The TUI contract (U1): query string -> ranked top-k (doc, score),
+    one postings scan (Executor)."""
+    return S.top_k(Executor(index).run(compile_query(qstr, partial)), k)

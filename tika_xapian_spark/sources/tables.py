@@ -24,6 +24,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 
 class ParquetDirStore:
@@ -46,7 +47,16 @@ class ParquetDirStore:
         w.parquet(self.path(name))
 
     def read_table(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(self.path(name))
+        """The table, its schema read from one footer with pyarrow instead
+        of by Spark's schema-inference job; partition columns are still
+        discovered from the directory names."""
+        from .scan import _data_files
+
+        reader = spark.read
+        files = _data_files(self.path(name))
+        if files:
+            reader = reader.schema(from_arrow_schema(pq.read_schema(files[0])))
+        return reader.parquet(self.path(name))
 
     def read_arrow(self, spark: SparkSession, name: str) -> pa.Table:
         """A small table, read on the driver with pyarrow: no Spark job."""

@@ -60,52 +60,59 @@ def index_resumable(
     os.makedirs(os.path.join(out_dir, "_checkpoints"), exist_ok=True)
     done = completed_buckets(out_dir, n_buckets)
     processed, skipped = [], sorted(done)
-    with_bucket = pages.withColumn("bucket", bucket_col("url", n_buckets))
+    todo = [b for b in range(n_buckets) if b not in done]
 
     from pyspark.sql import Observation
 
-    for b in range(n_buckets):
-        if b in done:
-            continue
-        t0 = time.time()
-        shard = with_bucket.filter(F.col("bucket") == b).drop("bucket")
-        # All lineage counts ride the single write action as CollectMetrics
-        # nodes (df.observe) — extraction (the dominant cost) runs exactly
-        # once per bucket, where counting docs/ok/postings with separate
-        # .count() actions would re-run the extract UDF 3x. The fused
-        # extract+tokenize carrier keeps html/body inside one Python worker.
-        doc_obs = Observation(f"docs_b{b}")
-        post_obs = Observation(f"postings_b{b}")
-        carrier = extract_index_carrier(shard).observe(
-            doc_obs,
-            F.count(F.lit(1)).alias("n_pages"),
-            F.sum((F.col("status") == "ok").cast("long")).alias("n_ok"),
-        )
-        postings = explode_fused_carrier(carrier).observe(
-            post_obs, F.count(F.lit(1)).alias("n_postings")
-        )
-        path = os.path.join(out_dir, "postings", f"bucket={b}")
-        postings.write.mode("overwrite").parquet(path)
-        n_pages = doc_obs.get["n_pages"]
-        n_ok = doc_obs.get["n_ok"] or 0
-        n_postings = post_obs.get["n_postings"]
-        wall = time.time() - t0
-        metrics_row = {
-            "unit": b,
-            "n_pages": n_pages,
-            "n_ok": n_ok,
-            "n_error": n_pages - n_ok,
-            "n_postings": n_postings,
-            "wall_sec": round(wall, 3),
-        }
-        spark.createDataFrame(
-            [metrics_row],
-            "unit int, n_pages long, n_ok long, n_error long, n_postings long, wall_sec double",
-        ).write.mode("append").parquet(os.path.join(out_dir, "_metrics"))
-        # atomic-enough commit: marker written only after data + metrics land
-        with open(_marker(out_dir, b), "w") as f:
-            json.dump(metrics_row, f)
-        processed.append(b)
+    # The pending pages are read and extracted ONCE into a persisted
+    # carrier with a bucket column (doc is the url): a per-bucket filter on
+    # the hash of url cannot be pushed into the parquet scan, so filtering
+    # the input per bucket would read every url and html once per bucket.
+    carrier = (
+        extract_index_carrier(pages.filter(bucket_col("url", n_buckets).isin(todo)))
+        .withColumn("bucket", bucket_col("doc", n_buckets))
+        .persist()
+    )
+    try:
+        for b in todo:
+            t0 = time.time()
+            # All lineage counts ride the single write action as
+            # CollectMetrics nodes (df.observe) over this bucket's carrier
+            # rows, where separate .count() actions would each re-read them.
+            doc_obs = Observation(f"docs_b{b}")
+            post_obs = Observation(f"postings_b{b}")
+            shard = carrier.filter(F.col("bucket") == b).drop("bucket").observe(
+                doc_obs,
+                F.count(F.lit(1)).alias("n_pages"),
+                F.sum((F.col("status") == "ok").cast("long")).alias("n_ok"),
+            )
+            postings = explode_fused_carrier(shard).observe(
+                post_obs, F.count(F.lit(1)).alias("n_postings")
+            )
+            path = os.path.join(out_dir, "postings", f"bucket={b}")
+            postings.write.mode("overwrite").parquet(path)
+            n_pages = doc_obs.get["n_pages"]
+            n_ok = doc_obs.get["n_ok"] or 0
+            n_postings = post_obs.get["n_postings"]
+            wall = time.time() - t0
+            metrics_row = {
+                "unit": b,
+                "n_pages": n_pages,
+                "n_ok": n_ok,
+                "n_error": n_pages - n_ok,
+                "n_postings": n_postings,
+                "wall_sec": round(wall, 3),
+            }
+            spark.createDataFrame(
+                [metrics_row],
+                "unit int, n_pages long, n_ok long, n_error long, n_postings long, wall_sec double",
+            ).write.mode("append").parquet(os.path.join(out_dir, "_metrics"))
+            # atomic-enough commit: marker written only after data + metrics land
+            with open(_marker(out_dir, b), "w") as f:
+                json.dump(metrics_row, f)
+            processed.append(b)
+    finally:
+        carrier.unpersist()
 
     return {
         "processed": processed,
