@@ -12,7 +12,8 @@ Prints ONE JSON line:
 
 Env:
   SPARK_GRAFT_SF_DIR  input dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    cores for local[N] (default 32)
+  SPARK_GRAFT_CPUS    cores for local[N] (default: the cores this process
+                      may run on)
   BENCH_ROWS          override synthetic pages row count
 
 `--scaling` mode runs the same indexing job at local[4] and local[16] on the
@@ -123,7 +124,7 @@ BENCH_QUERIES = (
     "url_dedup",  # canonicalize + hash-groupBy (round 5)
     "ann_cosine_topk",
     "ann_multiprobe_topk",  # written-index path: partition-pruned probe
-    "spelling_suggest",  # persistent trigram table point lookup
+    "spelling_suggest",  # frag point lookup on the once-built fragment table
     "text_quality",
     "tfidf_top_terms",  # map-side tf + hot/cold df join + rank window (round 6)
     "text_bigram_logppl",  # bigram LM, double skew-split join (round 6)
@@ -253,7 +254,7 @@ class _StealSampler:
 
 def bench_once() -> dict:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     sf = _sf_name(sf_dir)
     n_rows = int(os.environ.get("BENCH_ROWS", SF_ROWS.get(sf, 60_000)))
 
@@ -369,7 +370,9 @@ def stage_query_index(n_rows: int) -> str:
     PRE-WRITTEN index, the steady-state serving shape (index build
     amortized), so both core levels read identical bytes."""
     path = f"{QUERY_IDX_DIR}_{n_rows}"
-    marker = os.path.join(path, "_QIDX_COMPLETE")
+    # the marker's name changes with the index layout, so an index staged
+    # in an older layout is rebuilt rather than reopened
+    marker = os.path.join(path, "_QIDX_TERM_BUCKETS_COMPLETE")
     if not os.path.exists(marker):
         from tika_xapian_spark.operators.index import (
             InvertedIndex,

@@ -9,7 +9,10 @@ mode (--noop) to time computation without driver-side result collection.
 
 Usage:
   python bench_extra.py --sf /root/testdata/sf1.0 --queries a,b,c \
-      [--noop] [--trials 2] [--plans plans/r07 --suffix before]
+      [--noop] [--trials 2] [--plans plans/r07 --suffix before] [--cpus N]
+
+--cpus defaults to $SPARK_GRAFT_CPUS, else to the cores this process may
+run on (os.sched_getaffinity), as perfbench does.
 
 Prints one JSON line: {"sf": ..., "queries": {name: sec}, "walls": {...}}.
 """
@@ -33,7 +36,8 @@ def main() -> None:
     ap.add_argument("--plans", default="", help="dir for explain captures")
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS",
+                                               len(os.sched_getaffinity(0)))))
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod

@@ -5,6 +5,10 @@ round-6 verdict item #6 made auditable: name -> {ok, wall_s, err}.
 
 Usage: python scripts/fulldrive.py [--sf /root/testdata/sf0.01]
                                    [--out FULLDRIVE_r07.json] [--queries a,b]
+                                   [--cpus N]
+
+--cpus defaults to $SPARK_GRAFT_CPUS, else to the cores this process may
+run on (os.sched_getaffinity), as perfbench does.
 """
 
 from __future__ import annotations
@@ -28,7 +32,8 @@ def main() -> None:
     ap.add_argument("--out", default="")
     ap.add_argument("--queries", default="")
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS",
+                                               len(os.sched_getaffinity(0)))))
     args = ap.parse_args()
 
     import duckdb

@@ -1,12 +1,12 @@
-"""Index storage layout and scale-behavior checks: bucket-partitioned write/
-read roundtrip, partition pruning on term lookups, carrier equivalence and
+"""Index storage layout and scale-behavior checks: term-bucketed write/read
+roundtrip, partition pruning on term lookups, carrier equivalence and
 key types, and plan shape (pushed filters, broadcast joins)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from tika_xapian_spark.operators import search as S
-from tika_xapian_spark.operators.index import InvertedIndex, bucket_col
+from tika_xapian_spark.operators.index import InvertedIndex
 
 CORPUS = [(i, f"spark join word{i % 7} merge") for i in range(1, 101)]
 
@@ -31,17 +31,15 @@ def test_roundtrip(spark, written_index):
 
 def test_term_lookup_prunes_partitions(spark, written_index):
     base, _ = written_index
+    [bucket] = InvertedIndex.read(spark, base).term_dictionary().buckets(["Zspark"])
     postings = spark.read.parquet(f"{base}/postings")
-    # bucket predicate == partition value -> partition pruning at scan
-    target = postings.filter(F.col("term") == "Zspark").withColumn(
-        "b", bucket_col("term")
-    )
-    bucket = target.select("b").first()["b"]
+    # the dictionary's bucket is the partition value -> pruning at scan
     pruned = postings.filter(
         (F.col("term_bucket") == bucket) & (F.col("term") == "Zspark")
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan or "PartitionFilters" in plan
+    assert "PartitionFilters: [isnotnull(term_bucket" in plan, plan
+    assert f"= {bucket})]" in plan.split("PartitionFilters:")[1], plan
     assert pruned.count() == 100  # every doc contains spark
 
 

@@ -11,6 +11,7 @@ import subprocess
 import sys
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -143,26 +144,11 @@ class TestDictionary:
 
     def test_read_runs_no_aggregation_job(self, spark, written):
         """n_docs from the doc_stats footers, total length from the
-        dictionary, every table's schema from one footer: a reopen's only
-        Spark jobs are the parallel file listings of the two bucketed
-        tables, one task per partition directory."""
-        tracker = spark.sparkContext.statusTracker()
-        spark.sparkContext.setJobGroup("read", "read")
-        try:
-            idx = InvertedIndex.read(spark, written)
-        finally:
-            spark.sparkContext.setJobGroup("after", "after")
-        stages = [
-            tracker.getStageInfo(s)
-            for j in tracker.getJobIdsForGroup("read")
-            for s in tracker.getJobInfo(j).stageIds
-        ]
-        assert all(st.name.startswith("parquet at ") for st in stages), stages
-        dirs = [
-            sum("=" in d for d in os.listdir(os.path.join(written, table)))
-            for table in ("postings", "doc_stats")
-        ]
-        assert sorted(st.numTasks for st in stages) == sorted(dirs), (stages, dirs)
+        dictionary, every table's schema from one footer, and one postings
+        bucket at this size, listed on the driver: a reopen runs no Spark
+        job."""
+        idx, jobs = jobs_of(spark, "read", lambda: InvertedIndex.read(spark, written))
+        assert jobs == 0
         row = spark.read.parquet(os.path.join(written, "doc_stats")).agg(
             F.count(F.lit(1)).alias("n"), F.avg("doclen").alias("avg")
         ).collect()[0]
@@ -187,20 +173,18 @@ class TestDictionary:
         with pytest.raises(Exception):
             InvertedIndex.read(spark, base)
 
-    def test_corrupt_vocab_frag_raises(self, spark, written, tmp_path):
-        """Only a missing vocab_frag is rebuilt lazily; a corrupt one
-        raises instead of being silently replaced."""
+    def test_old_layout_raises(self, spark, written, tmp_path):
+        """An index whose term_stats has no term_bucket column (every index
+        written before the per-index bucket count) raises, naming it."""
         base = str(tmp_path / "idx")
         shutil.copytree(written, base)
-        frag = os.path.join(base, "vocab_frag")
-        for f in os.listdir(frag):
-            if f.endswith(".parquet"):
-                with open(os.path.join(frag, f), "wb") as fh:
-                    fh.write(b"not a parquet file")
-        with pytest.raises(Exception):
+        stats = os.path.join(base, "term_stats")
+        old = pq.read_table(stats).drop_columns(["term_bucket"])
+        shutil.rmtree(stats)
+        os.makedirs(stats)
+        pq.write_table(old, os.path.join(stats, "part-0.parquet"))
+        with pytest.raises(ValueError, match=f"{re.escape(base)}.*rewrite the index"):
             InvertedIndex.read(spark, base)
-        shutil.rmtree(frag)
-        assert InvertedIndex.read(spark, base).vocab_frag is None
 
 
 def keystrokes(ids, n_cycles):
@@ -245,18 +229,59 @@ class TestKeystrokeJobs:
             limit["complete:NOT"] = 5
         assert all(seen[k] <= limit[k] for k in seen), seen
 
-    def test_keystroke_prunes_term_buckets(self, spark, reopened):
-        df = search(reopened, "markdown syn", partial=True)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-        assert filters and all("term_bucket" in f for f in filters), plan
-        terms = re.findall(r"PushedFilters: \[In\(term, \[([^\]]*)\]\)", plan)[0].split(",")
-        buckets = set(re.findall(r"term_bucket#\d+ IN \(([^)]*)\)", plan)[0].split(","))
-        assert 0 < len(buckets) <= len(terms)
-        want = spark.createDataFrame([(t,) for t in terms], "term string").select(
-            I.bucket_col("term").alias("b")
-        )
-        assert buckets == {str(r["b"]) for r in want.collect()}
+    def test_keystroke_prunes_term_buckets(self, reopened):
+        assert_prunes_to_dictionary_buckets(reopened, "markdown syn")
+
+
+def test_multi_bucket_index(spark, pages_path, tmp_path, monkeypatch):
+    """With POSTINGS_PER_BUCKET lowered, a 128-page index writes the rule's
+    bucket count; the dictionary holds bucket_col's bucket of each term;
+    every keystroke scan prunes to its terms' dictionary buckets and ranks
+    the same pages, bit for bit, as the built index."""
+    built = InvertedIndex.from_fused_carrier(
+        extract_index_carrier(spark.read.parquet(pages_path))
+    )
+    try:
+        rows = built.term_dictionary().postings_rows
+        monkeypatch.setattr(I, "POSTINGS_PER_BUCKET", rows // 5)
+        n = min(I.N_BUCKETS, max(1, -(-rows // I.POSTINGS_PER_BUCKET)))
+        assert n > 1
+        base = str(tmp_path / "idx")
+        built.write(base)
+        dirs = {d for d in os.listdir(os.path.join(base, "postings")) if "=" in d}
+        assert dirs == {f"term_bucket={b}" for b in range(n)}
+        idx = InvertedIndex.read(spark, base)
+        d = idx.term_dictionary()
+        want = {
+            r["term"]: r["b"]
+            for r in idx.term_stats.select("term", I.bucket_col("term", n).alias("b")).collect()
+        }
+        assert dict(zip(d.terms, d.bucket.tolist())) == want
+        pruned = 0
+        for kind, q in keystrokes(PAGE_IDS, len(inputs.COMPLETE_FORMS)):
+            df = search(idx, q, partial=True)
+            if "FileScan" in df._jdf.queryExecution().executedPlan().toString():
+                assert_prunes_to_dictionary_buckets(idx, q)
+                pruned += 1
+            got = [tuple(r) for r in df.collect()]
+            assert got == [tuple(r) for r in search(built, q, partial=True).collect()], (kind, q)
+        assert pruned > len(inputs.COMPLETE_FORMS)
+    finally:
+        built.unpersist()
+
+
+def assert_prunes_to_dictionary_buckets(idx, q):
+    """Every postings scan of the keystroke (two for a synonym's df) prunes
+    to exactly the buckets the dictionary holds for its pushed terms."""
+    plan = search(idx, q, partial=True)._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert scans, plan
+    for scan in scans:
+        pushed = re.search(r"PushedFilters: \[.*?(?:In\(term, \[([^\]]*)\]\)|EqualTo\(term,([^)]*)\))", scan)
+        terms = (pushed[1] or pushed[2]).split(",")
+        got = re.search(r"PartitionFilters: \[.*term_bucket#\d+ (?:IN \(([^)]*)\)|= (\d+))", scan)
+        buckets = {int(b) for b in (got[1] or got[2]).split(",")}
+        assert buckets == set(idx.term_dictionary().buckets(terms)), (buckets, terms)
 
 
 def _z(*words):

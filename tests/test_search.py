@@ -2,6 +2,7 @@
 boolean/positional operator algebra on a tiny corpus."""
 
 import math
+import re
 
 import pytest
 
@@ -484,9 +485,10 @@ class TestStemmedProfile:
 
 
 class TestSpellingTable:
-    """The spelling dictionary is persistent (xapian's spelling-B-tree
-    analogue): written by InvertedIndex.write, loaded by read, and the
-    per-query plan is a trigram point lookup — never a full-vocab explode."""
+    """The spelling dictionary (xapian's spelling-B-tree analogue) is
+    built and persisted once per index, built or reopened, and the
+    per-query plan is a fragment point lookup on it — never a full-vocab
+    explode."""
 
     CORPUS = [
         (1, "spark merge window query"),
@@ -494,7 +496,7 @@ class TestSpellingTable:
         (3, "window query value"),
     ]
 
-    def test_written_table_point_lookup(self, spark, tmp_path):
+    def test_reopened_index_suggests_as_built(self, spark, tmp_path):
         docs = spark.createDataFrame(self.CORPUS, "doc_id long, text string")
         idx = InvertedIndex.build_from_body(docs, key="doc_id", stem=True)
         try:
@@ -507,17 +509,17 @@ class TestSpellingTable:
         finally:
             idx.unpersist()
         reopened = InvertedIndex.read(spark, str(tmp_path))
-        assert reopened.vocab_frag is not None  # loaded, not rebuilt
-        df = S.spelling_suggestions(reopened, ["merg", "qery"])
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # vocabulary side: a parquet scan of the written table with the
-        # fragment point lookup pushed down — NOT an explode of term_stats
-        assert "substring(term" not in plan
-        # (the scan path itself can be elided — FileScan locations truncate)
-        assert "FileScan parquet [term" in plan
-        assert "In(frag, " in plan.split("PushedFilters:")[1]
-        got = sorted((r["word"], r["suggestion"]) for r in df.collect())
-        assert got == want
+        try:
+            df = S.spelling_suggestions(reopened, ["merg", "qery"])
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            # vocabulary side: the fragment point lookup on the persisted
+            # fragment table built from the reopened term_stats
+            scan = next(ln for ln in plan.splitlines() if "InMemoryTableScan" in ln)
+            assert re.search(r"frag#\d+ IN \(", scan), plan
+            got = sorted((r["word"], r["suggestion"]) for r in df.collect())
+            assert got == want
+        finally:
+            reopened.unpersist()
 
     def test_transposition_costs_one(self, spark):
         """Xapian's spelling metric is restricted Damerau-Levenshtein

@@ -546,3 +546,16 @@ class TestSemDedupKernelRound7:
             for i in range(6)
         ]
         self._check(spark, vecs)
+
+    def test_int64_overflow_raises(self, spark):
+        """At dim * max|v|^2 >= 2**63 an int64 dot product could wrap: the
+        kernel raises, naming the bound. Spark's own integer norms and
+        centroid distances of these two vectors stay below 2**63."""
+        from tika_xapian_spark.operators import similarity as SIM
+
+        emb = spark.createDataFrame(
+            [(0, [3000.0, 0.0], 0), (1, [2999.0, 1.0], 0)],
+            "vec_id long, embedding array<float>, label int",
+        )
+        with pytest.raises(Exception, match=r"2\*\*63"):
+            SIM.semdedup(emb, k=1).collect()

@@ -56,9 +56,8 @@ def test_index_write_routes_through_store(spark, tmp_path):
         idx.write(str(tmp_path), store=SpyStore(str(tmp_path)))
         assert calls == [
             ("postings", ("term_bucket",)),
-            ("doc_stats", ("doc_bucket",)),
+            ("doc_stats", ()),
             ("term_stats", ()),
-            ("vocab_frag", ()),
         ]
         back = InvertedIndex.read(spark, str(tmp_path))
         assert back.n_docs == 2

@@ -106,10 +106,6 @@ _STEP4 = (
 )
 
 
-def _is_vowel(ch: str) -> bool:
-    return ch in _V
-
-
 def _mark_regions(w: str) -> tuple[int, int]:
     for pre in ("gener", "commun", "arsen"):
         if w.startswith(pre):

@@ -5,7 +5,8 @@ with columnar posting-list DataFrames/tables:
 
   postings(doc, term, wdf, positions, doclen)
                                         — K11 wdf; positions of unstemmed
-                                          terms; doclen denormalized per row
+                                          terms; doclen denormalized per row;
+                                          read() keeps term_bucket too
   doc_stats(doc, doclen)                — doclen = sum of wdf over ALL terms of
                                           the doc (incl. Z-stems), Xapian's
                                           document-length definition
@@ -23,16 +24,13 @@ One postings pipeline, the reference's one TermGenerator loop per note:
   - a document's tokens are colocated in its row, so (term -> wdf,
     positions) and doclen are aggregated there by _doc_postings — the one
     per-token loop — and postings/doc_stats are shuffle-free projections of
-    the carrier (explode_fused_carrier); only term_stats aggregates;
-  - ``term_bucket``/``doc_bucket`` columns (hash-bucketing) are written as
-    partition columns so `term = X` probes prune to 1/B of files — the
-    DataFrame equivalent of Iceberg's `bucket(B, term)` partition transform
-    (no Iceberg runtime is available in this sandbox; the layout is the same).
-    InvertedIndex.postings_of is the one term probe, and it prunes.
+    the carrier (explode_fused_carrier); only term_stats aggregates.
 
-A reopened index runs no aggregation: the term dictionary is read from the
-term_stats files, the document count from the doc_stats footers, and the
-total length is the dictionary's sum of cf (doclen is the sum of wdf).
+A written index is these three tables, ``postings`` term-sorted in
+``term_bucket`` partitions (Iceberg's ``bucket(n, term)`` transform) and
+``term_stats`` holding each term's bucket. Only InvertedIndex.write hashes
+terms: a reopened index prunes a probe (InvertedIndex.postings_of) to its
+dictionary's buckets for the probe's terms, and runs no aggregation.
 """
 
 from __future__ import annotations
@@ -43,7 +41,6 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -58,7 +55,13 @@ from pyspark.sql.types import (
 from ..functions import tokenizer as tok
 from .extract import parse_page
 
-N_BUCKETS = 64  # bucket count for term/doc hash partitioning
+# A written index gets min(N_BUCKETS, ceil(postings rows / POSTINGS_PER_BUCKET))
+# term buckets, at least 1. Seed-7 gen_row pages, 4-core host: at 1,000 pages
+# 1 bucket reopens in 0.14 s (64: 0.8-0.9 s) in 1 file of 66 KB (64: 571 KB),
+# keystrokes equal; at 100k pages (4.07M rows) 64 buckets answer a matched
+# keystroke in 225 ms, 5 unbucketed files in 289 ms.
+N_BUCKETS = 64
+POSTINGS_PER_BUCKET = 65_536
 # Byte cap of the driver-held term dictionary (its Arrow bytes). A
 # 1,000-page gen_row index holds ~3.8k terms in ~0.1 MB, and gen_row adds
 # about one term per page, so the cap holds a few million terms.
@@ -244,7 +247,7 @@ def sql_string(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def bucket_col(col: str | Column, n: int = N_BUCKETS) -> Column:
+def bucket_col(col: str | Column, n: int) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.pmod(F.xxhash64(c), F.lit(n)).cast("int")
 
@@ -289,9 +292,9 @@ def build_vocab_frag(term_stats: DataFrame) -> DataFrame:
     terms exploded to spelling fragments (the H/T/B/M scheme of
     xapian-core's spelling B-tree — see _FRAG_EXPR), keyed by fragment for
     blocked candidate lookup. Z-stems are excluded — the spelling dictionary
-    holds surface forms. Built once per index (spelling_table()) and written
-    by InvertedIndex.write alongside term_stats; rebuilding it per query
-    would be a full-vocabulary explode per keystroke."""
+    holds surface forms. Built and persisted once per index
+    (spelling_table()); rebuilding it per query would be a full-vocabulary
+    explode per keystroke."""
     vocab = term_stats.filter(
         ~F.col("term").startswith("Z") & (F.length("term") >= 2)
     )
@@ -319,13 +322,24 @@ class TermDictionary:
         self.df = table.column("df").to_numpy()
         self.max_wdf = table.column("max_wdf").to_numpy()
         self.total_len = int(table.column("cf").to_numpy().sum())
+        self.postings_rows = int(self.df.sum())  # one row per (doc, term)
+        self.bucket = (  # a written index's postings bucket of each term
+            table.column("term_bucket").to_numpy()
+            if "term_bucket" in table.column_names else None
+        )
+
+    def _find(self, term: str) -> int | None:
+        i = bisect_left(self.terms, term)
+        return i if i < len(self.terms) and self.terms[i] == term else None
 
     def stats(self, term: str) -> tuple[int, int] | None:
         """(df, max_wdf) of ``term``, or None when no document holds it."""
-        i = bisect_left(self.terms, term)
-        if i == len(self.terms) or self.terms[i] != term:
-            return None
-        return int(self.df[i]), int(self.max_wdf[i])
+        i = self._find(term)
+        return None if i is None else (int(self.df[i]), int(self.max_wdf[i]))
+
+    def buckets(self, terms: list[str]) -> list[int]:
+        """The postings buckets of the dictionary terms of ``terms``."""
+        return sorted({int(self.bucket[i]) for t in terms if (i := self._find(t)) is not None})
 
     def expand(self, prefix: str, limit: int) -> list[str]:
         """The terms starting with ``prefix``: the ``limit`` with the highest
@@ -353,8 +367,8 @@ class InvertedIndex:
     term_stats: DataFrame
     n_docs: int
     avg_len: float
-    # persistent spelling table (build_vocab_frag): loaded by read() when
-    # written, else built+persisted once on first spelling query
+    # the spelling table (build_vocab_frag), built and persisted on the
+    # first spelling query
     vocab_frag: DataFrame | None = None
     # the persisted carrier postings/doc_stats derive from (built indexes
     # only): unpersist() must release it, or a rebuild over a rewritten
@@ -363,9 +377,6 @@ class InvertedIndex:
     # the driver-held term dictionary: loaded by read(), else collected
     # from term_stats on first use (term_dictionary())
     dictionary: TermDictionary | None = None
-    # read() only: postings with their term_bucket partition column, which
-    # postings_of() filters so a probe opens only its terms' buckets
-    bucketed_postings: DataFrame | None = None
 
     def spelling_table(self) -> DataFrame:
         if self.vocab_frag is None:
@@ -382,21 +393,18 @@ class InvertedIndex:
         """The postings of ``terms`` — the one term probe every scoring
         operator scans. ``term IN (...)`` reaches the parquet scan as a
         pushed filter (row-group pruning on the term-sorted files); over a
-        written index ``term_bucket IN (...)`` is a partition filter, so the
-        scan lists only the query terms' bucket directories. Each bucket is
-        bucket_col's expression of a literal, which Catalyst folds. The
-        predicate is one SQL string: one call into the JVM, where building
-        it from Columns costs ~5 per term."""
-        lits = [sql_string(t) for t in terms]
-        hit = f"term IN ({', '.join(lits)})"
-        if self.bucketed_postings is None:
+        written index ``term_bucket IN (...)``, with the integer buckets the
+        dictionary holds for the terms, is a partition filter, so the scan
+        lists only those bucket directories. The predicate is one SQL
+        string: one call into the JVM, where building it from Columns
+        costs ~5 per term."""
+        hit = f"term IN ({', '.join(map(sql_string, terms))})"
+        d = self.term_dictionary()
+        if d.bucket is None:  # not read from a written index
             return self.postings.filter(hit)
-        buckets = ", ".join(
-            f"CAST(pmod(xxhash64({t}), {N_BUCKETS}) AS INT)" for t in lits
-        )
-        return self.bucketed_postings.filter(
-            f"term_bucket IN ({buckets}) AND {hit}"
-        ).drop("term_bucket")
+        # no dictionary term: IN (NULL) matches no bucket
+        buckets = ", ".join(map(str, d.buckets(terms))) or "NULL"
+        return self.postings.filter(f"term_bucket IN ({buckets}) AND {hit}").drop("term_bucket")
 
     @classmethod
     def from_postings(
@@ -490,40 +498,37 @@ class InvertedIndex:
 
     @classmethod
     def read(cls, spark, base_dir: str, store=None) -> "InvertedIndex":
-        """Reopen a written index with no aggregation job (its only jobs
-        are the parquet reader's file listing and schema inference): the
-        term dictionary is read from term_stats on the driver, n_docs is
-        the doc_stats row count from its footers, and total length is the
+        """Reopen a written index with no aggregation job: the term
+        dictionary is read from term_stats on the driver, n_docs is the
+        doc_stats row count from its footers, and total length is the
         dictionary's sum of cf (doclen is the sum of wdf), so avg_len equals
-        Spark's avg of doclen for integer sums below 2^53."""
+        Spark's avg of doclen for integer sums below 2^53. Schemas come from
+        one footer each, so the only job is the parallel listing of over 32
+        (parallelPartitionDiscovery.threshold) postings buckets."""
         if store is None:
             from ..sources.tables import ParquetDirStore
 
             store = ParquetDirStore(base_dir)
-        bucketed = store.read_table(spark, "postings")
-        try:  # an index written before the table: built lazily instead
-            vocab_frag = store.read_table(spark, "vocab_frag")
-        except AnalysisException as e:
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
-            vocab_frag = None
-        dictionary = TermDictionary(store.read_arrow(spark, "term_stats"))
+        stats = store.read_arrow(spark, "term_stats")
+        if "term_bucket" not in stats.column_names:  # written before buckets were sized
+            raise ValueError(f"{base_dir}: term_stats has no term_bucket; rewrite the index")
+        dictionary = TermDictionary(stats)
         n_docs = store.row_count(spark, "doc_stats")
         return cls(
-            postings=bucketed.drop("term_bucket"),
-            doc_stats=store.read_table(spark, "doc_stats").drop("doc_bucket"),
-            term_stats=store.read_table(spark, "term_stats"),
+            postings=store.read_table(spark, "postings"),
+            doc_stats=store.read_table(spark, "doc_stats"),
+            term_stats=store.read_table(spark, "term_stats").drop("term_bucket"),
             n_docs=n_docs,
             avg_len=float(dictionary.total_len) / n_docs if n_docs else 0.0,
-            vocab_frag=vocab_frag,
             dictionary=dictionary,
-            bucketed_postings=bucketed,
         )
 
     def write(self, base_dir: str, store=None) -> None:
-        """Write bucket-partitioned index tables (Iceberg-shaped layout: the
-        partition columns are hash buckets, so term/doc point lookups prune
-        to 1/N of files — SURVEY.md §4 predicate-pushdown row).
+        """Write the three index tables: ``postings`` in term buckets (the
+        count from the dictionary's rows, no scan), ``term_stats`` with each
+        term's bucket, and a flat ``doc_stats``. Each term keeps its bucket
+        because a count read back from the listing is too small when a bucket
+        is empty (no directory), and would prune live postings.
 
         ``store`` is the table-format seam (sources/tables.py): default is
         the parquet stand-in rooted at ``base_dir``; pass an IcebergStore on
@@ -532,6 +537,8 @@ class InvertedIndex:
             from ..sources.tables import ParquetDirStore
 
             store = ParquetDirStore(base_dir)
+        rows = self.term_dictionary().postings_rows
+        n = min(N_BUCKETS, max(1, -(-rows // POSTINGS_PER_BUCKET)))
         store.write_table(
             # term-sorted within each bucket file: parquet row-group min/max
             # stats then satisfy the pushed `term IN (...)` probe by skipping
@@ -539,28 +546,16 @@ class InvertedIndex:
             # term-ordered postlist B-tree. Unsorted files leave every row
             # group's term range spanning the whole dictionary, making the
             # pushdown a no-op.
-            self.postings.withColumn("term_bucket", bucket_col("term"))
+            self.postings.withColumn("term_bucket", bucket_col("term", n))
             .repartition("term_bucket")
             .sortWithinPartitions("term", "doc"),
             "postings",
             partition_by=["term_bucket"],
         )
-        store.write_table(
-            self.doc_stats.withColumn("doc_bucket", bucket_col("doc"))
-            .repartition("doc_bucket"),
-            "doc_stats",
-            partition_by=["doc_bucket"],
-        )
+        store.write_table(self.doc_stats, "doc_stats")
         # term-sorted for the same row-group pruning on the dictionary probe
         store.write_table(
-            self.term_stats.sort("term"), "term_stats"
-        )
-        # persistent spelling table: fragment-clustered so the per-query
-        # point lookup (frag IN (...)) prunes row groups, the parquet
-        # analogue of xapian's fragment-keyed spelling B-tree
-        store.write_table(
-            build_vocab_frag(self.term_stats)
-            .repartition(F.col("frag"))
-            .sortWithinPartitions("frag", "term"),
-            "vocab_frag",
+            self.term_stats.withColumn("term_bucket", bucket_col("term", n))
+            .sort("term"),
+            "term_stats",
         )

@@ -22,8 +22,9 @@ reference's get_mset(0, 100) (/root/reference/src/xapian_utils.rs:700).
 
 Scale notes: every scoring operator is one postings scan
 (InvertedIndex.postings_of): a pushed ``term IN`` filter and, over a written
-index, a ``term_bucket IN`` partition filter, so the scan opens only the
-query terms' bucket directories. Query-term statistics come from the
+index, a ``term_bucket IN`` partition filter on the buckets the dictionary
+holds for those terms, so the scan opens only their bucket directories (a
+small index has one). Query-term statistics come from the
 index's driver-held term dictionary, so termweights are plan literals — a
 literal term -> weight map, no join. A SYNONYM of two or more terms is the
 one statistic the dictionary cannot give: its pseudo-term df (docs matching
@@ -645,13 +646,13 @@ def spelling_suggestions(
 
     Returns (word, suggestion, distance, df): the best suggestion per query
     word (distance <= max_distance, most frequent on ties, lexicographic
-    final tie-break). Scales: the PERSISTENT fragment table
-    (index.spelling_table() — written by InvertedIndex.write, xapian's
-    spelling-B-tree analogue) replaces the former per-query full-vocabulary
-    explode; the query words' fragments are known driver-side, so the probe
-    is a pushed frag IN (...) point lookup over the fragment-clustered
-    table. Everything else is JVM-side; the distance UDF only ever sees the
-    fragment-blocked candidates.
+    final tie-break). Scales: the fragment table (index.spelling_table(),
+    xapian's spelling-B-tree analogue, built and persisted once per index,
+    built or reopened) replaces a per-query full-vocabulary explode; the
+    query words' fragments are known driver-side, so the probe is a
+    frag IN (...) point lookup on the cached table. Everything else is
+    JVM-side; the distance UDF only ever sees the fragment-blocked
+    candidates.
     """
     spark = index.postings.sparkSession
 

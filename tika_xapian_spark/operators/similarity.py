@@ -720,8 +720,9 @@ def semdedup(
     #   * dot products: micro ints |x| <= ~1e7, dim-bounded partial sums
     #     stay far below 2^53, so float64 gemm accumulates EXACT integers
     #     (each partial sum exactly representable; addition of exact ints
-    #     below 2^53 is exact in any order). A loud guard falls back to
-    #     int64 matmul if a corpus ever violates the bound.
+    #     below 2^53 is exact in any order). Past 2^53 the kernel takes
+    #     the int64 matmul; at dim * max|v|^2 >= 2^63, where int64 could
+    #     wrap, it raises, naming the bound.
     #   * cosine doubles: computed in the SAME IEEE op order as the old
     #     JVM expression — CAST(dot AS DOUBLE) / (sqrt(na2) * sqrt(nb2))
     #     * 1e6 — so every c is bit-identical to what the engine computed.
@@ -750,8 +751,12 @@ def semdedup(
             )
         V = np.stack(pdf["v"].to_numpy()).astype(np.int64)
         n2 = pdf["n2"].to_numpy(dtype=np.int64)
-        # float64 gemm is exact while partial sums stay below 2^53
-        exact_f8 = V.shape[1] * float(np.abs(V).max()) ** 2 < 2.0**53
+        # |partial sums| <= dim * max|v|^2: exact in float64 below 2^53
+        bound = V.shape[1] * float(np.abs(V).max()) ** 2
+        if bound >= 2.0**63:
+            raise ValueError(
+                f"semdedup: dim * max|v|^2 = {bound:.4g} >= 2**63, int64 dots could wrap")
+        exact_f8 = bound < 2.0**53
         Vf = V.astype(np.float64)
         sq = np.sqrt(n2.astype(np.float64))
         mx = np.empty(n, dtype=np.float64)
