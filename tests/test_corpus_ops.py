@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from tika_xapian_spark.operators.dedup import line_dedup_corpus
 from tika_xapian_spark.operators.sampling import (
-    deterministic_sample,
     group_holdout_split,
     sample_hash_micro,
     stratified_sample,
@@ -79,30 +78,6 @@ class TestSkewSafeCountJoin:
 
 
 class TestDeterministicSampling:
-    def test_membership_invariant_to_partitioning(self, spark):
-        docs = spark.range(500).select(F.col("id").alias("doc_id"))
-        a = deterministic_sample(docs, "doc_id", 0.3, seed="s1")
-        b = deterministic_sample(docs.repartition(17), "doc_id", 0.3, seed="s1")
-        assert sorted(r.doc_id for r in a.collect()) == sorted(
-            r.doc_id for r in b.collect()
-        )
-
-    def test_nested_samples_are_subsets(self, spark):
-        """hash < f2 < f1 => the f2 sample is a subset of the f1 sample —
-        the property that makes train/val splits and ablation subsets
-        consistent across jobs."""
-        docs = spark.range(500).select(F.col("id").alias("doc_id"))
-        big = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.4).collect()}
-        small = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.1).collect()}
-        assert small <= big
-        assert len(small) < len(big)
-
-    def test_seed_changes_membership(self, spark):
-        docs = spark.range(500).select(F.col("id").alias("doc_id"))
-        a = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.3, "s1").collect()}
-        b = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.3, "s2").collect()}
-        assert a != b
-
     def test_stratified_fractions_and_default(self, spark):
         docs = spark.range(2000).select(
             F.col("id").alias("doc_id"),

@@ -1,11 +1,9 @@
-"""File-mode source (S1) + JSON payload projection (T5): a directory of .md
-files runs through the unchanged extract->index pipeline."""
-
-import json
+"""File-mode source (S1): a directory of .md files runs through the
+unchanged extract->index pipeline."""
 
 from pyspark.sql import functions as F
 
-from tika_xapian_spark.operators.extract import extract_pages, to_json_payload
+from tika_xapian_spark.operators.extract import extract_pages
 from tika_xapian_spark.operators.index import InvertedIndex
 from tika_xapian_spark.operators import search as S
 from tika_xapian_spark.sources.files import read_file_glob
@@ -41,15 +39,3 @@ def test_file_glob_to_index(spark, tmp_path):
     finally:
         idx.unpersist()
 
-
-def test_json_payload(spark, tmp_path):
-    d = tmp_path / "one"
-    d.mkdir()
-    (d / "a.md").write_text(MD.format(i=1))
-    docs = extract_pages(read_file_glob(spark, str(d / "*.md")))
-    row = to_json_payload(docs.filter(F.col("status") == "ok")).collect()[0]
-    payload = json.loads(row["payload_json"])
-    assert payload["author"] == "Steve"
-    assert payload["tags"] == ["tika"]
-    assert payload["date"] == "2021-06-22T16:48:16+00:00"
-    assert "zebra" in payload["body"]

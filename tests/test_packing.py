@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import Row
 
 from tika_xapian_spark.operators.packing import pack_sequences
+from tika_xapian_spark.plans.data_queries import TRUNC_LOST_MICRO_SQL
 
 
 def _python_pack(docs, budget):
@@ -84,3 +85,14 @@ def test_packing_invariants(spark):
             assert total == budget
         else:
             assert 0 < total <= budget
+
+
+def test_truncation_lost_micro_exact_past_int64_product(spark):
+    """text_truncation_stats' loss fraction at corpus scale: 1e13 * 1e6
+    overflows a BIGINT product (ANSI raises ARITHMETIC_OVERFLOW); the
+    answer itself is at most 1e6 and must come out exact."""
+    df = spark.createDataFrame(
+        [(10**13, 2 * 10**13)], "tokens_lost long, tokens_total long"
+    )
+    (row,) = df.selectExpr(f"{TRUNC_LOST_MICRO_SQL} AS lost_micro").collect()
+    assert row.lost_micro == 500_000

@@ -98,7 +98,7 @@ class TestRegistrySweep:
             "text_langid", "text_quality", "gopher_repetition",
             "gopher_quality", "text_readability", "c4_quality_filter",
             "quality_classifier_score",
-            "dsir_importance", "cms_heavy_hitters", "kmv_user_distinct",
+            "dsir_importance", "cms_heavy_hitters",
             "text_unigram_logppl", "text_bigram_logppl", "tfidf_top_terms",
             "text_char_entropy", "text_bigram_novelty", "vocab_coverage",
             "cooccurrence_pmi", "url_dedup", "url_host_profile",

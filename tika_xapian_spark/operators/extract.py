@@ -408,23 +408,6 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     return pages.mapInPandas(run, DOCS_SCHEMA)
 
 
-def to_json_payload(docs: DataFrame) -> DataFrame:
-    """T5: the reference serializes the whole TikaDocument to one JSON blob
-    as the Xapian document payload (/root/reference/src/main.rs:136). The
-    columnar docs table makes this redundant, but the projection exists for
-    parity: one deterministic JSON string per doc (sorted keys via the
-    ordered struct)."""
-    return docs.select(
-        "url",
-        F.to_json(
-            F.struct(
-                "filename", "full_path", "author", "date", "tags", "title",
-                "subtitle", "body",
-            )
-        ).alias("payload_json"),
-    )
-
-
 def quarantine(docs: DataFrame) -> DataFrame:
     """The error channel (S3): rows that failed extraction, with reasons."""
     return docs.filter(F.col("status") != "ok").select(

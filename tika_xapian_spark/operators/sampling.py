@@ -40,14 +40,6 @@ def sample_hash_micro(key: Column | str, seed: str = "sample") -> Column:
     )
 
 
-def deterministic_sample(
-    docs: DataFrame, key: str, fraction: float, seed: str = "sample"
-) -> DataFrame:
-    """Keep each row iff hash(key) < fraction — same rows every run,
-    every engine, every partition layout."""
-    return docs.filter(sample_hash_micro(key, seed) < int(round(fraction * MICRO)))
-
-
 def stratified_sample(
     docs: DataFrame,
     key: str,

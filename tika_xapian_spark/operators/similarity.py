@@ -207,22 +207,6 @@ def multiprobe_cosine_topk(
     return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
-def recall_at_k(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 25,
-    **mp_kwargs,
-) -> float:
-    """Measured recall@k of the multi-probe path against brute force —
-    the honesty metric reported alongside the bench numbers."""
-    exact = {r["vec_id"] for r in cosine_topk(embeddings, query_vec, k).collect()}
-    approx = {
-        r["vec_id"]
-        for r in multiprobe_cosine_topk(embeddings, query_vec, k, **mp_kwargs).collect()
-    }
-    return len(exact & approx) / max(len(exact), 1)
-
-
 # --------------------------------------------------------------- IVF-flat ANN
 
 IVF_N_LIST = 16  # coarse-quantizer cells; at 10^9+ vectors use ~sqrt(n)

@@ -1,5 +1,5 @@
 """Training-data-pipeline query registry: dedup, similarity search, text
-analysis, multimodal plumbing — each paired with a DuckDB SQL oracle over the
+analysis, corpus curation — each paired with a DuckDB SQL oracle over the
 same parquet views (documents, embeddings).
 
 Comparison conventions match doc_queries: integerized micro scores, explicit
@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from ..operators import bpe as B
 from ..operators import dedup as D
-from ..operators import multimodal as M
 from ..operators import packing as P
 from ..operators import similarity as SIM
 from ..operators import sketches as SK
@@ -1904,6 +1903,13 @@ ORDER BY b.c DESC, b.w1, b.w2"""
 
 
 TRUNC_MAX_LEN = 48  # context length L for the truncation-loss table
+# lost_micro = floor(tokens_lost * 1e6 / tokens_total) <= 1e6; the product
+# runs in DECIMAL(38,0) so it stays exact where BIGINT would overflow
+# (tokens_lost >= 2**63 / 1e6, ~9.2e12)
+TRUNC_LOST_MICRO_SQL = (
+    "CAST(CAST(tokens_lost AS DECIMAL(38,0)) * 1000000 div tokens_total"
+    " AS BIGINT)"
+)
 
 
 def q_text_truncation_stats(spark, sf_dir):
@@ -1931,9 +1937,7 @@ def q_text_truncation_stats(spark, sf_dir):
         )
         .select(
             "*",
-            F.expr(
-                "CAST(tokens_lost * 1000000 div tokens_total AS BIGINT)"
-            ).alias("lost_micro"),
+            F.expr(TRUNC_LOST_MICRO_SQL).alias("lost_micro"),
         )
         .orderBy("source")
     )
@@ -1957,7 +1961,8 @@ tr_agg AS (
   FROM tr_tok GROUP BY source
 )
 SELECT source, n_docs, n_truncated, tokens_total, tokens_lost,
-       CAST(tokens_lost * 1000000 // tokens_total AS BIGINT) AS lost_micro
+       CAST(tokens_lost::HUGEINT * 1000000 // tokens_total AS BIGINT)
+         AS lost_micro
 FROM tr_agg ORDER BY source"""
 
 
@@ -3271,53 +3276,6 @@ FROM norm n JOIN shape s USING (doc_id)
 ORDER BY n.doc_id"""
 
 
-# -------------------------------------------------------------- multimodal
-
-
-def q_multimodal_meta(spark, sf_dir):
-    docs = _docs(spark, sf_dir).withColumn("payload", F.encode("text", "utf-8"))
-    return (
-        M.binary_metadata(docs, key="doc_id", payload_col="payload")
-        .select(F.col("doc").alias("doc_id"), "n_bytes", "md5_hex", "magic")
-        .transform(lambda d: _ordered_perdoc(d, "doc_id"))
-    )
-
-
-ORACLE_MM_META = """
-SELECT doc_id,
-       octet_length(encode(text))::BIGINT AS n_bytes,
-       md5(text) AS md5_hex,
-       CASE WHEN text LIKE '%PDF%' AND substr(text, 1, 4) = '%PDF' THEN 'pdf'
-            ELSE 'bin' END AS magic
-FROM documents ORDER BY doc_id"""
-
-
-def q_multimodal_fake_features(spark, sf_dir):
-    docs = _docs(spark, sf_dir).withColumn("payload", F.encode("text", "utf-8"))
-    feats = M.extract_features(docs, key="doc_id", payload_col="payload")
-    idx = F.explode(F.sequence(F.lit(0), F.lit(M.FEATURE_DIM - 1))).alias("i")
-    return (
-        feats.select(F.col("doc").alias("doc_id"), "features", idx)
-        .select(
-            "doc_id",
-            "i",
-            F.round(F.element_at("features", F.col("i") + 1) * 255)
-            .cast("int")
-            .alias("byte_val"),
-        )
-        .orderBy("doc_id", "i")
-    )
-
-
-ORACLE_MM_FEATURES = """
-WITH bytes AS (
-  SELECT doc_id, unnest(range(0, 8)) AS i, md5(text) AS h FROM documents
-)
-SELECT doc_id, i::INT AS i,
-       ('0x' || substr(h, i * 2 + 1, 2))::INT AS byte_val
-FROM bytes ORDER BY doc_id, i"""
-
-
 def q_dedup_simhash_pairs(spark, sf_dir):
     """SimHash near-dup pairs: banded 60-bit signatures (4 x 15-bit LSH
     bands) -> candidate equi-join -> bit_count(xor) hamming verify <= 3."""
@@ -3362,99 +3320,6 @@ cand AS (
 SELECT doc_a, doc_b, bit_count(xor(sh_a, sh_b))::INT AS hamming
 FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= 3
 ORDER BY doc_a, doc_b"""
-
-
-def q_multimodal_audio_windows(spark, sf_dir):
-    """Overlapped audio framing plumbing (operators/multimodal.py::
-    window_audio): one payload row -> one row per full 25ms window at
-    10ms hop — OVERLAPPING 1->N Arrow fan-out (hop < window), the speech
-    pipeline's first op. Toy 800 Hz rate so the ~300-byte fixture
-    payloads yield real multi-window fan-out; the real-decode path stays
-    an honest NotImplementedError (no audio lib in this env)."""
-    docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 100).withColumn(
-        "payload", F.encode("text", "utf-8")
-    )
-    return (
-        M.window_audio(docs, key="doc_id", payload_col="payload", sample_rate=800)
-        .select(
-            F.col("doc").alias("doc_id"),
-            "win_idx",
-            "start_ms",
-            "end_ms",
-            "window_md5",
-        )
-        .orderBy("doc_id", "win_idx")
-    )
-
-
-# 800 Hz, 25ms window, 10ms hop -> 20-sample (40-byte) windows, 8-sample
-# (16-byte) hop over the s16le fake; text is ASCII so substr == byte slice
-ORACLE_MM_AUDIO = """
-WITH aw_docs AS (
-  SELECT doc_id, text, length(text) // 2 AS n_samples
-  FROM documents WHERE doc_id < 100
-),
-aw AS (
-  SELECT doc_id, text,
-         unnest(range(0, CAST((n_samples - 20) // 8 + 1 AS BIGINT)))
-           AS win_idx
-  FROM aw_docs WHERE n_samples >= 20
-)
-SELECT doc_id, win_idx,
-       CAST(win_idx * 10 AS BIGINT) AS start_ms,
-       CAST(win_idx * 10 + 25 AS BIGINT) AS end_ms,
-       md5(substr(text, CAST(win_idx * 16 + 1 AS BIGINT), 40)) AS window_md5
-FROM aw ORDER BY doc_id, win_idx"""
-
-
-def q_multimodal_frames(spark, sf_dir):
-    """Frame-sampling plumbing: one payload row -> N sampled-frame rows
-    (every 2nd 64-byte frame), md5-fingerprinted — deterministic fake decode
-    over real mapInPandas fan-out (operators/multimodal.py)."""
-    docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 100).withColumn(
-        "payload", F.encode("text", "utf-8")
-    )
-    return (
-        M.sample_frames(docs, key="doc_id", payload_col="payload")
-        .select(F.col("doc").alias("doc_id"), "frame_idx", "frame_md5", "frame_bytes")
-        .orderBy("doc_id", "frame_idx")
-    )
-
-
-ORACLE_MM_FRAMES = """
-WITH frames AS (
-  SELECT doc_id,
-         unnest(range(0, CAST(ceil(length(text) / 64.0) AS BIGINT))) AS frame_idx,
-         text
-  FROM documents WHERE doc_id < 100
-)
-SELECT doc_id, frame_idx,
-       md5(substr(text, CAST(frame_idx * 64 + 1 AS INT), 64)) AS frame_md5,
-       length(substr(text, CAST(frame_idx * 64 + 1 AS INT), 64))::BIGINT AS frame_bytes
-FROM frames
-WHERE frame_idx % 2 = 0
-ORDER BY doc_id, frame_idx"""
-
-
-def q_multimodal_resize(spark, sf_dir):
-    """Resize plumbing: deterministic fake (md5 of payload || ':8x8') over
-    real mapInPandas batches; the real decoder is the documented stub."""
-    docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 100).withColumn(
-        "payload", F.encode("text", "utf-8")
-    )
-    return (
-        M.resize_image(docs, key="doc_id", payload_col="payload")
-        .select(
-            F.col("doc").alias("doc_id"), "width", "height", "resized_md5", "n_bytes"
-        )
-        .transform(lambda d: _ordered_perdoc(d, "doc_id"))
-    )
-
-
-ORACLE_MM_RESIZE = """
-SELECT doc_id, 8::BIGINT AS width, 8::BIGINT AS height,
-       md5(text || ':8x8') AS resized_md5, 64::BIGINT AS n_bytes
-FROM documents WHERE doc_id < 100 ORDER BY doc_id"""
 
 
 # --------------------------------------------- corpus line dedup + sampling
@@ -4210,41 +4075,6 @@ SELECT token, exact_count, cms_count::BIGINT AS cms_count,
 FROM cms_est ORDER BY exact_count DESC, token LIMIT {top_k}"""
 
 
-def q_kmv_distinct(spark, sf_dir):
-    """KMV / theta-style distinct-user estimation per event type: k smallest
-    hashes per group vs the exact count(DISTINCT) truth column."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return SK.kmv_distinct(ev, group_col="event_type", value_col="user_id")
-
-
-def _kmv_oracle(k: int = SK.KMV_K) -> str:
-    space = SK.KMV_SPACE
-    est = f"""CAST(CASE WHEN a.n_mins < {k} THEN a.n_mins
-         ELSE floor({float(k - 1)} * {space} / a.h_k) END AS BIGINT)"""
-    return f"""
-WITH kmv_h AS (
-  SELECT DISTINCT event_type AS grp,
-         ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
-  FROM events
-),
-kmv_ranked AS (
-  SELECT grp, h, row_number() OVER (PARTITION BY grp ORDER BY h) AS rn
-  FROM kmv_h
-),
-kmv_agg AS (
-  SELECT grp, max(h) AS h_k, count(*) AS n_mins
-  FROM kmv_ranked WHERE rn <= {k} GROUP BY grp
-),
-kmv_exact AS (SELECT grp, count(*) AS n_exact FROM kmv_h GROUP BY grp)
-SELECT a.grp AS event_type,
-       e.n_exact::BIGINT AS n_exact,
-       {est} AS kmv_estimate,
-       CAST(floor(abs({est} - e.n_exact) * 1000000.0 / e.n_exact) AS BIGINT)
-         AS err_micro
-FROM kmv_agg a JOIN kmv_exact e ON e.grp = a.grp
-ORDER BY event_type"""
-
-
 def q_embedding_semdedup(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023): cluster-then-pairwise semantic dedup —
     within-cluster cosine above tau drops the higher id."""
@@ -4920,11 +4750,6 @@ DATA_QUERIES = {
     "token_count": q_token_count,
     "doc_length_quantiles": q_doc_length_quantiles,
     "doc_fingerprint": q_doc_fingerprint,
-    "multimodal_meta": q_multimodal_meta,
-    "multimodal_fake_features": q_multimodal_fake_features,
-    "multimodal_frames": q_multimodal_frames,
-    "multimodal_audio_windows": q_multimodal_audio_windows,
-    "multimodal_resize": q_multimodal_resize,
     "dedup_lines": q_dedup_lines,
     "sample_stratified": q_sample_stratified,
     "text_pii_scrub": q_text_pii_scrub,
@@ -4949,7 +4774,6 @@ DATA_QUERIES = {
     "quality_classifier_score": q_quality_classifier,
     "dsir_importance": q_dsir_importance,
     "cms_heavy_hitters": q_cms_heavy_hitters,
-    "kmv_user_distinct": q_kmv_distinct,
     "embedding_semdedup": q_embedding_semdedup,
     "url_robots_filter": q_url_robots_filter,
     "text_readability": q_text_readability,
@@ -5013,7 +4837,6 @@ def data_oracle_sqls() -> dict[str, str]:
         "quality_classifier_score": _quality_classifier_oracle(),
         "dsir_importance": _dsir_oracle(),
         "cms_heavy_hitters": _cms_oracle(),
-        "kmv_user_distinct": _kmv_oracle(),
         "embedding_semdedup": _semdedup_oracle(),
         "url_robots_filter": ORACLE_URL_ROBOTS,
         "text_readability": ORACLE_READABILITY,
@@ -5046,11 +4869,6 @@ def data_oracle_sqls() -> dict[str, str]:
         "token_count": ORACLE_TOKEN_COUNT,
         "doc_length_quantiles": ORACLE_DOC_LENGTH_QUANTILES,
         "doc_fingerprint": ORACLE_FINGERPRINT,
-        "multimodal_meta": ORACLE_MM_META,
-        "multimodal_fake_features": ORACLE_MM_FEATURES,
-        "multimodal_frames": ORACLE_MM_FRAMES,
-        "multimodal_audio_windows": ORACLE_MM_AUDIO,
-        "multimodal_resize": ORACLE_MM_RESIZE,
         "dedup_lines": ORACLE_DEDUP_LINES,
         "sample_stratified": _sample_oracle(),
         "text_pii_scrub": ORACLE_PII_SCRUB,
