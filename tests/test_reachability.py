@@ -29,6 +29,7 @@ TEST_REFERENCES = {
     "extract_pages": "extract: the unfused extract step the fused carrier must equal",
     "quarantine": "extract: the error channel of extract_pages' rows",
     "snippet_shapes": "query_compiler: check_query's snippet decomposition",
+    "kmv_distinct": "sketches: the KMV distinct-count sketch, its invariants pinned in test_sketches",
 }
 
 

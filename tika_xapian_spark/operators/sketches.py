@@ -1,26 +1,33 @@
-"""Streaming-style sketch operator: count-min sketch (heavy hitters).
+"""Streaming-style sketch operators: count-min sketch (heavy hitters) and
+KMV / theta-style distinct-count estimation.
 
-The sketch is computed with deterministic md5-derived hash functions so the
-DuckDB oracle reproduces it bit-for-bit — every compared value is an exact
-integer.
+Both sketches are computed with deterministic md5-derived hash functions so
+the DuckDB oracle reproduces them bit-for-bit — every compared value is an
+exact integer (the KMV estimate's one double division is of exact integers,
+identically rounded by both engines).
 
-Why a sketch at 10^12 rows: an exact token-frequency table forces a full
-shuffle of the key space; the sketch is a CONSTANT-size summary (d*w
-counters) built with map-side partial aggregation, which is the only shape
-that survives a corpus whose key cardinality itself doesn't fit an
-executor. The exact column rides along here purely as the oracle's truth
-reference — at scale you would keep only the sketch side.
+Why sketches at 10^12 rows: an exact token-frequency table or a
+count(DISTINCT) forces a full shuffle of the key space; the sketch is a
+CONSTANT-size summary (d*w counters / k hashes per group) built with
+map-side partial aggregation, which is the only shape that survives a
+corpus whose key cardinality itself doesn't fit an executor. The exact
+columns ride along here purely as the oracle's truth reference — at scale
+you would keep only the sketch side.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from .textstats import doc_term_tf, hash60_sql
 
 CMS_DEPTH = 3
 CMS_WIDTH = 32
+KMV_K = 16
+# hash space: 15 hex chars = 60 bits; exactly representable as a double
+KMV_SPACE = float(16**15)
 
 
 # one shared definition with the classifier/DSIR feature hash — the DuckDB
@@ -79,3 +86,49 @@ def cms_heavy_hitters(
         .limit(top_k)
     )
 
+
+def kmv_distinct(
+    df: DataFrame, group_col: str, value_col: str, k: int = KMV_K
+) -> DataFrame:
+    """(group, n_exact, kmv_estimate, err_micro): distinct-count estimation
+    per group via the k-minimum-values sketch (Bar-Yossef et al. 2002; the
+    theta-sketch family): hash every value into a 60-bit space, keep the k
+    smallest DISTINCT hashes, estimate ndv as (k-1) * SPACE / kth_min.
+    Groups with fewer than k distinct values report exactly.
+
+    Scale shape: the (group, hash) dedup is one shuffle whose output is
+    bounded by the true ndv; the k-th minimum comes from a rank window over
+    that deduped table (per-group rows = ndv(group)). The exact
+    count(DISTINCT) column is the oracle truth reference — in production
+    only the sketch side runs, and a k-mins sketch merges associatively
+    across partitions/days, which is the point: a 10^12-row stream folds to
+    k longs per group."""
+    hashed = df.selectExpr(
+        f"{group_col} AS grp",
+        f"{_hash60(f'cast({value_col} as string)')} AS h",
+    )
+    dedup = hashed.distinct()
+    w = Window.partitionBy("grp").orderBy("h")
+    ranked = dedup.select("grp", "h", F.row_number().over(w).alias("rn"))
+    agg = ranked.filter(F.col("rn") <= k).groupBy("grp").agg(
+        F.max(F.col("h")).alias("h_k"), F.count(F.lit(1)).alias("n_mins")
+    )
+    exact = dedup.groupBy("grp").agg(F.count(F.lit(1)).alias("n_exact"))
+    est = F.when(F.col("n_mins") < k, F.col("n_mins").cast("double")).otherwise(
+        F.floor(F.lit(float(k - 1)) * F.lit(KMV_SPACE) / F.col("h_k"))
+    )
+    return (
+        agg.join(exact, "grp")
+        .select(
+            F.col("grp").alias(group_col),
+            F.col("n_exact").cast("long").alias("n_exact"),
+            est.cast("long").alias("kmv_estimate"),
+            F.floor(
+                F.abs(est.cast("long") - F.col("n_exact")) * 1_000_000.0
+                / F.col("n_exact")
+            )
+            .cast("long")
+            .alias("err_micro"),
+        )
+        .orderBy(group_col)
+    )
