@@ -88,3 +88,31 @@ def test_build_from_body_keeps_long_doc_key(written_index):
     _, idx = written_index
     assert idx.postings.schema["doc"].dataType.typeName() == "long"
     assert idx.doc_stats.schema["doc"].dataType.typeName() == "long"
+
+
+def test_write_lays_out_three_tables(spark, tmp_path):
+    # postings partitioned by term_bucket, flat doc_stats and term_stats
+    # (each term's bucket a column); a reopen reads n_docs back
+    import os
+
+    docs = spark.createDataFrame(
+        [(1, "spark join"), (2, "merge join")], "doc_id long, text string"
+    )
+    idx = InvertedIndex.build_from_body(docs, key="doc_id", stem=False)
+    try:
+        idx.write(str(tmp_path))
+    finally:
+        idx.unpersist()
+    assert sorted(os.listdir(tmp_path)) == ["doc_stats", "postings", "term_stats"]
+    buckets = [
+        d for d in os.listdir(tmp_path / "postings") if not d.startswith(("_", "."))
+    ]
+    assert buckets == ["term_bucket=0"]
+    for flat in ("doc_stats", "term_stats"):
+        assert all(
+            not os.path.isdir(tmp_path / flat / d) for d in os.listdir(tmp_path / flat)
+        )
+    assert "term_bucket" in spark.read.parquet(str(tmp_path / "term_stats")).columns
+    back = InvertedIndex.read(spark, str(tmp_path))
+    assert back.n_docs == 2
+    assert {r["term"] for r in back.term_stats.collect()} == {"spark", "join", "merge"}

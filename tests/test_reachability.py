@@ -24,7 +24,6 @@ TEST_REFERENCES = {
     "format_postings": "tokenizer: renders the api_termgen.cc golden format",
     "_dup_run_stats": "textstats: assembles the _run_stat_exprs SQL the property test checks",
     "read_file_glob": "files: the reference's file-mode source (src/util.rs:5-35)",
-    "read_metrics": "resume: reads the per-bucket _metrics lineage table",
     "op_and": "search: the join-algebra reference for boolean AND",
     "extract_pages": "extract: the unfused extract step the fused carrier must equal",
     "quarantine": "extract: the error channel of extract_pages' rows",

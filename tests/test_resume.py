@@ -1,7 +1,9 @@
 """T-resume: kill/restart mid-index — completed buckets are skipped and the
 final postings equal a clean run (SURVEY.md §5.2)."""
 
+import json
 import os
+import re
 import shutil
 
 import pytest
@@ -52,15 +54,21 @@ def test_resume_skips_completed_and_matches_clean(spark, outdirs):
     assert summary["processed"] == list(range(3, N_BUCKETS))
 
     assert _postings_set(spark, partial_dir) == _postings_set(spark, clean_dir)
+    # one lineage record per bucket, the redone buckets' included: the
+    # markers are the only lineage store and count each page once
+    assert sorted(os.listdir(partial_dir)) == ["_checkpoints", "postings"]
+    markers = R.read_markers(partial_dir)
+    assert sorted(markers) == list(range(N_BUCKETS))
+    assert sum(m["n_pages"] for m in markers.values()) == N
 
 
 def test_metrics_lineage(spark, tmp_path):
     out = str(tmp_path / "m")
     pages = synth_pages(spark, N)
     R.index_resumable(spark, pages, out, 4)
-    m = R.read_metrics(spark, out)
-    rows = {r["unit"]: r for r in m.collect()}
+    rows = R.read_markers(out)
     assert set(rows) == {0, 1, 2, 3}
+    assert all(r["unit"] == b and r["n_buckets"] == 4 for b, r in rows.items())
     assert sum(r["n_pages"] for r in rows.values()) == N
     # every 8th synthetic page is the error case
     assert sum(r["n_error"] for r in rows.values()) == N // 8
@@ -102,17 +110,45 @@ def test_new_pages_arrive_through_upsert(spark, tmp_path):
     assert _postings_set(spark, out) == _postings_set(spark, clean)
 
 
-def test_resume_runs_two_jobs_per_bucket(spark, tmp_path):
+def test_resume_runs_one_job_per_bucket(spark, tmp_path):
     # Lineage counts ride the single write action as CollectMetrics
-    # (df.observe): per bucket exactly 2 jobs run — the postings write and
-    # the tiny metrics-row write. The round-1 implementation ran 5 (extract
-    # re-executed by docs.count(), ok.count(), and an output re-read).
+    # (df.observe) and land in the bucket's marker file: per bucket exactly
+    # 1 job runs, the postings write. The round-1 implementation ran 5
+    # (extract re-executed by docs.count(), ok.count(), and an output
+    # re-read).
     pages = synth_pages(spark, N)
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None))
     R.index_resumable(spark, pages, str(tmp_path / "jobs"), n_buckets=4)
     n_jobs = len(tracker.getJobIdsForGroup(None)) - before
-    assert n_jobs <= 2 * 4, n_jobs
+    assert n_jobs <= 4, n_jobs
+
+
+def test_restart_with_other_bucket_count_raises(spark, tmp_path):
+    # a restart hashing urls with another count would skip the marked
+    # buckets and index their pages a second time elsewhere
+    out = str(tmp_path / "mismatch")
+    pages = synth_pages(spark, N)
+    R.index_resumable(spark, pages, out, 4)
+    before = _postings_set(spark, out)
+    with pytest.raises(ValueError, match="n_buckets=4"):
+        R.index_resumable(spark, pages, out, 8)
+    assert _postings_set(spark, out) == before
+
+
+def test_marker_without_bucket_count_raises(spark, tmp_path):
+    out = str(tmp_path / "old")
+    pages = synth_pages(spark, 32)
+    R.index_resumable(spark, pages, out, 2)
+    with open(R._marker(out, 0)) as f:
+        row = json.load(f)
+    del row["n_buckets"]
+    with open(R._marker(out, 0), "w") as f:
+        json.dump(row, f)
+    with pytest.raises(ValueError, match=re.escape(out)):
+        R.index_resumable(spark, pages, out, 2)
+    with pytest.raises(ValueError, match=re.escape(out)):
+        R.upsert_postings(spark, out, pages.limit(1))
 
 
 def test_build_reads_each_input_row_once(spark, tmp_path):

@@ -1,6 +1,7 @@
 """sources/scan.py: the footer peek that gates read_spread — nested
-(partitioned) layouts, empty listings, rewritten files — and the plan it
-yields on a layout that already feeds every core."""
+(partitioned) layouts, empty listings, rewritten files — the plan it
+yields on a layout that already feeds every core, and read_table's
+footer-read schema."""
 
 import os
 
@@ -46,3 +47,21 @@ def test_nested_layout_with_enough_row_groups_is_not_spread(spark, tmp_path):
     df = scan.read_spread(spark, base, "doc_id")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
+
+
+def test_read_table_takes_schema_from_one_footer(spark, tmp_path):
+    # the partitioned table round-trips, its partition column discovered
+    # from the directory names, and opening it runs no Spark job
+    base = str(tmp_path / "t")
+    _write_partitioned(base, 4)
+    sc = spark.sparkContext
+    sc.setJobGroup("read_table", "open")
+    try:
+        df = scan.read_table(spark, base)
+        assert sc.statusTracker().getJobIdsForGroup("read_table") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert df.columns == ["doc_id", "text", "k"]
+    assert sorted((r["doc_id"], r["k"]) for r in df.collect()) == [
+        (i, (i // 3) % 2) for i in range(12)
+    ]

@@ -3,6 +3,7 @@ replaces its postings; untouched buckets are not rewritten."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tika_xapian_spark.sources.pages import synth_pages
@@ -89,3 +90,25 @@ def test_read_recovers_mid_swap_crash(spark, tmp_path):
     }
     assert after == before
     assert os.path.isdir(bucket) and not os.path.exists(old_p)
+
+
+def test_upsert_takes_bucket_count_from_markers(spark, tmp_path):
+    # the build's 4 buckets come from its markers: re-indexing a url
+    # replaces its postings in its own bucket, where a count of 16 would
+    # hash it into a new bucket and leave the old postings in place
+    out = str(tmp_path / "four")
+    pages = synth_pages(spark, 64)
+    R.index_resumable(spark, pages, out, 4)
+    victim = pages.filter(F.col("url").contains("fm-basic")).limit(1)
+    url = victim.collect()[0]["url"]
+    rows = R.read_postings(spark, out).filter(F.col("doc") == url).count()
+    assert rows > 0
+
+    summary = R.upsert_postings(spark, out, victim)
+    assert len(summary["rewritten_buckets"]) == 1
+    assert sorted(os.listdir(os.path.join(out, "postings"))) == [
+        f"bucket={b}" for b in range(4)
+    ]
+    assert R.read_postings(spark, out).filter(F.col("doc") == url).count() == rows
+    with pytest.raises(ValueError, match="n_buckets=16"):
+        R.upsert_postings(spark, out, victim, 16)

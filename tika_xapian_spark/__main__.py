@@ -7,8 +7,11 @@ jobs:
     python -m tika_xapian_spark query --index <dir> "<query string>" [-k N]
 
 ``index`` runs the resumable bucketed pipeline (restart-safe); ``query``
-compiles the reference grammar and prints the ranked page, mirroring the
-TUI's final print of selected paths (/root/reference/src/main.rs:105-111).
+reads ``<dir>/postings`` of either layout (the ``index`` command's url
+buckets or ``InvertedIndex.write``'s term buckets), recomputes the doc and
+term stats from it, compiles the reference grammar and prints the ranked
+pages, mirroring the TUI's final print of selected paths
+(/root/reference/src/main.rs:105-111).
 """
 
 from __future__ import annotations
@@ -62,7 +65,7 @@ def main(argv: list[str] | None = None) -> int:
     pq.add_argument(
         "--index", required=True,
         help="index dir; reads <index>/postings as written by the `index` "
-        "command or InvertedIndex.write",
+        "command or InvertedIndex.write, and recomputes the stats from it",
     )
     pq.add_argument("qstr", help="query string (reference grammar)")
     pq.add_argument("-k", type=int, default=100)

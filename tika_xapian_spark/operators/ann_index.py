@@ -21,9 +21,9 @@ one vectors table:
 Quantizer state (planes, centroids, dims) rides in ``_ann_meta.json`` so the
 query side probes with pure driver-side arithmetic — zero scans before the
 pruned candidate read, the same role Xapian's table headers play for its
-B-trees. The parquet-dir layout is the Iceberg stand-in used across this
-repo (sources/tables.py); on a real cluster the partition columns map to
-``bucket(...)`` partition transforms.
+B-trees. The tables are directories of parquet, like the text index; in a
+table format the partition columns would map to ``bucket(...)`` partition
+transforms.
 
 Incremental maintenance (the ``replace_document`` analogue for the vectors
 table — /root/reference/src/main.rs:138-140 re-adds changed docs by id):

@@ -35,12 +35,14 @@ dictionary's buckets for the probe's terms, and runs no aggregation.
 
 from __future__ import annotations
 
+import os
 from bisect import bisect_left
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -497,7 +499,7 @@ class InvertedIndex:
                 pass
 
     @classmethod
-    def read(cls, spark, base_dir: str, store=None) -> "InvertedIndex":
+    def read(cls, spark, base_dir: str) -> "InvertedIndex":
         """Reopen a written index with no aggregation job: the term
         dictionary is read from term_stats on the driver, n_docs is the
         doc_stats row count from its footers, and total length is the
@@ -505,57 +507,52 @@ class InvertedIndex:
         Spark's avg of doclen for integer sums below 2^53. Schemas come from
         one footer each, so the only job is the parallel listing of over 32
         (parallelPartitionDiscovery.threshold) postings buckets."""
-        if store is None:
-            from ..sources.tables import ParquetDirStore
+        from ..sources.scan import parquet_rows, read_table
 
-            store = ParquetDirStore(base_dir)
-        stats = store.read_arrow(spark, "term_stats")
+        stats = pq.read_table(os.path.join(base_dir, "term_stats"))
         if "term_bucket" not in stats.column_names:  # written before buckets were sized
             raise ValueError(f"{base_dir}: term_stats has no term_bucket; rewrite the index")
         dictionary = TermDictionary(stats)
-        n_docs = store.row_count(spark, "doc_stats")
+        n_docs = parquet_rows(os.path.join(base_dir, "doc_stats"))
+        postings, doc_stats, term_stats = (
+            read_table(spark, os.path.join(base_dir, name))
+            for name in ("postings", "doc_stats", "term_stats")
+        )
         return cls(
-            postings=store.read_table(spark, "postings"),
-            doc_stats=store.read_table(spark, "doc_stats"),
-            term_stats=store.read_table(spark, "term_stats").drop("term_bucket"),
+            postings=postings,
+            doc_stats=doc_stats,
+            term_stats=term_stats.drop("term_bucket"),
             n_docs=n_docs,
             avg_len=float(dictionary.total_len) / n_docs if n_docs else 0.0,
             dictionary=dictionary,
         )
 
-    def write(self, base_dir: str, store=None) -> None:
-        """Write the three index tables: ``postings`` in term buckets (the
-        count from the dictionary's rows, no scan), ``term_stats`` with each
-        term's bucket, and a flat ``doc_stats``. Each term keeps its bucket
-        because a count read back from the listing is too small when a bucket
-        is empty (no directory), and would prune live postings.
-
-        ``store`` is the table-format seam (sources/tables.py): default is
-        the parquet stand-in rooted at ``base_dir``; pass an IcebergStore on
-        a real cluster for snapshot-commit writes of the same tables."""
-        if store is None:
-            from ..sources.tables import ParquetDirStore
-
-            store = ParquetDirStore(base_dir)
+    def write(self, base_dir: str) -> None:
+        """Write the three index tables as parquet under ``base_dir``:
+        ``postings`` partitioned by term bucket (the count from the
+        dictionary's rows, no scan), ``term_stats`` with each term's bucket,
+        and a flat ``doc_stats``. Each term keeps its bucket because a count
+        read back from the listing is too small when a bucket is empty (no
+        directory), and would prune live postings."""
         rows = self.term_dictionary().postings_rows
         n = min(N_BUCKETS, max(1, -(-rows // POSTINGS_PER_BUCKET)))
-        store.write_table(
-            # term-sorted within each bucket file: parquet row-group min/max
-            # stats then satisfy the pushed `term IN (...)` probe by skipping
-            # every non-matching group — the columnar analogue of Xapian's
-            # term-ordered postlist B-tree. Unsorted files leave every row
-            # group's term range spanning the whole dictionary, making the
-            # pushdown a no-op.
+        # term-sorted within each bucket file: parquet row-group min/max
+        # stats then satisfy the pushed `term IN (...)` probe by skipping
+        # every non-matching group — the columnar analogue of Xapian's
+        # term-ordered postlist B-tree. Unsorted files leave every row
+        # group's term range spanning the whole dictionary, making the
+        # pushdown a no-op.
+        postings = (
             self.postings.withColumn("term_bucket", bucket_col("term", n))
             .repartition("term_bucket")
-            .sortWithinPartitions("term", "doc"),
-            "postings",
-            partition_by=["term_bucket"],
+            .sortWithinPartitions("term", "doc")
         )
-        store.write_table(self.doc_stats, "doc_stats")
+        postings.write.mode("overwrite").partitionBy("term_bucket").parquet(
+            os.path.join(base_dir, "postings")
+        )
+        self.doc_stats.write.mode("overwrite").parquet(os.path.join(base_dir, "doc_stats"))
         # term-sorted for the same row-group pruning on the dictionary probe
-        store.write_table(
-            self.term_stats.withColumn("term_bucket", bucket_col("term", n))
-            .sort("term"),
-            "term_stats",
+        term_stats = self.term_stats.withColumn("term_bucket", bucket_col("term", n))
+        term_stats.sort("term").write.mode("overwrite").parquet(
+            os.path.join(base_dir, "term_stats")
         )

@@ -69,6 +69,20 @@ def parquet_rows(path: str) -> int:
     return sum(m.num_rows for m in _footers(path))
 
 
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet table at ``path``, its schema read from one footer with
+    pyarrow instead of by Spark's schema-inference job; partition columns
+    are still discovered from the directory names."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    reader = spark.read
+    files = _data_files(path)
+    if files:
+        reader = reader.schema(from_arrow_schema(pq.read_schema(files[0])))
+    return reader.parquet(path)
+
+
 def _table_meta(path: str) -> tuple[int, int]:
     """(total row groups, total rows) from parquet footers. A layout with
     no local parquet files, or one whose footers cannot be read, is

@@ -19,10 +19,14 @@ One write path, restartable at bucket granularity:
       rewritten, swapped in through ``_staging`` so a crash at any step
       leaves a recoverable bucket (``recover_postings``).
 
-Lineage: one metrics row per bucket:
-(unit, n_pages, n_ok, n_error, n_postings, wall_sec) appended to
-``<out>/_metrics`` — enough to audit which input slice produced which output
-files, and to spot skew (a hot host inflates one bucket's wall_sec).
+Lineage: the marker ``<out>/_checkpoints/bucket_NNNNN.done`` is the one
+record per bucket, a JSON row (unit, n_buckets, n_pages, n_ok, n_error,
+n_postings, wall_sec) — enough to audit which input slice produced which
+output files, and to spot skew (a hot host inflates one bucket's wall_sec).
+It is written only after the bucket's postings land, so a bucket redone
+after a crash still has exactly one. ``n_buckets`` is the build's bucket
+count: a url hashed with any other count lands in the wrong bucket, so both
+writers refuse a count that differs from the markers'.
 """
 
 from __future__ import annotations
@@ -45,8 +49,28 @@ def _marker(out_dir: str, bucket: int) -> str:
     return os.path.join(out_dir, "_checkpoints", f"bucket_{bucket:05d}.done")
 
 
-def completed_buckets(out_dir: str, n_buckets: int) -> set[int]:
-    return {b for b in range(n_buckets) if os.path.exists(_marker(out_dir, b))}
+def read_markers(out_dir: str) -> dict[int, dict]:
+    """Bucket -> its lineage row, for every committed bucket of ``out_dir``."""
+    ckpt = os.path.join(out_dir, "_checkpoints")
+    markers = {}
+    for name in sorted(os.listdir(ckpt)) if os.path.isdir(ckpt) else []:
+        if name.startswith("bucket_") and name.endswith(".done"):
+            with open(os.path.join(ckpt, name)) as f:
+                markers[int(name[len("bucket_"):-len(".done")])] = json.load(f)
+    return markers
+
+
+def _bucket_count(out_dir: str, markers: dict[int, dict], n_buckets: int | None):
+    """The build's bucket count as ``markers`` record it (None when there
+    are none), checked against an explicit ``n_buckets``."""
+    counts = {row.get("n_buckets") for row in markers.values()}
+    if None in counts:  # written before markers recorded the count
+        raise ValueError(f"{out_dir}: checkpoint markers have no n_buckets; rebuild the index")
+    if n_buckets is not None and counts - {n_buckets}:
+        raise ValueError(
+            f"{out_dir}: built with n_buckets={max(counts)}, called with n_buckets={n_buckets}"
+        )
+    return max(counts, default=None)
 
 
 def index_resumable(
@@ -56,9 +80,12 @@ def index_resumable(
     n_buckets: int = 16,
 ) -> dict:
     """Extract+index ``pages`` into ``out_dir/postings/bucket=N``, skipping
-    buckets whose _done marker exists. Returns a summary dict."""
+    buckets whose _done marker exists; a count that differs from the
+    markers' raises ValueError. Returns a summary dict."""
+    markers = read_markers(out_dir)
+    _bucket_count(out_dir, markers, n_buckets)
     os.makedirs(os.path.join(out_dir, "_checkpoints"), exist_ok=True)
-    done = completed_buckets(out_dir, n_buckets)
+    done = set(markers)
     processed, skipped = [], sorted(done)
     todo = [b for b in range(n_buckets) if b not in done]
 
@@ -95,21 +122,18 @@ def index_resumable(
             n_ok = doc_obs.get["n_ok"] or 0
             n_postings = post_obs.get["n_postings"]
             wall = time.time() - t0
-            metrics_row = {
+            lineage = {
                 "unit": b,
+                "n_buckets": n_buckets,
                 "n_pages": n_pages,
                 "n_ok": n_ok,
                 "n_error": n_pages - n_ok,
                 "n_postings": n_postings,
                 "wall_sec": round(wall, 3),
             }
-            spark.createDataFrame(
-                [metrics_row],
-                "unit int, n_pages long, n_ok long, n_error long, n_postings long, wall_sec double",
-            ).write.mode("append").parquet(os.path.join(out_dir, "_metrics"))
-            # atomic-enough commit: marker written only after data + metrics land
+            # the commit: the marker is written only after the data lands
             with open(_marker(out_dir, b), "w") as f:
-                json.dump(metrics_row, f)
+                json.dump(lineage, f)
             processed.append(b)
     finally:
         carrier.unpersist()
@@ -125,47 +149,25 @@ def upsert_postings(
     spark: SparkSession,
     out_dir: str,
     new_pages: DataFrame,
-    n_buckets: int = 16,
-    store=None,
+    n_buckets: int | None = None,
 ) -> dict:
     """Re-index semantics: the reference's ``replace_document(Q<id>, doc)``
     upsert (/root/reference/src/main.rs:138-140) over the bucketed postings
-    layout.
+    layout. Only buckets containing changed urls are rewritten:
 
-    With an IcebergStore (sources/tables.py) this is a MERGE of the fresh
-    postings followed by a DELETE of the docs' stale terms — two snapshot
-    commits, ordered to fail safe: a crash between them leaves a doc with a
-    superset of its terms (still findable, replace completes on retry),
-    never a vanished doc. On the parquet stand-in, only buckets containing
-    changed urls are rewritten:
-
-      1. bucket the incoming pages by url hash;
+      1. bucket the incoming pages by url hash, with the build's bucket
+         count (``n_buckets=None`` takes it from the checkpoint markers; an
+         explicit count must equal theirs);
       2. for each touched bucket: drop existing postings of the incoming
          urls (anti-join), union the freshly built postings, overwrite that
          bucket's files; untouched buckets are never read or written.
 
     Same row-level semantics as ``MERGE INTO idx.postings ON t.doc = s.doc``,
-    coarser (bucket-level) commit granularity."""
-    from ..sources.tables import IcebergStore
-
-    if isinstance(store, IcebergStore):
-        # persist: the fused extract (the dominant cost) is referenced by
-        # both statements and would re-execute per reference otherwise
-        fresh = explode_fused_carrier(extract_index_carrier(new_pages)).persist()
-        try:
-            fresh.createOrReplaceTempView("_upsert_src")
-            # 1) upsert all fresh rows (doc stays findable throughout);
-            # 2) drop stale (doc, term) rows the doc no longer contains.
-            # A crash between the commits leaves a superset, never a gap.
-            store.upsert(fresh, "postings", key_cols=["doc", "term"])
-            spark.sql(
-                f"DELETE FROM {store.qualified('postings')} t WHERE t.doc IN "
-                "(SELECT doc FROM _upsert_src) AND NOT EXISTS ("
-                "SELECT 1 FROM _upsert_src s WHERE s.doc = t.doc AND s.term = t.term)"
-            )
-        finally:
-            fresh.unpersist()
-        return {"rewritten_buckets": "iceberg-merge"}
+    at bucket-level commit granularity."""
+    built = _bucket_count(out_dir, read_markers(out_dir), n_buckets)
+    n_buckets = built if n_buckets is None else n_buckets
+    if n_buckets is None:
+        raise ValueError(f"{out_dir}: no checkpoint markers to take n_buckets from")
     with_bucket = new_pages.withColumn("bucket", bucket_col("url", n_buckets))
     touched = [
         r["bucket"] for r in with_bucket.select("bucket").distinct().collect()
@@ -246,6 +248,3 @@ def read_postings(spark: SparkSession, out_dir: str) -> DataFrame:
     recover_postings(out_dir)  # never serve a mid-swap bucket state
     return spark.read.parquet(os.path.join(out_dir, "postings"))
 
-
-def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "_metrics"))
