@@ -9,9 +9,9 @@ def test_perfbench_workloads_imports():
 
 
 def test_bench_queries_are_registered():
-    """bench.py and bench_extra.py time BENCH_QUERIES by name: a name that
-    left the registry would otherwise surface only as a KeyError partway
-    through a bench run."""
+    """bench.py and scripts/drive.py --time time BENCH_QUERIES by name: a
+    name that left the registry would otherwise surface only as a KeyError
+    partway through a bench run."""
     import __spark_entry__ as entrymod
     import bench
 

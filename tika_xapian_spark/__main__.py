@@ -22,6 +22,8 @@ import sys
 
 
 def main(argv: list[str] | None = None) -> int:
+    from .plans.curation import GATES, STAR_ABOVE, curate_docs
+
     p = argparse.ArgumentParser(prog="tika_xapian_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
@@ -40,8 +42,7 @@ def main(argv: list[str] | None = None) -> int:
     pd.add_argument("--out", required=True, help="curated output parquet dir")
     pd.add_argument("--key", default="doc_id")
     pd.add_argument(
-        "--gate", choices=["classic", "gopher", "ccnet", "clf"],
-        default="gopher",
+        "--gate", choices=GATES, default="gopher",
         help="quality gate: 'classic' (length/stopword composite), "
         "'gopher' (Rae et al. rule set + repetition cap), 'ccnet' "
         "(exact dedup + corpus-LM perplexity terciles, no minhash stage), "
@@ -49,15 +50,10 @@ def main(argv: list[str] | None = None) -> int:
     )
     pd.add_argument("--min-stop", type=int, default=1)
     pd.add_argument(
-        "--max-bucket-size", type=int, default=None,
-        help="drop LSH buckets larger than this outright (safety valve; "
-        "default none — jumbo buckets are star-paired instead)",
-    )
-    pd.add_argument(
-        "--star-above", type=int, default=None,
+        "--star-above", type=int, default=STAR_ABOVE,
         help="buckets larger than this emit linear star pairs (member vs "
         "bucket min) instead of the quadratic all-pairs join "
-        "(default: the library's 100)",
+        "(default: %(default)s)",
     )
     pd.add_argument("--master", default=None)
 
@@ -114,17 +110,10 @@ def main(argv: list[str] | None = None) -> int:
                               "info": rep.info}))
             return 0 if rep.ok else 1
         elif args.cmd == "curate":
-            from pyspark.sql import functions as F
-
-            from .plans.curation import STAR_ABOVE, curate_docs
-
             docs = spark.read.parquet(args.docs)
             kept = curate_docs(
                 docs, key=args.key, gate=args.gate, min_stop=args.min_stop,
-                max_bucket_size=args.max_bucket_size,
-                star_above=(
-                    args.star_above if args.star_above is not None else STAR_ABOVE
-                ),
+                star_above=args.star_above,
             )
             kept.write.mode("overwrite").parquet(args.out)
             n_in = docs.count()

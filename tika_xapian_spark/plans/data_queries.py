@@ -18,6 +18,14 @@ from ..operators import similarity as SIM
 from ..operators import sketches as SK
 from ..operators import textstats as T
 from ..sources.scan import DEFAULT_SPREAD_MIN_ROWS, read_spread
+from .curation import (
+    GATES,
+    JACCARD_MIN,
+    QUALITY_MIN,
+    TOP2_MAX,
+    curate_docs,
+    gate_signals,
+)
 from .doc_queries import _docs
 from .workdirs import memo
 
@@ -221,7 +229,8 @@ def q_dedup_minhash_pairs_capped(spark, sf_dir):
     web-scale run uses (operators/dedup.py::lsh_candidates max_bucket_size):
     buckets holding more docs than the cap are skipped before the
     quadratic self-join. Cap=2 here so the exclusion is live at the oracle
-    scales; production default is 1000 (plans/curation.py)."""
+    scales. Curation star-pairs jumbo buckets instead (plans/curation.py):
+    a cap keeps every doc of a skipped cluster."""
     return D.exact_jaccard(
         _minhash_candidates(spark, sf_dir, max_bucket_size=MINHASH_CAP),
         _shingles(spark, sf_dir),
@@ -1191,10 +1200,6 @@ SELECT doc_id, n_words::BIGINT AS n_words,
 FROM gq_feat ORDER BY doc_id"""
 
 
-CURATE_QUALITY_MIN = 450_000
-CURATE_JACCARD_MIN = 500_000
-
-
 DECONTAM_PROBE_DOCS = 3  # doc_id < 3 stands in for "the eval set"
 
 
@@ -1349,7 +1354,7 @@ def q_dedup_components(spark, sf_dir):
     oracle recomputes the identical components with a recursive CTE over
     the same spliced pair SQL."""
     pairs = q_dedup_minhash_pairs(spark, sf_dir).filter(
-        F.col("jaccard_micro") >= CURATE_JACCARD_MIN
+        F.col("jaccard_micro") >= JACCARD_MIN
     )
     comps = D.connected_components(pairs, _docs(spark, sf_dir).select("doc_id"))
     return comps.select(
@@ -1357,7 +1362,7 @@ def q_dedup_components(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-def _components_oracle(j_thresh: int = CURATE_JACCARD_MIN) -> str:
+def _components_oracle(j_thresh: int = JACCARD_MIN) -> str:
     """Spliced from ORACLE_MINHASH_PAIRS (single source of truth) + a
     recursive reachability CTE: reach(v, w) = w reachable from v over the
     symmetric edge set; component = min(w) per v."""
@@ -1409,42 +1414,25 @@ FROM (
 ) GROUP BY cluster_size ORDER BY cluster_size"""
 
 
-def q_curate_corpus(spark, sf_dir):
-    """End-to-end training-data curation — the composition a 100 TB corpus
-    pipeline actually runs: language filter (en) -> quality floor ->
-    exact-dup canonical only -> near-dup removal (minhash-LSH pairs at
-    jaccard >= 0.5, keep the lower doc id). Every stage is an
-    already-oracle-checked operator; the composed oracle is assembled from
-    the same SQL fragments, so the stages cannot drift from their
-    standalone driver queries."""
-    docs = _docs(spark, sf_dir)
-    lang = T.lang_id(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"), "predicted_lang"
-    )
-    qual = T.quality_features(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"), "quality_micro"
-    )
-    exact = D.exact_duplicates(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"), "canonical_id"
-    )
-    pairs = q_dedup_minhash_pairs(spark, sf_dir)
-    nd_drop = (
-        pairs.filter(F.col("jaccard_micro") >= CURATE_JACCARD_MIN)
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-    )
+def _curated(spark, sf_dir, gate: str, *cols: str) -> DataFrame:
+    """The registry face of curation.curate_docs: its kept doc ids with the
+    gate signals a query reports, ordered by doc_id."""
     return (
-        docs.select("doc_id")
-        .join(lang, "doc_id")
-        .filter(F.col("predicted_lang") == "en")
-        .join(qual, "doc_id")
-        .filter(F.col("quality_micro") >= CURATE_QUALITY_MIN)
-        .join(exact, "doc_id")
-        .filter(F.col("doc_id") == F.col("canonical_id"))
-        .join(nd_drop, "doc_id", "left_anti")
-        .select("doc_id", "quality_micro")
+        curate_docs(_docs(spark, sf_dir), gate=gate)
+        .select("doc_id", *cols)
         .orderBy("doc_id")
     )
+
+
+def q_curate_corpus(spark, sf_dir):
+    """End-to-end training-data curation — the composition a 100 TB corpus
+    pipeline actually runs (plans/curation.py, gate 'classic'): language
+    filter (en) -> quality floor -> exact-dup canonical only -> near-dup
+    removal (minhash-LSH pairs at jaccard >= 0.5, keep the lower doc id).
+    Every stage is an already-oracle-checked operator; the composed oracle
+    is assembled from the same SQL fragments, so the stages cannot drift
+    from their standalone driver queries."""
+    return _curated(spark, sf_dir, "classic", "quality_micro")
 
 
 def _split_oracle_parts(sql: str, select_marker: str):
@@ -1461,7 +1449,7 @@ def _split_oracle_parts(sql: str, select_marker: str):
 
 
 def _curate_oracle(
-    q_thresh: int = CURATE_QUALITY_MIN, j_thresh: int = CURATE_JACCARD_MIN
+    q_thresh: int = QUALITY_MIN, j_thresh: int = JACCARD_MIN
 ) -> str:
     """Composed from the published standalone oracle texts (langid, quality,
     minhash pairs) by splitting out their CTE chains — single source of
@@ -1500,43 +1488,15 @@ ORDER BY d.doc_id"""
 
 
 def q_curate_corpus_clf(spark, sf_dir):
-    """Curation v4 — model-based filtering (GPT-3/LLaMA style): language
-    filter (en) -> classifier margin >= 0 (hashed linear stand-in for the
-    trained quality model) -> exact-dup canonical only -> near-dup
-    removal. Single-source-of-truth composition: every stage is an
-    oracle-checked operator and the composed oracle splices the standalone
-    stage oracles' own CTE text."""
-    docs = _docs(spark, sf_dir)
-    lang = T.lang_id(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"), "predicted_lang"
-    )
-    clf = T.quality_classifier(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"), "clf_score", "clf_margin_micro"
-    )
-    exact = D.exact_duplicates(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"), "canonical_id"
-    )
-    pairs = q_dedup_minhash_pairs(spark, sf_dir)
-    nd_drop = (
-        pairs.filter(F.col("jaccard_micro") >= CURATE_JACCARD_MIN)
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-    )
-    return (
-        docs.select("doc_id")
-        .join(lang, "doc_id")
-        .filter(F.col("predicted_lang") == "en")
-        .join(clf, "doc_id")
-        .filter(F.col("clf_score") >= 0)
-        .join(exact, "doc_id")
-        .filter(F.col("doc_id") == F.col("canonical_id"))
-        .join(nd_drop, "doc_id", "left_anti")
-        .select("doc_id", "clf_margin_micro")
-        .orderBy("doc_id")
-    )
+    """Curation v4 — model-based filtering (GPT-3/LLaMA style;
+    plans/curation.py, gate 'clf'): language filter (en) -> classifier
+    margin >= 0 (hashed linear stand-in for the trained quality model) ->
+    exact-dup canonical only -> near-dup removal. The composed oracle
+    splices the standalone stage oracles' own CTE text."""
+    return _curated(spark, sf_dir, "clf", "clf_margin_micro")
 
 
-def _curate_clf_oracle(j_thresh: int = CURATE_JACCARD_MIN) -> str:
+def _curate_clf_oracle(j_thresh: int = JACCARD_MIN) -> str:
     """Spliced from the standalone langid / classifier / minhash oracle
     texts — same machinery as _curate_oracle (single source of truth)."""
     split_parts = _split_oracle_parts
@@ -1614,58 +1574,29 @@ WHERE rank <= {k} ORDER BY stratum, rank"""
 
 
 def q_quality_gate_matrix(spark, sf_dir):
-    """Per-doc agreement matrix of all four curation gates (classic
-    composite, Gopher rules + repetition cap, CCNet perplexity tercile,
-    classifier margin) — the ensemble view a Dolma-style pipeline consults
-    before picking its filter stack: which docs do the gates agree on, and
-    how many gates does each doc pass."""
+    """Per-doc agreement matrix of all four curation gates
+    (plans/curation.py::gate_signals: classic composite, Gopher rules +
+    repetition cap, CCNet perplexity tercile, classifier margin) — the
+    ensemble view a Dolma-style pipeline consults before picking its filter
+    stack: which docs do the gates agree on, and how many gates does each
+    doc pass."""
     docs = _docs(spark, sf_dir)
-    qual = T.quality_features(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"),
-        (F.col("quality_micro") >= CURATE_QUALITY_MIN)
-        .cast("int")
-        .alias("passes_classic"),
-    )
-    gq = T.gopher_quality(docs, key="doc_id", min_stop=1).select(
-        F.col("doc").alias("doc_id"), "passes"
-    )
-    rep = T.gopher_repetition(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"), "top_2gram_char_frac_micro"
-    )
-    ppl = T.ppl_buckets(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"),
-        (F.col("bucket") != "tail").cast("int").alias("passes_ccnet"),
-    )
-    clf = T.quality_classifier(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"),
-        (F.col("clf_score") >= 0).cast("int").alias("passes_clf"),
-    )
-    n = (
-        F.col("passes_classic")
-        + F.col("passes_gopher")
-        + F.col("passes_ccnet")
-        + F.col("passes_clf")
-    )
+    gates = [gate_signals(docs, g) for g in GATES]
+    matrix = gates[0][0]
+    for sig, _ in gates[1:]:
+        matrix = matrix.join(sig, "doc_id")
+    passes = [f"passes_{g}" for g in GATES]
+    n = sum(F.col(c) for c in passes)
     return (
-        qual.join(gq, "doc_id")
-        .join(rep, "doc_id")
-        .withColumn(
-            "passes_gopher",
-            (
-                (F.col("passes") == 1)
-                & (F.col("top_2gram_char_frac_micro") <= CURATE_TOP2_MAX)
-            ).cast("int"),
+        matrix.select(
+            "doc_id",
+            *[keep.cast("int").alias(c) for c, (_, keep) in zip(passes, gates)],
         )
-        .join(ppl, "doc_id")
-        .join(clf, "doc_id")
         .select(
             "doc_id",
-            "passes_classic",
-            "passes_gopher",
-            "passes_ccnet",
-            "passes_clf",
+            *passes,
             n.cast("long").alias("n_gates_passed"),
-            (n == 4).cast("int").alias("all_pass"),
+            (n == len(GATES)).cast("int").alias("all_pass"),
         )
         .transform(lambda d: _ordered_perdoc(d, "doc_id"))
     )
@@ -1687,7 +1618,7 @@ def _gate_matrix_oracle() -> str:
         "((q.quality_micro >= {qmin})::INT + (g.passes = 1 AND"
         " r.top_2gram_char_frac_micro <= {top2})::INT +"
         " (p.bucket <> 'tail')::INT + (c.clf_score >= 0)::INT)"
-    ).format(qmin=CURATE_QUALITY_MIN, top2=CURATE_TOP2_MAX)
+    ).format(qmin=QUALITY_MIN, top2=TOP2_MAX)
     return f"""
 WITH {_TOK_CTE.lstrip()},
 {q_ctes},
@@ -1701,8 +1632,8 @@ pplb AS ({p_sel}),
 {c_ctes},
 clf AS ({c_sel})
 SELECT q.doc_id,
-       (q.quality_micro >= {CURATE_QUALITY_MIN})::INT AS passes_classic,
-       (g.passes = 1 AND r.top_2gram_char_frac_micro <= {CURATE_TOP2_MAX})::INT
+       (q.quality_micro >= {QUALITY_MIN})::INT AS passes_classic,
+       (g.passes = 1 AND r.top_2gram_char_frac_micro <= {TOP2_MAX})::INT
          AS passes_gopher,
        (p.bucket <> 'tail')::INT AS passes_ccnet,
        (c.clf_score >= 0)::INT AS passes_clf,
@@ -1716,53 +1647,17 @@ JOIN clf c ON c.doc_id = q.doc_id
 ORDER BY q.doc_id"""
 
 
-CURATE_TOP2_MAX = 250_000  # drop docs whose top 2-gram covers > 25% of chars
-
-
 def q_curate_corpus_gopher(spark, sf_dir):
-    """Curation v2 — the Gopher-gated composition: language filter (en) ->
-    Gopher quality-rule pass -> repetition cap (top-2-gram char coverage
-    <= 25%) -> exact-dup canonical only -> near-dup removal. Same
-    single-source-of-truth property as curate_corpus: every stage is an
-    oracle-checked operator and the composed oracle splices the standalone
+    """Curation v2 — the Gopher-gated composition (plans/curation.py, gate
+    'gopher'): language filter (en) -> Gopher quality-rule pass ->
+    repetition cap (top-2-gram char coverage <= 25%) -> exact-dup canonical
+    only -> near-dup removal. The composed oracle splices the standalone
     stage oracles' own CTE text."""
-    docs = _docs(spark, sf_dir)
-    lang = T.lang_id(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"), "predicted_lang"
-    )
-    gq = T.gopher_quality(docs, key="doc_id", min_stop=1).select(
-        F.col("doc").alias("doc_id"), "passes"
-    )
-    rep = T.gopher_repetition(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"), "top_2gram_char_frac_micro"
-    )
-    exact = D.exact_duplicates(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"), "canonical_id"
-    )
-    pairs = q_dedup_minhash_pairs(spark, sf_dir)
-    nd_drop = (
-        pairs.filter(F.col("jaccard_micro") >= CURATE_JACCARD_MIN)
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-    )
-    return (
-        docs.select("doc_id")
-        .join(lang, "doc_id")
-        .filter(F.col("predicted_lang") == "en")
-        .join(gq, "doc_id")
-        .filter(F.col("passes") == 1)
-        .join(rep, "doc_id")
-        .filter(F.col("top_2gram_char_frac_micro") <= CURATE_TOP2_MAX)
-        .join(exact, "doc_id")
-        .filter(F.col("doc_id") == F.col("canonical_id"))
-        .join(nd_drop, "doc_id", "left_anti")
-        .select("doc_id", "top_2gram_char_frac_micro")
-        .orderBy("doc_id")
-    )
+    return _curated(spark, sf_dir, "gopher", "top_2gram_char_frac_micro")
 
 
 def _curate_gopher_oracle(
-    top2_max: int = CURATE_TOP2_MAX, j_thresh: int = CURATE_JACCARD_MIN
+    top2_max: int = TOP2_MAX, j_thresh: int = JACCARD_MIN
 ) -> str:
     """Spliced from the standalone langid / gopher_quality /
     gopher_repetition / minhash-pairs oracle texts (same machinery as
@@ -2151,36 +2046,15 @@ ORDER BY d.doc_id"""
 
 
 def q_curate_corpus_ccnet(spark, sf_dir):
-    """Curation v3 — the CCNet composition (Wenzek et al. 2020): language
-    filter (en) -> exact-dup canonical only -> keep the head/middle
-    perplexity terciles of the corpus-own unigram LM (drop the tail,
-    CCNet's quality cut). No minhash stage — CCNet's dedup is exact
-    (paragraph hashes); near-dup removal is the Gopher/classic gates'
-    job. Terciles are computed over the FULL corpus (the standalone
-    ``text_ppl_buckets`` semantics), so every stage remains an
-    independently oracle-checked operator and the composed oracle splices
-    the standalone oracle texts."""
-    docs = _docs(spark, sf_dir)
-    lang = T.lang_id(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"), "predicted_lang"
-    )
-    exact = D.exact_duplicates(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"), "canonical_id"
-    )
-    ppl = T.ppl_buckets(docs, key="doc_id").select(
-        F.col("doc").alias("doc_id"), "logppl_micro", "bucket"
-    )
-    return (
-        docs.select("doc_id")
-        .join(lang, "doc_id")
-        .filter(F.col("predicted_lang") == "en")
-        .join(exact, "doc_id")
-        .filter(F.col("doc_id") == F.col("canonical_id"))
-        .join(ppl, "doc_id")
-        .filter(F.col("bucket") != "tail")
-        .select("doc_id", "logppl_micro", "bucket")
-        .orderBy("doc_id")
-    )
+    """Curation v3 — the CCNet composition (Wenzek et al. 2020;
+    plans/curation.py, gate 'ccnet'): language filter (en) -> exact-dup
+    canonical only -> keep the head/middle perplexity terciles of the
+    corpus-own unigram LM (drop the tail, CCNet's quality cut). No minhash
+    stage — CCNet's dedup is exact (paragraph hashes). Terciles are
+    computed over the FULL corpus (the standalone ``text_ppl_buckets``
+    semantics), so the composed oracle splices the standalone oracle
+    texts."""
+    return _curated(spark, sf_dir, "ccnet", "logppl_micro", "bucket")
 
 
 def _curate_ccnet_oracle() -> str:
